@@ -120,11 +120,8 @@ object Embeddings {
       .select(col(groupCol), posexplode(col(vecCol)).as(Seq("dim", "v")))
       .groupBy(col(groupCol), col("dim").cast("long").as("dim"))
       .agg(count(lit(1)).as("n_vecs"),
-        // fast_decimal ≡ cast (FastDoubleToDecimal); runs once per
-        // (vector, dim) — the kernel of the centroid pass (guide §4)
-        (sum(graft.plans.GraftExpressions.fastDecimal(
-          floor(col("v").cast("double") * lit(Two45)), 38, 0))
-          .cast("double") / lit(Two45) /
+        (sum(floor(col("v").cast("double") * lit(Two45))
+          .cast(DecimalType(38, 0))).cast("double") / lit(Two45) /
           count(lit(1)).cast("double")).as("centroid"))
   }
 }

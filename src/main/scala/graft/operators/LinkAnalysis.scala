@@ -40,12 +40,7 @@ object LinkAnalysis {
     * and the final decimal→double crossing uses the established
     * Spark-cast ≡ DuckDB-VARCHAR-route equivalence. */
   private def psum(c: org.apache.spark.sql.Column) =
-    // fast_decimal ≡ cast (FastDoubleToDecimal proof; floor output is
-    // integral, so the per-row quantization is trivially exact) minus
-    // the Double.toString/BigDecimal churn — this runs once per edge
-    // per power iteration (guide §4)
-    sum(graft.plans.GraftExpressions.fastDecimal(
-        floor(c * lit(Two45)), 38, 0))
+    sum(floor(c * lit(Two45)).cast(DecimalType(38, 0)))
       .cast("double") / lit(Two45)
 
   /** PageRank by power iteration with dangling-mass redistribution:

@@ -26,6 +26,8 @@ if "tpch10x_sec" not in j:
     errs.append("tpch10x_sec missing — the 10x axis did not run (scoped/smoke snapshot?)")
 if len(j.get("queries", {})) < 300:
     errs.append(f'only {len(j.get("queries", {}))} queries — not a full-suite run')
+if j.get("failed", 0) > 0:
+    errs.append(f'failed: {j["failed"]} {j.get("failed_queries", [])} — a bench with failed queries is not committed')
 if errs:
     print(f"[bench-guard] REJECT {path}:")
     for e in errs:
@@ -49,6 +51,15 @@ sbt -batch test 2>&1 | grep -E "Tests:|\*\*\*" | tail -2
 echo "== verify + duckdb compare ($VDIR)"
 SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $VDIR $OUT" 2>&1 \
   | grep -E "\[verify\]" || true
+# Verify exits 0 even with failed queries (its dump is the result); a
+# non-empty or missing _failed.json fails the round here.
+python3 - "$OUT/_failed.json" <<'EOF'
+import json, sys
+failed = json.load(open(sys.argv[1]))
+if failed:
+    print(f"[verify] REJECT: {len(failed)} failed queries: {failed}")
+    sys.exit(1)
+EOF
 python3 tools/compare_local.py "$OUT" "$VDIR" | tail -1
 
 echo "== bench ($BDIR)"
