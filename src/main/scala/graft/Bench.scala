@@ -4,58 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * {"metric","value","unit","queries","sf"}.
-  *
-  * Config mirrors the 100 TB design defaults scaled to local mode:
-  * shuffle partitions = cores (not 200), AQE on (runtime coalescing +
-  * skew-join splitting + dynamic broadcast), UTC session TZ.
+  * {"metric","value","unit","queries","sf"}, on a [[Session.local]]
+  * session of SPARK_GRAFT_CPUS cores.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing is BYTES-based; its default 1 MB minPartitionSize
-      // floor collapses CPU-dense/byte-light shuffles (LSH candidate
-      // verify, token/pair kernels: ~1 MB of ids carrying seconds of
-      // per-row CPU) to ONE task while every other core idles —
-      // measured: doc_minhash_pairs wall 6.2 s -> 1.7 s at a 64 KB
-      // floor, verify stage 1 task -> 13. 64 KB still amortizes task
-      // launch (~ms) thousands-fold; parallelismFirst (default true)
-      // keeps byte-dense stages sized by cluster parallelism as before.
-      // Env-tunable so a cluster deploy can restore a larger floor for
-      // byte-dense-only workloads.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      // operators.Spread kill-switch (A/B + well-split-input deploys)
-      .config("spark.graft.spread",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark's ContextCleaner frees shuffle/broadcast state only when
-      // the DRIVER GCs. A 189-query run on a huge heap may never GC, so
-      // driver bookkeeping grows and late queries inflate up to 50×
-      // (measured: 286 s with -Xmx96g vs 112 s with -Xmx8g, same code).
-      // Periodic GC caps that regardless of heap size — the same setting
-      // a long-lived 100 TB driver needs (default is 30 min).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // Survive long GC pauses / host contention: a starved local-mode
-      // heartbeat (>120 s default) drops the in-process executor
-      // unrecoverably (see Verify for the full rationale).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      // Static conf, must be set before the session exists: the codegen
-      // class cache defaults to 100 entries, and a 320+-query suite
-      // churns far more generated classes than that — each eviction
-      // re-runs Janino on the next execution, which showed up as
-      // first-run-vs-rerun drift concentrated in compile-heavy queries
-      // (round-9 reruns crept 46 -> 63). Size it to hold the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Bench: un-collapse CPU-dense/byte-light shuffle stages that
-      // AQE's 1 MB coalescing floor would serialize onto one core.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // See Bench: keep ContextCleaner alive on large heaps across a
-      // ~190-query run (driver GC may otherwise never fire).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // Long full-GC pauses on a 25x stress dir (or CPU contention from
-      // a concurrent build) can starve the local executor's heartbeat
-      // past the 120 s default; in local mode the dropped executor is
-      // unrecoverable and every later query fails with
-      // RpcEndpointNotFoundException. A stress-verify run is batch work,
-      // not latency-sensitive — wait out pauses instead of declaring
-      // the (in-process!) executor dead.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=<regex>: dump/compare just the matching queries
     // (local iteration aid; the driver never sets it).

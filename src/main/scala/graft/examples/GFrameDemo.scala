@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.api.GFrame
-import org.apache.spark.sql.SparkSession
 
 /** Consumer-style demo of the GFrame façade (also serves as the verify
   * drive for the library surface): port of a typical cudf-classic
@@ -9,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object GFrameDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(4)
     val orders = GFrame.readParquet(spark, s"$dir/orders.parquet")
     val cust = GFrame.readParquet(spark, s"$dir/customer.parquet")
       .rename("c_custkey" -> "o_custkey")

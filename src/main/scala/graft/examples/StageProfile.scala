@@ -1,7 +1,6 @@
 package graft.examples
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level profile of one named SparkEntry query: runs it (warm,
   * after one untimed pass), then prints every stage's executor-run
@@ -16,27 +15,7 @@ object StageProfile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_CONF="k=v;k=v" injects extra session confs for A/Bs
-    val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";")
-      .filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench's session so profiles reflect bench plans
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.graft.spread",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm pass (tables + codegen)
     case class St(id: Int, nm: String, runMs: Long, cpuMs: Long,

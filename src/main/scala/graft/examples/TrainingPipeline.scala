@@ -98,10 +98,7 @@ object TrainingPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(8)
     val (stages, _) = run(spark, dir)
     stages.foreach { case (n, c) => println(f"$n%-22s $c%6d") }
     spark.stop()

@@ -79,13 +79,13 @@ object LinkAnalysis {
     * and partitionings — the oracle-gate mode. The default (`false`)
     * uses plain double sums: at 100 TB edge scale the exact mode pays
     * two decimal(38,0) casts PER EDGE PER ITERATION purely for
-    * replayability. Measured (examples.PageRankModes): exact-vs-prod
-    * drift stays at quantization scale (~2e-11 absolute, both modes
-    * 1e-11-accurate to the true fixpoint), so the ordering of
-    * materially different ranks is identical; only near-ties inside
-    * that band may permute, and rank consumers tie-break by id anyway.
-    * Saving grows with |E|: 6% of wall time at sf0.1, 20% at 10x —
-    * per-iteration numbers in SCALING.md. */
+    * replayability. Measured on the purchase graph (SCALING.md,
+    * "Retired probe mains"): exact-vs-prod drift stays at quantization
+    * scale (~2e-11 absolute, both modes 1e-11-accurate to the true
+    * fixpoint), so the ordering of materially different ranks is
+    * identical; only near-ties inside that band may permute, and rank
+    * consumers tie-break by id anyway. Saving grows with |E|: 6% of
+    * wall time at sf0.1, 20% at 10x. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       damping: Double = 0.85, iters: Int = 10,
       exact: Boolean = false): DataFrame = {

@@ -147,7 +147,7 @@ object Similarity {
     * and the flat path stays bit-reproducible for the oracle gates.
     * At the threshold the two-level descent does S + 2·K/S ≈ 192 dots
     * per row instead of 4096 (21×); measured 4.2× end-to-end at
-    * K = 16384 (examples/HierAssignProbe). */
+    * K = 16384 (SCALING.md, "Known scale caveats"). */
   final val HierKThreshold = 4096
 
   /** Plane-index stride between LSH tables: table t draws planes

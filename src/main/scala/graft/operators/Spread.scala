@@ -34,11 +34,7 @@ object Spread {
     case _ => false
   }
 
-  /** Session kill-switch (`spark.graft.spread=false`) for deploys whose
-    * inputs are always well-split and want zero probe overhead. */
   def spread(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf.getOption("spark.graft.spread")
-      .forall(_.toBoolean)) return df
     if (!scanStage(df.queryExecution.analyzed)) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df

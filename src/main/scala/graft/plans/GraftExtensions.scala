@@ -26,8 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("normalize_nan_zero"),
       info("normalize_nan_zero", "normalize_nan_zero(col)"),
       (es: Seq[Expression]) => NormalizeNaNZero(es.head)))
-    // keep parity with GraftExpressions.register: every SQL-surface
-    // function is available through the extensions path too
     e.injectFunction((FunctionIdentifier("dot_product"),
       info("dot_product", "dot_product(arr_a, arr_b)"),
       (es: Seq[Expression]) => DotProduct(es.head, es(1))))

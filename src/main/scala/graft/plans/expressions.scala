@@ -1049,14 +1049,4 @@ object GraftExpressions {
       halflife: Option[Double] = None): Column =
     column(Ewma(expression(c), ewmAlpha(alpha, com, span, halflife), adjust)
       .toAggregateExpression()).over(over)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("normalize_nan_zero",
-      es => NormalizeNaNZero(es.head), "built-in")
-    reg.createOrReplaceTempFunction("porter_stem",
-      es => PorterStem(es.head), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => DotProduct(es.head, es(1)), "built-in")
-  }
 }

@@ -64,8 +64,7 @@ class ExpressionsSpec extends AnyFunSuite {
       .select(GraftExpressions.dotProduct(array($"x"), array($"y")).as("d"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(ca.toSeq == Seq(Some(2.0), None))
-    // SQL registration
-    GraftExpressions.register(spark)
+    // SQL surface, installed by the session's GraftExtensions
     val viaSql = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
       .selectExpr("dot_product(a, b)").as[Double].head()
     assert(viaSql == 11.0)
@@ -89,8 +88,21 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("TestSpark runs on the Session.local contract") {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sessionState.conf
+    // ANSI is set explicitly (fast_decimal's precondition), not inherited
+    // from Spark's default
+    assert(spark.sparkContext.getConf.getOption(SQLConf.ANSI_ENABLED.key)
+      .contains("true"))
+    assert(conf.ansiEnabled)
+    assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) ==
+      64 * 1024L)
+    assert(conf.sessionLocalTimeZone == "UTC")
+    assert(spark.sql("SELECT porter_stem('running')").as[String].head() == "run")
+  }
+
   test("porter_stem registered as SQL function") {
-    GraftExpressions.register(spark)
     val got = spark.sql("SELECT porter_stem('running') AS s")
       .as[String].head()
     assert(got == "run")

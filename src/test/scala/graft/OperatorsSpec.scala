@@ -404,18 +404,21 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ANSI mode surfaces integer SUM overflow instead of wrapping (SUM_OVERFLOW)") {
     val df = Seq(Long.MaxValue, 1L).toDF("x")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val ansi = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(ansi)
     try {
+      spark.conf.set(ansi, "true")
       val ex = intercept[Exception] { df.agg(sum($"x")).collect() }
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(ex).exists(m =>
         m.toLowerCase.contains("overflow") || m.contains("ARITHMETIC")),
         ex.toString)
-    } finally spark.conf.set("spark.sql.ansi.enabled", "false")
-    // default (non-ANSI) mode: Spark wraps like the reference's plain SUM
-    val wrapped = df.agg(sum($"x")).as[Long].head()
-    assert(wrapped == Long.MinValue)
+      // non-ANSI mode: Spark wraps like the reference's plain SUM
+      spark.conf.set(ansi, "false")
+      val wrapped = df.agg(sum($"x")).as[Long].head()
+      assert(wrapped == Long.MinValue)
+    } finally spark.conf.set(ansi, prior)
   }
 
   test("HLL sketch rollup (union of binary sketches) tracks exact distinct counts") {

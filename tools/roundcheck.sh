@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full local round validation: compile + tests + oracle compare + bench.
 # Usage: tools/roundcheck.sh [sf_dir_for_verify] [sf_dir_for_bench]
-#        tools/roundcheck.sh guard   # only validate the committed bench.json
+#        tools/roundcheck.sh guard   # only the session-builder and bench.json guards
 set -euo pipefail
 cd "$(dirname "$0")/.."
 VDIR=${1:-/root/testdata/sf0.01}
@@ -38,7 +38,25 @@ print(f'[bench-guard] OK {path}: sf={sf}, {len(j["queries"])} queries, '
 EOF
 }
 
+# One way to build a session: graft.Session.local is the only
+# SparkSession.builder call under src/main (comment lines, such as the
+# usage example in the GraftExtensions scaladoc, are not calls).
+session_guard() {
+  local hits
+  hits=$(grep -rnE 'SparkSession[[:space:]]*\.[[:space:]]*builder' src/main \
+      --include='*.scala' \
+    | grep -v '^src/main/scala/graft/Session\.scala:' \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)' || true)
+  if [[ -n "$hits" ]]; then
+    echo "[session-guard] REJECT: SparkSession.builder outside graft/Session.scala:"
+    echo "$hits"
+    return 1
+  fi
+  echo "[session-guard] OK: graft/Session.scala is the only session builder"
+}
+
 if [[ "${1:-}" == "guard" ]]; then
+  session_guard
   bench_guard "${2:-bench.json}"
   exit 0
 fi
@@ -72,5 +90,6 @@ bad = [k for k, v in q.items() if v < 0]
 print(f'total {j[\"value\"]:.1f}s / {len(q)} queries | median '
       f'{statistics.median(q.values()):.2f}s | failed: {bad or \"none\"}')"
 
-echo "== committed bench.json guard"
+echo "== committed-tree guards"
+session_guard
 bench_guard bench.json
