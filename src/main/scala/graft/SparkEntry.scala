@@ -6,8 +6,8 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator from SURVEY.md §2 is exposed as a named
-  * query over the driver testdata, paired (where SQL-expressible) with
-  * DuckDB oracle SQL. Query packs live in graft.queries.*.
+  * query over the test data, paired with DuckDB oracle SQL.
+  * Query packs live in graft.queries.*.
   */
 object SparkEntry {
 
@@ -27,7 +27,8 @@ object SparkEntry {
     packs.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Every query has one (OperatorsSpec checks
+    * the key sets are equal). */
   def oracleSql: Map[String, String] =
     packs.flatMap(_.oracle).toMap
 }

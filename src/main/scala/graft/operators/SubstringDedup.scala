@@ -1,474 +1,50 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact duplicate-substring detection — the reference's flagship dedup
   * op (cpp/include/nvtext/deduplicate.hpp:40,66,95: build_suffix_array /
   * resolve_duplicates / resolve_duplicates_pair).
   *
-  * Spark mapping: the reference builds ONE suffix array over the whole
-  * (≤ 2 GB) concatenated column on a single GPU. The distributed analog
-  * keeps that algorithm — suffix array + Kasai LCP scan, exact — in TWO
-  * passes that together are corpus-complete (STRICTLY stronger than the
-  * reference's global-but-≤2 GB bound):
+  * One algorithm serves every surface: a distributed GLOBAL suffix
+  * ranking, depth-truncated at `minWidth` ([[rankedKeyed]]). Positions
+  * are ranked by prefix doubling over DataFrames; each round reads the
+  * rank `width` positions ahead through a blocked lead ([[leadByPos]])
+  * and re-ranks the distinct key pairs with order-free injective ids
+  * ([[rerankIds]]). After log₂ w − 1 rounds (w the largest power of
+  * two ≤ minWidth) and one final overlapping-halves lead, two positions
+  * share a key iff they start the same minWidth-gram. The four public
+  * functions read that key:
+  *  - [[duplicatedGrams]] / [[duplicatedGramsPair]]: every minWidth-gram
+  *    occurring ≥ 2 times (or in both sources), with exact counts —
+  *    resolve_duplicates / resolve_duplicates_pair projected to grams;
+  *  - [[duplicatedSpans]] / [[contaminatedSpans]]: the maximal runs of
+  *    positions those grams cover, per document.
   *
-  *  1. CHUNK pass: documents are range-partitioned into deterministic
-  *     chunks, each chunk is concatenated and processed partition-
-  *     locally (mapPartitions; no driver involvement). Finds every
-  *     duplicate with ≥2 occurrences inside one chunk — including all
-  *     within-document repeats.
-  *  2. CROSS-CHUNK pass: character-level winnowing fingerprints
-  *     (Schleimer-Wilkerson-Aiken 2003, k-char rolling hash + w-window
-  *     minimum with k = minWidth−1, w = 2, so k+w−1 = minWidth)
-  *     GUARANTEE that any substring of ≥ minWidth chars shared by two
-  *     documents yields a shared fingerprint value at every
-  *     occurrence. Occurrences of REPEATED fingerprint values extract
-  *     their ≤2 overlapping minWidth-char context grams as exact text;
-  *     candidate doc pairs come from posting lists keyed on the GRAM
-  *     (so every candidate pair shares a real duplicated
-  *     minWidth-gram — no hash or hot-fingerprint false pairs reach
-  *     the quadratic stage; the round-13 fix, see crossChunkDups);
-  *     each pair is verified EXACTLY by a two-document suffix array.
-  *
-  * Cost shape at 100 TB: pass 1 is one range shuffle + linear local
-  * work (chunk count corpus-adaptive via autoChunks, so per-task SA
-  * memory stays bounded at any corpus); pass 2 shuffles ~0.67
-  * fingerprints per char, ships gram-sized text only for repeated
-  * fingerprints (∝ duplicated content, ~zero on mostly-unique
-  * corpora), and pair-verifies ∝ the corpus's TRUE duplicate
-  * structure. A gram duplicated across m documents still fans out
-  * C(m,2) in its posting list — the same documented caveat as MinHash
-  * LSH banding (hot clusters ⇒ hot bands there too); SCALING.md's
-  * round-13 section carries the measured time-vs-structure table.
+  * Why this is the one kept (the reference, too, answers both resolve
+  * calls from one suffix array): a gram shared by m documents is ONE
+  * m-row group — O(occurrences), never C(m,2) candidate pairs — and
+  * per-task memory is bounded by a ranking block
+  * ([[BlockCharsKey]]), not by how the corpus is split. SCALING.md
+  * ("Distributed global suffix ranking") has the measured envelope.
   */
 object SubstringDedup {
 
-  /** Separator that terminates every document in the concatenated chunk;
-    * matches crossing it are truncated, so no emitted duplicate spans
-    * documents. */
-  private final val Sep = '\u0000'
-
-  /** Corpus-adaptive chunk count (pass `chunks <= 0` to the resolvers):
-    * one chunk per ~4M characters, floor 4 — the round-11 granularity
-    * lesson (ANY compile-time blocking granularity breaks past its
-    * tuning scale) applied to the suffix-array pass: a FIXED chunk
-    * count means per-chunk SAs grow linearly with the corpus, and the
-    * SA pass needs ~8-16 bytes/char of task memory, so chunk size must
-    * stay executor-bounded at ANY corpus. Output is chunk-count
-    * invariant (spec-asserted), so adaptivity never changes results. */
-  def autoChunks(totalChars: Long, targetChars: Long = 4000000L): Int =
-    math.max(4L, math.min(1000000L,
-      (totalChars + targetChars - 1) / targetChars)).toInt
-
-  /** Resolve an explicit or adaptive (`chunks <= 0`) chunk count; the
-    * adaptive path pays one aggregate over the text column. */
-  private def resolveChunks(df: DataFrame, textCol: String,
-      chunks: Int): Int =
-    if (chunks > 0) chunks
-    else autoChunks(Option(df.agg(sum(length(col(textCol)))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L))
-
-  /** Prefix-doubling suffix array with two stable counting-sort passes
-    * per round — O(n log n) on primitive int arrays (the round-13
-    * rewrite of the original comparison-sort doubling, whose boxed
-    * sortWith paid an O(log n) factor AND heavy per-compare constants;
-    * this is the textbook radix formulation: order by the second key
-    * by walking the previous SA, then a stable counting sort by the
-    * first key). Exact; n is bounded by the chunk's character count
-    * (autoChunks keeps it executor-sized). */
-  private[graft] def suffixArray(s: String): Array[Int] = {
-    val n = s.length
-    if (n == 0) return Array.empty
-    var rank = new Array[Int](n)
-    var i = 0
-    while (i < n) { rank(i) = s.charAt(i).toInt; i += 1 }
-    val sa = new Array[Int](n)
-    val tmp = new Array[Int](n)
-    var newRank = new Array[Int](n)
-    // initial counting sort by char code (16-bit domain)
-    val K0 = 65536
-    val cnt = new Array[Int](math.max(n, K0) + 1)
-    i = 0; while (i < n) { cnt(rank(i) + 1) += 1; i += 1 }
-    i = 0; while (i < K0) { cnt(i + 1) += cnt(i); i += 1 }
-    i = 0; while (i < n) { sa(cnt(rank(i))) = i; cnt(rank(i)) += 1; i += 1 }
-    // densify: the k-loop's counting sort assumes ranks < n, but the
-    // initial ranks are raw 16-bit char codes
-    newRank(sa(0)) = 0
-    var r0 = 0
-    i = 1
-    while (i < n) {
-      if (s.charAt(sa(i)) != s.charAt(sa(i - 1))) r0 += 1
-      newRank(sa(i)) = r0
-      i += 1
-    }
-    val sw0 = rank; rank = newRank; newRank = sw0
-    if (r0 == n - 1) return sa
-    var k = 1
-    while (k < n) {
-      // order by the SECOND key without sorting: suffixes with an
-      // empty second key (i >= n-k) come first, then every sa(j)-k in
-      // current SA order — stable by rank(i+k) by construction
-      var p = 0
-      i = n - k
-      while (i < n) { tmp(p) = i; p += 1; i += 1 }
-      var j = 0
-      while (j < n) { if (sa(j) >= k) { tmp(p) = sa(j) - k; p += 1 }; j += 1 }
-      // stable counting sort by the FIRST key (ranks < n)
-      java.util.Arrays.fill(cnt, 0, n + 1, 0)
-      i = 0; while (i < n) { cnt(rank(i) + 1) += 1; i += 1 }
-      i = 0; while (i < n) { cnt(i + 1) += cnt(i); i += 1 }
-      i = 0
-      while (i < n) {
-        val x = tmp(i); sa(cnt(rank(x))) = x; cnt(rank(x)) += 1; i += 1
-      }
-      // dense re-rank over the new order
-      newRank(sa(0)) = 0
-      var r = 0
-      i = 1
-      while (i < n) {
-        val a = sa(i - 1); val b = sa(i)
-        val ra2 = if (a + k < n) rank(a + k) else -1
-        val rb2 = if (b + k < n) rank(b + k) else -1
-        if (rank(a) != rank(b) || ra2 != rb2) r += 1
-        newRank(b) = r
-        i += 1
-      }
-      val sw = rank; rank = newRank; newRank = sw
-      if (r == n - 1) return sa // all ranks distinct — fully ordered
-      k <<= 1
-    }
-    sa
-  }
-
-  /** Kasai LCP array: lcp(i) = common-prefix length of sa(i-1) and sa(i). */
-  private[graft] def lcpArray(s: String, sa: Array[Int]): Array[Int] = {
-    val n = s.length
-    val rank = new Array[Int](n)
-    var i = 0
-    while (i < n) { rank(sa(i)) = i; i += 1 }
-    val lcp = new Array[Int](n)
-    var h = 0
-    i = 0
-    while (i < n) {
-      if (rank(i) > 0) {
-        val j = sa(rank(i) - 1)
-        while (i + h < n && j + h < n && s.charAt(i + h) == s.charAt(j + h)) h += 1
-        lcp(rank(i)) = h
-        if (h > 0) h -= 1
-      } else h = 0
-      i += 1
-    }
-    lcp
-  }
-
-  /** Duplicated substrings (≥ minWidth chars, ≥ 2 occurrences) within
-    * one concatenated chunk. `srcOf`: optional source tag per text; when
-    * set, only substrings whose adjacent suffix-array occurrences span
-    * DIFFERENT sources are emitted (resolve_duplicates_pair semantics —
-    * any substring present in both corpora has at least one adjacent
-    * cross-source pair in its suffix-array interval). */
-  // Caveat: the separator is U+0000; a document legitimately containing
-  // NUL is treated as multiple documents at the truncation step, so
-  // duplicates spanning a NUL are missed (binary payloads belong in
-  // Multimodal's binary columns, not here).
-  private def chunkDuplicates(texts: Seq[(String, Int)], minWidth: Int,
-      crossSourceOnly: Boolean): Iterator[String] = {
-    if (texts.isEmpty) return Iterator.empty
-    val sb = new java.lang.StringBuilder
-    val bounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (end, src)
-    texts.foreach { case (t, src) =>
-      sb.append(t).append(Sep)
-      bounds += ((sb.length, src))
-    }
-    val s = sb.toString
-    val n = s.length
-    val srcAt = new Array[Int](n)
-    var p = 0
-    bounds.foreach { case (end, src) =>
-      while (p < end) { srcAt(p) = src; p += 1 }
-    }
-    val sa = suffixArray(s)
-    val lcp = lcpArray(s, sa)
-    val out = scala.collection.mutable.LinkedHashSet.empty[String]
-    var i = 1
-    while (i < n) {
-      var l = lcp(i)
-      if (l >= minWidth) {
-        val start = sa(i)
-        // Truncate at the first separator: dups never span documents.
-        val sep = s.indexOf(Sep, start)
-        if (sep >= 0 && sep - start < l) l = sep - start
-        if (l >= minWidth &&
-            (!crossSourceOnly || srcAt(sa(i)) != srcAt(sa(i - 1))))
-          out += s.substring(start, start + l)
-      }
-      i += 1
-    }
-    out.iterator
-  }
-
-  private final val HashBase = 1000003L
-
-  /** Character-level winnowing fingerprints: rolling k-char polynomial
-    * hashes (mod 2^64), sliding w-window minimum via a monotonic deque,
-    * distinct selected values. Any substring of ≥ k+w−1 chars shared by
-    * two strings produces a shared fingerprint VALUE in both (equal
-    * content ⇒ equal rolling hash ⇒ equal window minimum over the
-    * aligned region). O(n) time, ~2/(w+1) selection density. */
-  private[graft] def winnowChars(s: String, k: Int, w: Int): Array[Long] =
-    winnowCharsPos(s, k, w).map(_._2)
-
-  /** [[winnowChars]] with the selected POSITIONS (one entry per
-    * distinct selected position, in order): the cross-chunk pass needs
-    * positions to extract the context grams around each selected
-    * k-gram. The guarantee sharpens positionally: for any duplicated
-    * substring G of exactly k+w−1 chars, the window spanning G's w
-    * k-gram positions lies fully inside G, so its minimum — the same
-    * k-gram CONTENT at every occurrence of G — is selected at every
-    * occurrence; a gram containing the selected k-gram is recoverable
-    * from the position alone. */
-  private[graft] def winnowCharsPos(s: String, k: Int,
-      w: Int): Array[(Int, Long)] = {
-    val n = s.length
-    val g = n - k + 1
-    if (g < w) return Array.empty
-    var pow = 1L
-    var i = 1
-    while (i < k) { pow *= HashBase; i += 1 }
-    val hs = new Array[Long](g)
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * HashBase + s.charAt(i); i += 1 }
-    hs(0) = h
-    i = 1
-    while (i < g) {
-      h = (h - s.charAt(i - 1) * pow) * HashBase + s.charAt(i + k - 1)
-      hs(i) = h
-      i += 1
-    }
-    val out = scala.collection.mutable.LinkedHashSet.empty[Int]
-    val dq = new java.util.ArrayDeque[Int]()
-    i = 0
-    while (i < g) {
-      while (!dq.isEmpty && hs(dq.peekLast()) >= hs(i)) dq.pollLast()
-      dq.addLast(i)
-      if (dq.peekFirst() <= i - w) dq.pollFirst()
-      if (i >= w - 1) out += dq.peekFirst()
-      i += 1
-    }
-    out.iterator.map(p => (p, hs(p))).toArray
-  }
-
-  /** Exact common substrings (≥ minWidth chars) of a candidate pair —
-    * the cross-chunk verify kernel. */
-  private[graft] def commonSubstringsPair(a: String, b: String,
-      minWidth: Int): Iterator[String] =
-    chunkDuplicates(Seq((a, 0), (b, 1)), minWidth, crossSourceOnly = true)
-
-  /** Deterministically chunk the corpus and tag each row with its chunk
-    * id. Output columns: __id, __t, __src, __chunk.
-    *
-    * The chunk id is a DETERMINISTIC hash of the id — NOT
-    * spark_partition_id over a range partition: range boundaries are
-    * re-sampled on every evaluation of the exchange, so two consumers
-    * of this frame (the local pass and the fingerprint pass) could
-    * otherwise disagree on chunk assignment, and the cross-chunk
-    * filter would silently drop a pair the local pass never
-    * co-concatenated. `repartition(chunks, __chunk)` keys the shuffle
-    * on that same deterministic value, so same __chunk ⇒ same
-    * partition in the local pass, which is exactly the invariant the
-    * `a.__chunk =!= b.__chunk` pruning relies on. localCheckpoint
-    * materializes the chunked frame ONCE (eager, MEMORY_AND_DISK) —
-    * the op has four consumers and Spark 4 does not reuse identical
-    * repartition exchanges. */
-  private def chunk(df: DataFrame, idCol: String, textCol: String,
-      srcExpr: org.apache.spark.sql.Column, chunks: Int): DataFrame =
-    df.filter(col(textCol).isNotNull)
-      .select(col(idCol).cast("string").as("__id"),
-        col(textCol).cast("string").as("__t"), srcExpr.cast("int").as("__src"))
-      .withColumn("__chunk", pmod(hash(col("__id")), lit(chunks)))
-      .repartition(chunks, col("__chunk"))
-      .sortWithinPartitions(col("__chunk"), col("__id")) // fixed concat order
-      .transform(Checkpoints.cut)
-
-  /** Pass 2: winnow-fingerprint discovery → EXACT gram-text
-    * verification → candidate doc pairs spanning ≥2 chunks → exact
-    * per-pair suffix-array verify. `crossSourceOnly` adds the
-    * resolve_duplicates_pair constraint (pair must span sources).
-    *
-    * Why the gram-text middle stage (round 13): candidates keyed on
-    * raw fingerprint VALUES degenerate to all-pairs on natural text —
-    * at the original k = ⌈minWidth/2⌉ = 8, common English 8-grams put
-    * most of the corpus in a few posting lists (measured on the 25×
-    * gate corpus: the hottest 8-char fp listed 450 of 750 docs;
-    * candidate pairs saturated C(n,2); the gate rode at ~n^1.5). The
-    * fix has two parts. (a) k = minWidth−1, w = 2 — the guarantee
-    * k+w−1 = minWidth still holds, selection density rises from
-    * 2/(w+1) = 0.22 to 0.67 per char (a constant, still linear), but a
-    * (minWidth−1)-char fingerprint is selective where an 8-char one is
-    * not. (b) occurrences of REPEATED fp values (count ≥ 2 — the only
-    * ones that can pair) extract their ≤2 overlapping minWidth-char
-    * context grams as TEXT, and candidate pairs are generated from
-    * posting lists keyed on the exact gram — so a candidate pair
-    * SHARES a real duplicated minWidth-gram by construction (no hash
-    * or hot-fp false pairs survive to the quadratic stage), and the
-    * pair-verify cost is proportional to the corpus's true duplicate
-    * structure, the same bound the reference's global suffix array
-    * pays. Miss-freedom is the sharpened winnowing guarantee (see
-    * [[winnowCharsPos]]): every occurrence of a duplicated
-    * minWidth-gram selects the same inside-gram k-gram, so the gram
-    * text materializes at every occurrence.
-    *
-    * Remaining documented caveat: a gram duplicated across m documents
-    * yields an m-id posting list → C(m,2) verify pairs (real
-    * duplicates — the same hot-cluster caveat as MinHash banding). */
-  private def crossChunkDups(chunked: DataFrame, minWidth: Int,
-      crossSourceOnly: Boolean): DataFrame = {
-    val spark = chunked.sparkSession
-    import spark.implicits._
-    val k = minWidth - 1
-    val w = 2 // guarantee threshold k+w-1 = minWidth
-    val fps = chunked
-      .select($"__id", $"__chunk", $"__src", $"__t")
-      .as[(String, Int, Int, String)]
-      .flatMap { case (id, ch, src, t) =>
-        winnowCharsPos(t, k, w).map { case (pos, fp) =>
-          (id, ch, src, pos, fp) } }
-      .toDF("__id", "__chunk", "__src", "pos", "fp")
-    // fp values seen in fewer than two DISTINCT (id, chunk, src) units
-    // can never pair — candidate pairs are keyed on those units, so a
-    // fp repeated only within one chunk (self-repetitive doc) must not
-    // count as hot: plain count(*) >= 2 would extract and shuffle its
-    // gram text for nothing. Drop such occurrences before any text
-    // ships (on a mostly-unique corpus this leaves only the true
-    // duplicate structure).
-    val hot = fps.groupBy($"fp")
-      .agg(count_distinct(struct($"__id", $"__chunk", $"__src"))
-        .as("__n"))
-      .filter($"__n" >= 2).select($"fp")
-    val hotOcc = fps.join(hot, "fp")
-      .groupBy($"__id", $"__chunk", $"__src")
-      .agg(collect_list($"pos").as("poss"))
-    // exact context grams: every minWidth-gram containing the selected
-    // k-gram (k = minWidth−1 ⇒ starts pos−1 and pos, clamped)
-    val grams = hotOcc
-      .join(chunked.select($"__id", $"__src", $"__t"), Seq("__id", "__src"))
-      // pin the decode order: the join reorders to (keys, left, right)
-      .select($"__id", $"__chunk", $"__src", $"poss", $"__t")
-      .as[(String, Int, Int, Seq[Int], String)]
-      .flatMap { case (id, ch, src, poss, t) =>
-        val starts = scala.collection.mutable.SortedSet.empty[Int]
-        poss.foreach { p =>
-          var s0 = math.max(0, p - (minWidth - k))
-          val s1 = math.min(p, t.length - minWidth)
-          while (s0 <= s1) { starts += s0; s0 += 1 }
-        }
-        starts.iterator.map(s0 =>
-          (id, ch, src, t.substring(s0, s0 + minWidth)))
-      }
-      .toDF("__id", "__chunk", "__src", "gram")
-    val cand0 = PostingLists.candidatePairs(
-        grams.select(struct($"__id", $"__chunk", $"__src").as("p"), $"gram"),
-        "p", "gram", distinctIds = true)
-      .filter($"a.__chunk" =!= $"b.__chunk") // same-chunk: pass 1 is exact
-    // Join texts back on (id, src), not id alone: in pair mode the same
-    // id may exist in BOTH sources, and an id-only join would attach the
-    // wrong source's text and could emit a same-source match.
-    val cand = (if (crossSourceOnly) cand0.filter($"a.__src" =!= $"b.__src")
-      else cand0)
-      .select($"a.__id".as("ida"), $"a.__src".as("sa"),
-        $"b.__id".as("idb"), $"b.__src".as("sb"))
-      .dropDuplicates("ida", "sa", "idb", "sb")
-    val texts = chunked.select($"__id", $"__src", $"__t")
-    cand
-      .join(texts.select($"__id".as("ida"), $"__src".as("sa"),
-        $"__t".as("ta")), Seq("ida", "sa"))
-      .join(texts.select($"__id".as("idb"), $"__src".as("sb"),
-        $"__t".as("tb")), Seq("idb", "sb"))
-      .select($"ta", $"tb").as[(String, String)]
-      .flatMap { case (a, b) => commonSubstringsPair(a, b, minWidth) }
-      .toDF("dup_text")
-  }
-
-  /** resolve_duplicates (deduplicate.hpp:66): all substrings of at least
-    * `minWidth` characters appearing more than once — CORPUS-complete
-    * via the two-pass design (chunk-exact + winnowing-guaranteed
-    * cross-chunk verify; see the object doc). `chunks` bounds
-    * per-partition memory (suffix array is ~8 bytes/char, mirroring the
-    * reference's 4x temp + 4x output note). Deterministic: chunk
-    * assignment is a range partition on `idCol`. */
-  def resolveDuplicates(df: DataFrame, idCol: String, textCol: String,
-      minWidth: Int, chunks: Int = 0): DataFrame = {
-    require(minWidth > 8, "min_width must be > 8 (deduplicate.hpp:62)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // null text would reach StringBuilder.append as the literal
-    // "null" (fabricated corpus content) — dropped inside chunk()
-    val chunked = chunk(df, idCol, textCol, lit(0),
-      resolveChunks(df, textCol, chunks))
-    val local = chunked.select($"__t").as[String]
-      .mapPartitions(it =>
-        chunkDuplicates(it.map((_, 0)).toSeq, minWidth, crossSourceOnly = false))
-      .toDF("dup_text")
-    local.union(crossChunkDups(chunked, minWidth, crossSourceOnly = false))
-      .distinct()
-  }
-
-  /** [[resolveDuplicatesPair]] over ONE tagged input: `srcCol` (int)
-    * marks each document's corpus; only substrings whose suffix-array
-    * adjacencies span different sources emit. Single scan of the input.
-    * The within-partition sort fixes the concatenation order — without
-    * it the cross-source adjacency test could flip between runs when
-    * equal doc-final suffixes straddle the sources (shuffle-fetch order
-    * is otherwise arbitrary). */
-  def resolveDuplicatesTagged(df: DataFrame, idCol: String, textCol: String,
-      srcCol: String, minWidth: Int, chunks: Int = 0): DataFrame = {
-    require(minWidth > 8, "min_width must be > 8 (deduplicate.hpp:90)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // null text appends as "null"; a null src crashes the primitive
-    // Int decoder mid-job — both are malformed input, dropped up front
-    val chunked = chunk(df.filter(col(srcCol).isNotNull),
-      idCol, textCol, col(srcCol), resolveChunks(df, textCol, chunks))
-    val local = chunked.select($"__t", $"__src").as[(String, Int)]
-      .mapPartitions(it =>
-        chunkDuplicates(it.toSeq, minWidth, crossSourceOnly = true))
-      .toDF("dup_text")
-    local.union(crossChunkDups(chunked, minWidth, crossSourceOnly = true))
-      .distinct()
-  }
-
-  /** resolve_duplicates_pair (deduplicate.hpp:95): substrings of at
-    * least `minWidth` characters appearing in BOTH inputs (e.g.
-    * train-set contamination of an eval set). Both sides are tagged,
-    * co-range-partitioned on id, and scanned in one suffix array per
-    * chunk; only cross-source adjacencies emit. */
-  def resolveDuplicatesPair(df1: DataFrame, df2: DataFrame, idCol: String,
-      textCol: String, minWidth: Int, chunks: Int = 0): DataFrame =
-    resolveDuplicatesTagged(
-      df1.select(col(idCol), col(textCol), lit(0).as("__src"))
-        .union(df2.select(col(idCol), col(textCol), lit(1).as("__src"))),
-      idCol, textCol, "__src", minWidth, chunks)
-
-  /** Distributed GLOBAL suffix ranking, depth-truncated at `minWidth` —
-    * the hot-duplicate-clique remedy (the reference's single-GPU global
-    * suffix array, nvtext/deduplicate.hpp:40 build_suffix_array, pays
-    * O(occurrences) where [[resolveDuplicates]]'s cross-chunk posting
-    * lists pay C(m,2) verify pairs on a gram shared by m documents).
+  /** resolve_duplicates (nvtext/deduplicate.hpp:66) at gram level, at
+    * the reference's global-suffix-array bound (deduplicate.hpp:40):
+    * O(occurrences) on a gram shared by m documents.
     *
     * Output: every duplicated minWidth-gram (each substring of EXACTLY
     * `minWidth` chars occurring at ≥ 2 positions corpus-wide, within-
     * doc repeats included) as `dup_text`, with its occurrence count.
-    * This is the gram CANONICALIZATION of resolve_duplicates output —
-    * the same projection the doc_substring_dups oracle gate uses, and
-    * the two sets coincide (see [[substringDups]]' ⊇/⊆ argument): a
+    * This is resolve_duplicates' output projected to its minWidth-grams
+    * — the projection the doc_substring_dups oracle gate checks: a
     * gram-level consumer (dedup weighting, contamination screens) loses
     * nothing, and no pair of occurrences is ever materialized.
     *
     * Algorithm — prefix doubling over DataFrames (Manber-Myers
-    * formulated as log rounds of distributed re-ranking, the same
-    * doubling the in-memory [[suffixArray]] runs per chunk):
+    * formulated as log rounds of distributed re-ranking):
     * every character position starts ranked by its packed 2-char code
     * (width-2 base case); each round keys positions on
     * (rank[p], rank[p+2^k]) — computed with a per-document `lead`
@@ -512,11 +88,11 @@ object SubstringDedup {
   /** Cross-corpus (pair-mode) global suffix ranking —
     * resolve_duplicates_pair (nvtext/deduplicate.hpp:95) at the same
     * O(occurrences) hot-clique bound as [[duplicatedGrams]]: every
-    * minWidth-gram present in BOTH sources (srcCol ∈ {0, 1}), with the
-    * exact per-source occurrence counts — a contamination screen whose
-    * cost never touches train×eval pair space (the posting-list pair
-    * path's C(n_train·n_eval) hot-gram caveat). One tagged scan; the
-    * source tag rides each position row (doc-constant, 4 bytes) into
+    * minWidth-gram present in BOTH inputs (`df1` is source 0, `df2`
+    * source 1), with the exact per-source occurrence counts — a
+    * contamination screen whose cost never touches train×eval pair
+    * space. One tagged scan; the source tag rides each position row
+    * (doc-constant, 4 bytes) into
     * the final group's two conditional counts. Documents are keyed by
     * (src, id) internally so an id reused across sources can never
     * attach the wrong text. */
@@ -721,8 +297,9 @@ object SubstringDedup {
         (col("span_end") - col("span_start")).as("span_len"))
   }
 
-  /** Conf key: positions per ranking block (UTF-16 units). Default 4 M
-    * (the chunk-SA per-task bound); lower it only in tests. */
+  /** Conf key: positions per ranking block (UTF-16 units), the
+    * per-task memory bound of every ranking round. Default 4 M; lower
+    * it only in tests. */
   val BlockCharsKey = "spark.graft.substring.blockChars"
   val DefaultBlockChars: Int = 1 << 22
 

@@ -1153,26 +1153,11 @@ object TextOps extends QueryPack {
        |WHERE rn = 1 ORDER BY digest""".stripMargin
 
   /** Exact duplicated substrings (resolve_duplicates,
-    * nvtext/deduplicate.hpp:66) — CORPUS-complete since round 7 (chunk-
-    * local suffix-array pass + winnowing cross-chunk candidate/verify
-    * pass, see SubstringDedup's object doc), and FULLY oracle-gated
-    * since round 8 via a lossless canonicalization: the resolved set is
-    * projected to the set of all minWidth-char grams of the emitted
-    * duplicates, which equals EXACTLY the brute-force set of
-    * minWidth-grams occurring ≥ 2 times in the corpus.
-    *
-    * Why the two sets coincide (both directions):
-    *  - ⊇ every emitted dup_text is a common prefix of ≥ 2 distinct
-    *    corpus suffixes, so each of its minWidth-grams occurs at ≥ 2
-    *    distinct positions;
-    *  - ⊆ any minWidth-gram with ≥ 2 occurrences spans a suffix-array
-    *    interval of ≥ 2 suffixes; some adjacent pair in that interval
-    *    has lcp ≥ minWidth (co-chunked case) or winnowing guarantees a
-    *    shared fingerprint → a verified pair (cross-chunk case), so the
-    *    gram is a prefix of some emitted dup_text.
-    * The DuckDB oracle computes the brute-force side directly (corpus
-    * is small at the gate's SF); the SA/winnowing internals stay
-    * covered by DedupSpec's planted cross-doc AND cross-chunk tests. */
+    * nvtext/deduplicate.hpp:66) at gram level: every 15-char gram
+    * occurring at ≥ 2 positions of the slice, from the global suffix
+    * ranking ([[graft.operators.SubstringDedup.duplicatedGrams]]). The
+    * DuckDB oracle computes the same set by brute force (the corpus is
+    * small at the gate's SF). */
   def substringDups(s: SparkSession, dir: String): DataFrame =
     // doc_id % 10M < 30: the stress/detwin builders offset copied ids
     // by copy*10M, so this keeps the SAME 30 documents at plain sf dirs
@@ -1181,13 +1166,10 @@ object TextOps extends QueryPack {
     // time ratios REAL scale evidence for SubstringDedup (the r12
     // filter `doc_id < 30` pinned the corpus at 30 docs forever). The
     // brute-force 15-gram oracle stays linear in corpus chars.
-    graft.operators.SubstringDedup.resolveDuplicates(
+    graft.operators.SubstringDedup.duplicatedGrams(
         Tables.documents(s, dir).filter(col("doc_id") % 10000000L < 30),
-        "doc_id", "text", minWidth = 15, chunks = 4)
-      .select(explode(expr(
-        "transform(sequence(1, length(dup_text) - 14), i -> substring(dup_text, i, 15))"))
-        .as("gram"))
-      .distinct()
+        "doc_id", "text", minWidth = 15)
+      .select(col("dup_text").as("gram"))
       .orderBy(col("gram"))
 
   /** Brute-force oracle: all 15-char grams with ≥ 2 occurrences
@@ -1295,11 +1277,11 @@ object TextOps extends QueryPack {
     * suffix ranking ([[graft.operators.SubstringDedup.duplicatedGrams]]
     * — depth-truncated prefix doubling; nvtext/deduplicate.hpp:40's
     * global-suffix-array bound, O(occurrences) on a gram shared by m
-    * documents, where the posting-list cross-chunk path pays C(m,2)
-    * verify pairs). The clique is PLANTED deterministically: every
-    * doc_id % 10M < 500 document gets a fixed 24-char sentinel appended,
-    * so one run of 15-grams is shared by all 500 docs at a plain sf dir
-    * (C(500,2) = 125k pairs on the pair path; ONE 500-row group here) —
+    * documents, where a pair-verify design pays C(m,2) verify pairs).
+    * The clique is PLANTED deterministically: every doc_id % 10M < 500
+    * document gets a fixed 24-char sentinel appended, so one run of
+    * 15-grams is shared by all 500 docs at a plain sf dir (C(500,2) =
+    * 125k pairs for a pair-verify design; ONE 500-row group here) —
     * and by 500·N docs at an N× stress/detwin copy, making envelope
     * time ratios direct hot-clique scale evidence. Output is the full
     * duplicated-gram set WITH exact occurrence counts (a stronger check
@@ -1324,7 +1306,7 @@ object TextOps extends QueryPack {
     * ranking): the SAME planted-sentinel corpus as doc_hotclique_dups,
     * split train/eval on doc_id parity — the sentinel grams are a
     * contamination clique present in every doc of BOTH sources, where
-    * the posting-list pair path would verify ~n_train·n_eval pairs.
+    * a pair-verify design would check ~n_train·n_eval pairs.
     * Output: every gram in both sources WITH exact per-source counts
     * (stronger than doc_contamination's set-only projection). */
   def hotCliqueContamination(s: SparkSession, dir: String): DataFrame = {
@@ -1423,33 +1405,24 @@ object TextOps extends QueryPack {
   }
 
   /** Train/eval CONTAMINATION detection (resolve_duplicates_pair,
-    * nvtext/deduplicate.hpp:95): substrings appearing in BOTH corpora —
-    * here the even/odd doc_id halves stand in for train and eval sets.
-    * Oracle-gated via the same lossless gram canonicalization as
-    * [[substringDups]]: the emitted cross-source duplicates, projected
-    * to minWidth-grams, equal EXACTLY the brute-force set of
-    * minWidth-grams present in both sources (each emitted dup_text
-    * occurs in both corpora ⇒ so do its grams; conversely a gram in
-    * both corpora either co-chunks — its suffix-array interval then
-    * holds suffixes of both sources, forcing a cross-source adjacency
-    * with lcp ≥ minWidth — or cross-chunks, where winnowing guarantees
-    * a shared fingerprint and the tagged verify emits it). */
-  def contamination(s: SparkSession, dir: String): DataFrame =
-    // tagged single-scan form: filtering even/odd into two frames and
-    // unioning them would scan documents twice
-    graft.operators.SubstringDedup.resolveDuplicatesTagged(
-        // % 10M (the stress-copy key offset, which is even, so parity
-        // is copy-stable): plain sf dirs unchanged, stress/detwin
-        // corpora grow N x - same round-13 treatment as substringDups,
-        // giving the PAIR mode real scale evidence too
-        Tables.documents(s, dir).filter(col("doc_id") % 10000000L < 60)
-          .withColumn("src", pmod(col("doc_id"), lit(2))),
-        "doc_id", "text", "src", minWidth = 15, chunks = 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(dup_text) - 14), i -> substring(dup_text, i, 15))"))
-        .as("gram"))
-      .distinct()
+    * nvtext/deduplicate.hpp:95) at gram level: every 15-char gram
+    * present in BOTH the even and the odd doc_id halves (stand-ins for
+    * train and eval sets), from the global suffix ranking's pair mode
+    * ([[graft.operators.SubstringDedup.duplicatedGramsPair]]). */
+  def contamination(s: SparkSession, dir: String): DataFrame = {
+    // % 10M (the stress-copy key offset, which is even, so parity is
+    // copy-stable): plain sf dirs unchanged, stress/detwin corpora
+    // grow N x - same round-13 treatment as substringDups, giving the
+    // PAIR mode real scale evidence too
+    val docs = Tables.documents(s, dir)
+      .filter(col("doc_id") % 10000000L < 60)
+    graft.operators.SubstringDedup.duplicatedGramsPair(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+        docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+        "doc_id", "text", minWidth = 15)
+      .select(col("dup_text").as("gram"))
       .orderBy(col("gram"))
+  }
 
   /** Brute-force oracle: 15-char grams occurring in BOTH the even and
     * the odd doc_id halves. */

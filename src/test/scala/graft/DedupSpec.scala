@@ -133,118 +133,6 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs((0L, 2L)) == 0)
   }
 
-  test("suffixArray and lcpArray match the classic banana example") {
-    import graft.operators.SubstringDedup
-    val sa = SubstringDedup.suffixArray("banana")
-    assert(sa.toSeq == Seq(5, 3, 1, 0, 4, 2))
-    val lcp = SubstringDedup.lcpArray("banana", sa)
-    assert(lcp.toSeq == Seq(0, 1, 3, 0, 0, 2))
-  }
-
-  test("resolveDuplicates finds planted cross-doc duplicate substrings") {
-    import graft.operators.SubstringDedup
-    val phrase = "the boiled frog sat on a sunny rock today"
-    val planted = Seq(
-      (0L, s"alpha beta $phrase gamma delta epsilon filler"),
-      (1L, s"unrelated preamble words $phrase plus a suffix"),
-      (2L, "completely different content sharing nothing with the others zz")
-    ).toDF("doc_id", "text")
-    val dups = SubstringDedup
-      .resolveDuplicates(planted, "doc_id", "text", minWidth = 20, chunks = 1)
-      .as[String].collect()
-    assert(dups.exists(_.contains(phrase)), dups.mkString("; "))
-    // nothing from the non-duplicated doc
-    assert(!dups.exists(_.contains("completely different")))
-  }
-
-  test("resolveDuplicatesPair emits only cross-corpus duplicates") {
-    import graft.operators.SubstringDedup
-    val shared = "contaminated evaluation sentence appearing in train"
-    val trainOnly = "train internal duplicate that repeats in train zz"
-    val train = Seq(
-      (0L, s"intro $trainOnly middle $trainOnly outro"),
-      (1L, s"some training text with $shared inside")
-    ).toDF("doc_id", "text")
-    val eval = Seq(
-      (10L, s"eval doc also contains $shared verbatim")
-    ).toDF("doc_id", "text")
-    val dups = SubstringDedup
-      .resolveDuplicatesPair(train, eval, "doc_id", "text",
-        minWidth = 20, chunks = 1)
-      .as[String].collect()
-    assert(dups.exists(_.contains(shared)), dups.mkString("; "))
-    assert(!dups.exists(_.contains(trainOnly)),
-      "train-internal dup must not emit in pair mode: " + dups.mkString("; "))
-  }
-
-  test("resolveDuplicates finds a duplicate whose occurrences straddle chunks") {
-    import graft.operators.SubstringDedup
-    val phrase = "the boundary straddling phrase appears exactly twice here"
-    // 8 chunks over 8 docs: range partitioning puts doc 0 and doc 7 in
-    // different chunks, so the chunk-local pass alone cannot pair them —
-    // only the winnowing cross-chunk pass can.
-    val docs = (0L to 7L).map { i =>
-      val body =
-        if (i == 0L) s"first occurrence sits here $phrase padded with words"
-        else if (i == 7L) s"far away chunk carries $phrase inside other filler"
-        else s"chunk $i content row sharing nothing of interest with others"
-      (i, body)
-    }.toDF("doc_id", "text")
-    val dups = SubstringDedup
-      .resolveDuplicates(docs, "doc_id", "text", minWidth = 20, chunks = 8)
-      .as[String].collect()
-    assert(dups.exists(_.contains(phrase)),
-      "cross-chunk duplicate missed: " + dups.mkString("; "))
-  }
-
-  test("resolveDuplicatesPair finds cross-chunk cross-source contamination only") {
-    import graft.operators.SubstringDedup
-    val shared = "leaked evaluation answer text shows up in training data"
-    val sameSrc = "same source repeated sequence across distant chunks!!"
-    val train = (0L to 5L).map { i =>
-      val body =
-        if (i == 0L) s"train doc zero holding $shared and trailing words"
-        else if (i == 1L) s"first same-source copy $sameSrc apart from rest"
-        else if (i == 5L) s"second same-source copy $sameSrc apart from rest"
-        else s"train doc $i with nothing shared across the corpus at all"
-      (i, body)
-    }.toDF("doc_id", "text")
-    val eval = Seq(
-      (100L, s"eval doc far away in id space contains $shared verbatim")
-    ).toDF("doc_id", "text")
-    val dups = SubstringDedup
-      .resolveDuplicatesPair(train, eval, "doc_id", "text",
-        minWidth = 20, chunks = 6)
-      .as[String].collect()
-    assert(dups.exists(_.contains(shared)),
-      "cross-chunk contamination missed: " + dups.mkString("; "))
-    assert(!dups.exists(_.contains(sameSrc)),
-      "same-source cross-chunk dup must not emit in pair mode: " +
-        dups.mkString("; "))
-  }
-
-  test("resolveDuplicates output is invariant to the chunk count") {
-    import graft.operators.SubstringDedup
-    val phraseA = "repeated sentence number one with enough characters"
-    val phraseB = "another shared span crossing the whole corpus twice"
-    val docs = Seq(
-      (0L, s"doc zero says $phraseA and then other words"),
-      (1L, s"doc one also says $phraseA in the middle"),
-      (2L, s"doc two intro $phraseB closing remark"),
-      (3L, s"doc three text $phraseB trailing filler"),
-      (4L, "doc four is entirely unique content with no repeats at all")
-    ).toDF("doc_id", "text")
-    def run(chunks: Int) = SubstringDedup
-      .resolveDuplicates(docs, "doc_id", "text", minWidth = 20, chunks = chunks)
-      .as[String].collect().toSet
-    val one = run(1) // single chunk = the reference's global semantics
-    assert(run(3) == one, "3-chunk result differs from global")
-    assert(run(5) == one, "5-chunk result differs from global")
-    // chunks <= 0 = corpus-adaptive (autoChunks): same output again
-    assert(run(0) == one, "adaptive-chunk result differs from global")
-    assert(one.exists(_.contains(phraseA)) && one.exists(_.contains(phraseB)))
-  }
-
   test("duplicatedGrams matches brute force on random corpora " +
     "(small alphabet, heavy rank ties)") {
     import graft.operators.SubstringDedup
@@ -274,7 +162,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("duplicatedGrams handles a hot clique without pair fan-out " +
-    "and agrees with gram-canonicalized resolveDuplicates") {
+    "and matches a brute-force 15-gram count") {
     import graft.operators.SubstringDedup
     val sentinel = "HOT-CLIQUE-SENTINEL-GRAM" // 24 chars -> 10 15-grams
     val m = 500
@@ -294,21 +182,19 @@ class DedupSpec extends AnyFunSuite {
     sentinelGrams.foreach { g =>
       assert(got.get(g).contains(m.toLong), s"gram '$g': ${got.get(g)}")
     }
-    // cross-check the canonicalization equivalence on a small corpus:
-    // resolveDuplicates' emitted dup_texts, projected to 15-grams,
-    // equal duplicatedGrams' key set
+    // exact key set and counts on a small slice, against a brute-force
+    // count of its 15-grams
     val small = docs.filter($"doc_id" < 40)
-    val viaResolve = SubstringDedup
-      .resolveDuplicates(small, "doc_id", "text", minWidth = 15, chunks = 3)
-      .as[String].collect()
-      .flatMap(t => (0 to t.length - 15).map(p => t.substring(p, p + 15)))
-      .toSet
+    val brute = small.as[(Long, String)].collect()
+      .flatMap { case (_, t) => (0 to t.length - 15).map(p => t.substring(p, p + 15)) }
+      .groupBy(identity).collect { case (g, o) if o.length >= 2 =>
+        g -> o.length.toLong }.toMap
     val viaGlobal = SubstringDedup
       .duplicatedGrams(small, "doc_id", "text", minWidth = 15)
-      .as[(String, Long)].collect().map(_._1).toSet
-    assert(viaGlobal == viaResolve,
-      s"missing=${(viaResolve -- viaGlobal).take(3)} " +
-        s"extra=${(viaGlobal -- viaResolve).take(3)}")
+      .as[(String, Long)].collect().toMap
+    assert(viaGlobal == brute,
+      s"missing=${(brute.keySet -- viaGlobal.keySet).take(3)} " +
+        s"extra=${(viaGlobal.keySet -- brute.keySet).take(3)}")
   }
 
   test("duplicatedGrams is UTF-16-consistent on surrogate-pair content") {
@@ -429,54 +315,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == brute,
       s"missing=${(brute.keySet -- got.keySet).take(3)} " +
         s"extra=${(got.keySet -- brute.keySet).take(3)}")
-  }
-
-  test("suffixArray matches brute-force suffix sort on random strings") {
-    import graft.operators.SubstringDedup
-    val rnd = new scala.util.Random(1313)
-    // small alphabets force deep doubling rounds and heavy rank ties —
-    // the regime where the counting-sort rewrite can break
-    for (trial <- 0 until 60) {
-      val n = 1 + rnd.nextInt(if (trial % 3 == 0) 12 else 300)
-      val alpha = 1 + rnd.nextInt(4)
-      val s = new String(Array.fill(n)(('a' + rnd.nextInt(alpha)).toChar))
-      val brute = (0 until n).sortBy(i => s.substring(i))
-      val got = SubstringDedup.suffixArray(s)
-      assert(got.toSeq == brute,
-        s"trial $trial: s=$s got=${got.mkString(",")} " +
-          s"want=${brute.mkString(",")}")
-    }
-    // non-ASCII + repeated-block worst case
-    val rep = "αβγ" * 50 + "αβ"
-    assert(SubstringDedup.suffixArray(rep).toSeq ==
-      (0 until rep.length).sortBy(i => rep.substring(i)))
-  }
-
-  test("autoChunks: ~4M chars per chunk, floor 4, bounded") {
-    import graft.operators.SubstringDedup.autoChunks
-    assert(autoChunks(0) == 4)
-    assert(autoChunks(3999999) == 4) // below floor*target stays at floor
-    assert(autoChunks(16000000) == 4)
-    assert(autoChunks(16000001) == 5)
-    assert(autoChunks(400000000L) == 100)
-    assert(autoChunks(Long.MaxValue / 4) == 1000000) // cap
-  }
-
-  test("winnowChars guarantees a shared fingerprint for >= minWidth overlaps") {
-    import graft.operators.SubstringDedup
-    val minWidth = 20
-    val k = (minWidth + 1) / 2
-    val w = minWidth - k + 1
-    val shared = "X" * 3 + "abcdefghijklmnopqrst" // 20 shared chars
-    val a = "prefix one " + "abcdefghijklmnopqrst" + " tail alpha"
-    val b = "totally different lead-in " + "abcdefghijklmnopqrst" + " zz"
-    val fa = SubstringDedup.winnowChars(a, k, w).toSet
-    val fb = SubstringDedup.winnowChars(b, k, w).toSet
-    assert(fa.intersect(fb).nonEmpty,
-      s"no shared fingerprint despite a $minWidth-char shared substring")
-    // density sanity: far fewer fingerprints than characters
-    assert(fa.size < a.length)
-    assert(shared.length >= minWidth) // test wiring
   }
 
   // brute-force maximal duplicated spans: duplicated-gram lead

@@ -531,7 +531,9 @@ class OperatorsSpec extends AnyFunSuite {
   test("queries and oracleSql keys line up") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
-    assert(o.subsetOf(q), s"oracle keys without queries: ${o.diff(q)}")
+    val (noQuery, noOracle) = (o.diff(q), q.diff(o))
+    assert(noQuery.isEmpty && noOracle.isEmpty,
+      s"oracle keys without queries: $noQuery; queries without oracle: $noOracle")
   }
 
   test("query names are unique across packs (toMap would silently drop dups)") {

@@ -141,25 +141,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("suffixArray equals naive sorted suffixes; lcp equals naive common prefix") {
-    import graft.operators.SubstringDedup
-    val gen = Gen.chooseNum(0, 60).flatMap(n =>
-      Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString))
-    forAll(gen) { s =>
-      val sa = SubstringDedup.suffixArray(s).toSeq
-      val naive = s.indices.sortBy(i => s.substring(i))
-      assert(sa == naive, s"input=$s")
-      if (s.nonEmpty) {
-        val lcp = SubstringDedup.lcpArray(s, sa.toArray)
-        (1 until s.length).foreach { i =>
-          val (a, b) = (s.substring(sa(i - 1)), s.substring(sa(i)))
-          val want = a.zip(b).takeWhile { case (x, y) => x == y }.size
-          assert(lcp(i) == want, s"input=$s i=$i")
-        }
-      }
-    }
-  }
-
   test("wrap never splits words and every line fits width unless one word exceeds it") {
     import graft.functions.TextFunctions
     val word = Gen.chooseNum(1, 14).flatMap(n =>
@@ -514,29 +495,6 @@ class PropertySpec extends AnyFunSuite {
             s"unbalanced prefix at $i: $seen totals=$totals")
         }
       }
-    }
-  }
-
-  test("winnowChars detection guarantee holds on random strings with planted overlap") {
-    // The SubstringDedup cross-chunk pass rests on this theorem: ANY
-    // shared substring of >= k+w-1 chars yields a shared fingerprint.
-    import graft.operators.SubstringDedup
-    val minWidth = 20
-    val k = (minWidth + 1) / 2
-    val w = minWidth - k + 1
-    val alpha = Gen.choose('a', 'e') // tiny alphabet: adversarial repeats
-    def str(lo: Int, hi: Int): Gen[String] =
-      Gen.choose(lo, hi).flatMap(n => Gen.listOfN(n, alpha).map(_.mkString))
-    val gen = for {
-      pre1 <- str(0, 40); post1 <- str(0, 40)
-      pre2 <- str(0, 40); post2 <- str(0, 40)
-      shared <- str(minWidth, minWidth + 15)
-    } yield (pre1 + shared + post1, pre2 + shared + post2)
-    forAll(gen, n = 60) { case (a, b) =>
-      val fa = SubstringDedup.winnowChars(a, k, w).toSet
-      val fb = SubstringDedup.winnowChars(b, k, w).toSet
-      assert(fa.intersect(fb).nonEmpty,
-        s"winnowing guarantee violated for a=$a b=$b")
     }
   }
 }

@@ -133,14 +133,14 @@ MUTATIONS = [
      "val nProbes = math.min(probes, populated)",
      "val nProbes = math.min(1, populated)",
      "embed_hier_assign"),
-    # Round-13: the counting-sort suffix array's dense re-rank must
-    # split on the SECOND key too — dropping the ra2/rb2 comparison
-    # collapses distinct suffixes into one rank class and the SA comes
-    # out wrong (gate row drops from 254 grams to 19).
-    ("sa-rerank-second-key-dropped",
+    # The suffix ranking's doubling round must key each position on
+    # the rank `width` positions ahead — a constant second key leaves
+    # every round at the width-2 base classes, so the final key compares
+    # only four chars of each 15-gram and distinct grams merge.
+    ("ranking-round-second-key-dropped",
      "src/main/scala/graft/operators/SubstringDedup.scala",
-     "if (rank(a) != rank(b) || ra2 != rb2) r += 1",
-     "if (rank(a) != rank(b)) r += 1",
+     "val led = leadByPos(cur, width, block)",
+     "val led = cur.withColumn(\"r2\", lit(-1L))",
      "doc_substring_dups"),
     # Round-14: the lossy-regime recall gate (embed_hier_recall runs
     # semanticDedupPairs at K=4096, superProbes=2) must notice the
