@@ -80,7 +80,7 @@ object PlanDump {
       "ds_resale_chain" ->
         "Resale chain (Q64 shape): BOTH channel-year slices HashAggregate to |parts|-row frames BEFORE the fact-fact resale join — each side's year/priority filter is pushed into its orders scan, lineitem reduces map-side per partkey, and the resale join + part-dimension lookup run over aggregate-sized inputs; raw fact rows never reach a join exchange.",
       "doc_hotclique_dups" ->
-        "Distributed global suffix ranking (r14), final stage (the doubling rounds sit behind localCheckpoint boundaries — each was itself one doc-window lead + one key-pair distinct/join of fixed-width rows): the duplicated-gram group is a partial+final SortAggregate on the final rank pair (min-struct representative forces sort-based, the partial still combines map-side) — a 500-doc hot clique is ONE group with map-side combine — and no pair-shaped Generate or self-join exists anywhere; the representative text fetch joins gram-count-sized rows back to the 500-doc corpus.")
+        "Exact gram key (r18): one typed flatMap emits each full-gram start with its 2·minWidth-byte UTF-16 key, and the duplicated-gram group is a partial+final HashAggregate on that key — a 500-doc hot clique is ONE group combined map-side — with no lineage cut, no join and no pair-shaped Generate anywhere; dup_text is decoded from the key after the filter.")
     // queries whose evidence IS the runtime plan (AQE stage reuse only
     // materializes after execution): run them, dump the final plan
     val executed = Set("q11_important_stock", "q20_potential_promotion",

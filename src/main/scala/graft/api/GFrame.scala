@@ -231,7 +231,7 @@ final case class GFrame(df: DataFrame) {
       threshold: Double = 0.8): GFrame =
     GFrame(Dedup.minhashNgramPairs(df, idCol, textCol, n, threshold = threshold))
   /** Every duplicated minWidth-gram corpus-wide with its exact
-    * occurrence count — the distributed global-suffix-ranking screen
+    * occurrence count — the exact-gram-key screen
     * (nvtext resolve_duplicates canonicalized to grams;
     * O(occurrences) on hot duplicate cliques where the pair paths pay
     * C(m,2)). */

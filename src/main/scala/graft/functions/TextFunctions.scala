@@ -72,12 +72,6 @@ object TextFunctions {
   def bpeRegexTokens(c: Column): Column =
     regexp_extract_all(lower(c), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
 
-  /** Token count (tokenize.hpp count_tokens). */
-  def tokenCount(c: Column): Column = size(tokens(c))
-
-  /** Distinct-token (type) count. */
-  def typeCount(c: Column): Column = size(array_distinct(tokens(c)))
-
   /** Bag-of-words document fingerprint: md5 over the sorted distinct
     * token set. Documents with identical token sets collide — the
     * classic "fingerprint dedup" key (nvtext/deduplicate.hpp analog at
@@ -133,26 +127,6 @@ object TextFunctions {
   def shingles(toksCol: String, n: Int): Column =
     when(size(col(toksCol)) >= n, array_distinct(tokenNgrams(toksCol, n)))
       .otherwise(array(array_join(col(toksCol), NgramSep)))
-
-  /** MinHash signature over word n-gram shingles (minhash_ngrams,
-    * nvtext/minhash.hpp:156) — [[minhashSigOf]] composed over
-    * [[shingles]], so the shingle definition lives in exactly one place.
-    * Unlike [[minhashSig]] over the distinct token SET, this is
-    * order-sensitive: permuted documents get different shingles, the
-    * standard formulation for document near-dup detection. */
-  def minhashNgramSig(toksCol: String, n: Int, k: Int): Column =
-    minhashSigOf(shingles(toksCol, n), k)
-
-  /** LSH band keys for a minhash signature column: hash of each band's
-    * slice of the signature, tagged with the band index. Docs sharing
-    * any band key are near-dup candidates. Compositional form kept for
-    * the signature-API surface; the DEDUP PIPELINE uses the fused
-    * [[minhashBandKeys]] (this form re-inlines the signature expression
-    * into every band's slice after projection collapse). */
-  def minhashBands(sigCol: String, bands: Int, rowsPerBand: Int): Column =
-    expr(s"transform(sequence(0, ${bands - 1}), " +
-      s"b -> concat(b, ':', xxhash64(array_join(" +
-      s"slice($sigCol, b * $rowsPerBand + 1, $rowsPerBand), ','))))")
 
   /** Fused tokens → minhash signature → band keys, one kernel pass
     * (graft.plans.MinHashBandKeys) — the hot path of minhash LSH.

@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.CheckpointUtil
 
 /** Lineage-cut policy for graft's iterative operators (pointer-jumping
-  * connected components, PageRank/BFS fixpoints, the global suffix
-  * ranking's prefix-doubling rounds, BPE merge learning).
+  * connected components, PageRank/BFS fixpoints, BPE merge learning).
   *
   * Each round of those loops must cut lineage or the plan grows without
   * bound. Two regimes:

@@ -56,14 +56,6 @@ object Multimodal {
       .withColumn("fake_width", ascii(substring(md5(col("payload")), 1, 1)))
       .withColumn("fake_height", ascii(substring(md5(col("payload")), 2, 1)))
 
-  /** Frame sampling shape: every k-th "frame" index up to nFrames —
-    * posexplode keeps (media, frame_idx) rows partition-local. */
-  def sampleFrames(df: DataFrame, everyK: Int, nFramesCol: String): DataFrame =
-    df.select(col("media_id"),
-      posexplode(sequence(lit(0), col(nFramesCol) - 1, lit(everyK))))
-      .withColumnRenamed("pos", "sample_idx")
-      .withColumnRenamed("col", "frame_idx")
-
   /** BATCHED decode + feature extraction: mapPartitions accumulates
     * payloads into batches of `batchSize` and hands each WHOLE BATCH to
     * the codec — the Scala analog of mapInPandas' Arrow-batch contract.

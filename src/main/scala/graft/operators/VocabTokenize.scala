@@ -40,16 +40,6 @@ object VocabTokenize {
       defaultId: Int = -1): Column =
     idsFor(tokens(text), vocab, defaultId)
 
-  /** Broadcast-vocab variant of [[idsFor]] (>~100k entries): the
-    * vocabulary ships via TorrentBroadcast once per executor and the
-    * plan holds only the handle, instead of a MapType literal in every
-    * task closure. Same semantics (row-index ids, defaultId for
-    * absent/null tokens). */
-  def idsForBroadcast(tokArr: Column,
-      spark: org.apache.spark.sql.SparkSession, vocab: Seq[String],
-      defaultId: Int = -1): Column =
-    graft.plans.VocabIds.broadcast(tokArr, spark, vocab, defaultId)
-
   /** Large-vocab path: `vocabDf`'s first column is the token, second the
     * id (taken POSITIONALLY, so callers' column names — including ones
     * that collide with `idCol`, like "id" — never matter). Tokens of

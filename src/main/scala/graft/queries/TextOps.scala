@@ -1154,8 +1154,8 @@ object TextOps extends QueryPack {
 
   /** Exact duplicated substrings (resolve_duplicates,
     * nvtext/deduplicate.hpp:66) at gram level: every 15-char gram
-    * occurring at ≥ 2 positions of the slice, from the global suffix
-    * ranking ([[graft.operators.SubstringDedup.duplicatedGrams]]). The
+    * occurring at ≥ 2 positions of the slice, grouped on the exact
+    * gram key ([[graft.operators.SubstringDedup.duplicatedGrams]]). The
     * DuckDB oracle computes the same set by brute force (the corpus is
     * small at the gate's SF). */
   def substringDups(s: SparkSession, dir: String): DataFrame =
@@ -1273,11 +1273,11 @@ object TextOps extends QueryPack {
       |FROM isl GROUP BY doc_id, island
       |ORDER BY doc_id, span_start""".stripMargin
 
-  /** Hot-duplicate-clique substring dedup via the distributed GLOBAL
-    * suffix ranking ([[graft.operators.SubstringDedup.duplicatedGrams]]
-    * — depth-truncated prefix doubling; nvtext/deduplicate.hpp:40's
-    * global-suffix-array bound, O(occurrences) on a gram shared by m
-    * documents, where a pair-verify design pays C(m,2) verify pairs).
+  /** Hot-duplicate-clique substring dedup on the exact gram key
+    * ([[graft.operators.SubstringDedup.duplicatedGrams]] — the
+    * O(occurrences) bound of nvtext/deduplicate.hpp:40's global suffix
+    * array on a gram shared by m documents, where a pair-verify design
+    * pays C(m,2) verify pairs).
     * The clique is PLANTED deterministically: every doc_id % 10M < 500
     * document gets a fixed 24-char sentinel appended, so one run of
     * 15-grams is shared by all 500 docs at a plain sf dir (C(500,2) =
@@ -1302,8 +1302,8 @@ object TextOps extends QueryPack {
 
   /** Cross-corpus contamination at the hot-clique bound
     * ([[graft.operators.SubstringDedup.duplicatedGramsPair]],
-    * resolve_duplicates_pair deduplicate.hpp:95 via the global suffix
-    * ranking): the SAME planted-sentinel corpus as doc_hotclique_dups,
+    * resolve_duplicates_pair deduplicate.hpp:95 on the exact gram
+    * key): the SAME planted-sentinel corpus as doc_hotclique_dups,
     * split train/eval on doc_id parity — the sentinel grams are a
     * contamination clique present in every doc of BOTH sources, where
     * a pair-verify design would check ~n_train·n_eval pairs.
@@ -1324,7 +1324,7 @@ object TextOps extends QueryPack {
   }
 
   // ORACLE SEMANTICS NOTE (both hot-clique SQLs): DuckDB substr/len
-  // index CODE POINTS while the engine (SubstringDedup.gramGroups)
+  // index CODE POINTS while the engine (SubstringDedup.keyedGrams)
   // indexes UTF-16 units — the two gram sets coincide only on BMP-only
   // text. The testdata corpus is BMP-only (asserted by
   // DedupSpec "gate corpus is BMP-only"), so the gates are exact; an
@@ -1407,7 +1407,7 @@ object TextOps extends QueryPack {
   /** Train/eval CONTAMINATION detection (resolve_duplicates_pair,
     * nvtext/deduplicate.hpp:95) at gram level: every 15-char gram
     * present in BOTH the even and the odd doc_id halves (stand-ins for
-    * train and eval sets), from the global suffix ranking's pair mode
+    * train and eval sets), from the exact gram key's pair mode
     * ([[graft.operators.SubstringDedup.duplicatedGramsPair]]). */
   def contamination(s: SparkSession, dir: String): DataFrame = {
     // % 10M (the stress-copy key offset, which is even, so parity is

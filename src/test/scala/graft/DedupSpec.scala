@@ -200,8 +200,8 @@ class DedupSpec extends AnyFunSuite {
   test("duplicatedGrams is UTF-16-consistent on surrogate-pair content") {
     import graft.operators.SubstringDedup
     // "a😀b😀c😀d😀e😀" = 5 BMP chars + 5 astral chars = 15 UTF-16
-    // units; positions, the packed base ranks, and the representative
-    // substring extraction all index UTF-16 units, so a gram whose
+    // units; positions and the gram key (from which dup_text is
+    // decoded) both index UTF-16 units, so a gram whose
     // boundary would split a surrogate pair under code-point
     // arithmetic must still round-trip byte-identically
     val emoji = "a😀b😀c😀d😀e😀"
@@ -220,52 +220,47 @@ class DedupSpec extends AnyFunSuite {
     assert(got.get(emoji).contains(2L))
   }
 
-  test("blocked lead (halo range partitioning) parity with brute force " +
-    "across many blocks, incl. surrogate pairs straddling boundaries") {
+  test("many-doc parity with brute force incl. surrogate pairs split " +
+    "at every gram offset") {
     import graft.operators.SubstringDedup
-    // Shrink the ranking block to 32 UTF-16 units so 300-char docs span
-    // ~10 blocks: every doubling round's lead crosses block boundaries
-    // through the halo. Results must be bit-identical to the brute
-    // force (and thus to the default single-block-per-doc regime the
-    // other duplicatedGrams specs pin).
-    spark.conf.set(SubstringDedup.BlockCharsKey, "32")
-    try {
-      val rnd = new scala.util.Random(4242)
-      val base = (0 until 12).map(i => (i.toLong,
-        new String(Array.fill(150 + rnd.nextInt(250))(
-          ('a' + rnd.nextInt(3)).toChar))))
-      // astral content positioned to straddle 32-unit block boundaries
-      val emoji = "😀😁😂🤣😃" * 12 // 120 UTF-16 units of surrogate pairs
-      val corpus = base ++ Seq((100L, "A" + emoji + "tail"),
-        (101L, "B" + emoji + "liat"))
-      val got = SubstringDedup
-        .duplicatedGrams(corpus.toDF("doc_id", "text"), "doc_id", "text",
-          minWidth = 15)
-        .as[(String, Long)].collect().toMap
-      // A gram whose boundary SPLITS a surrogate pair carries a lone
-      // half, which Spark's UTF-8 string layer projects to '?' on
-      // output (invalid UTF-8 otherwise) — counts and grouping are
-      // computed in UTF-16 space and unaffected; only the reported
-      // representative text takes the projection. Apply the same
-      // projection to the brute force.
-      def lossy(s: String): String = s.zipWithIndex.map { case (c, i) =>
-        val paired =
-          if (Character.isHighSurrogate(c))
-            i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1))
-          else if (Character.isLowSurrogate(c))
-            i > 0 && Character.isHighSurrogate(s.charAt(i - 1))
-          else true
-        if (paired) c else '?'
-      }.mkString
-      val brute = corpus.map(_._2)
-        .flatMap(t => (0 to t.length - 15).map(p => t.substring(p, p + 15)))
-        .groupBy(identity).collect { case (g, o) if o.size >= 2 =>
-          lossy(g) -> o.size.toLong }.toMap
-      assert(got.size == brute.size,
-        s"missing=${(brute.keySet -- got.keySet).take(3)} " +
-          s"extra=${(got.keySet -- brute.keySet).take(3)}")
-      assert(got == brute)
-    } finally spark.conf.unset(SubstringDedup.BlockCharsKey)
+    // 150-400-char small-alphabet docs plus two docs of surrogate pairs, so
+    // grams start at every offset of a pair: a gram that splits a pair
+    // must still group with its exact UTF-16 twins and never with a
+    // different lone half. Results must equal the brute force.
+    val rnd = new scala.util.Random(4242)
+    val base = (0 until 12).map(i => (i.toLong,
+      new String(Array.fill(150 + rnd.nextInt(250))(
+        ('a' + rnd.nextInt(3)).toChar))))
+    val emoji = "😀😁😂🤣😃" * 12 // 120 UTF-16 units of surrogate pairs
+    val corpus = base ++ Seq((100L, "A" + emoji + "tail"),
+      (101L, "B" + emoji + "liat"))
+    val got = SubstringDedup
+      .duplicatedGrams(corpus.toDF("doc_id", "text"), "doc_id", "text",
+        minWidth = 15)
+      .as[(String, Long)].collect().toMap
+    // A gram whose boundary SPLITS a surrogate pair carries a lone
+    // half, which Spark's UTF-8 string layer projects to '?' on
+    // output (invalid UTF-8 otherwise) — counts and grouping are
+    // computed in UTF-16 space and unaffected; only the reported
+    // text takes the projection. Apply the same projection to the
+    // brute force.
+    def lossy(s: String): String = s.zipWithIndex.map { case (c, i) =>
+      val paired =
+        if (Character.isHighSurrogate(c))
+          i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1))
+        else if (Character.isLowSurrogate(c))
+          i > 0 && Character.isHighSurrogate(s.charAt(i - 1))
+        else true
+      if (paired) c else '?'
+    }.mkString
+    val brute = corpus.map(_._2)
+      .flatMap(t => (0 to t.length - 15).map(p => t.substring(p, p + 15)))
+      .groupBy(identity).collect { case (g, o) if o.size >= 2 =>
+        lossy(g) -> o.size.toLong }.toMap
+    assert(got.size == brute.size,
+      s"missing=${(brute.keySet -- got.keySet).take(3)} " +
+        s"extra=${(got.keySet -- brute.keySet).take(3)}")
+    assert(got == brute)
   }
 
   test("gate corpus is BMP-only (hot-clique oracle exactness assumption)") {

@@ -562,6 +562,39 @@ class PlanSpec extends AnyFunSuite {
       s"the two ends must share one lineitem scan:\n$p")
   }
 
+  test("doc_substring_dups: built without a job, one hash aggregation " +
+    "on the gram key") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    graft.Tables.documents(spark, dir) // the first load resolves the relation
+    sc.setJobGroup("substring-build", "build doc_substring_dups")
+    val df = try SparkEntry.queries("doc_substring_dups")(spark, dir)
+      finally sc.clearJobGroup()
+    // the TablesSpec control: once a later job is visible, every job
+    // started before it is visible too
+    sc.setJobGroup("substring-control", "plain read")
+    try spark.read.parquet(s"$dir/documents.parquet")
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("substring-control").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("substring-control").nonEmpty)
+    val built = sc.statusTracker.getJobIdsForGroup("substring-build")
+    assert(built.isEmpty, s"building launched ${built.length} jobs")
+    // no lineage cut, no text join, no sort-based aggregation: the grams
+    // are counted by one partial/final hash aggregate on their key
+    assert(df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }
+      .isEmpty, "a lineage cut feeds the plan")
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("SortMergeJoin"), s"no join expected:\n$p")
+    assert(!p.contains("SortAggregate"), s"no sort aggregate expected:\n$p")
+    val aggs = p.linesIterator.filter(_.contains("HashAggregate(")).toSeq
+    assert(aggs.size == 2 && aggs.forall(_.contains("HashAggregate(keys=[__g#")),
+      s"expected one partial/final pair keyed on __g:\n$p")
+    assert(aggs.exists(_.contains("partial_count")),
+      s"the gram count must combine map-side:\n$p")
+  }
+
   test("ngramLmScore joins the doc stream against model tables, no cartesian blowup") {
     val docs = graft.Tables.documents(spark, dir)
     val scored = graft.operators.TextPipeline.ngramLmScore(

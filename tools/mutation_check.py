@@ -133,15 +133,6 @@ MUTATIONS = [
      "val nProbes = math.min(probes, populated)",
      "val nProbes = math.min(1, populated)",
      "embed_hier_assign"),
-    # The suffix ranking's doubling round must key each position on
-    # the rank `width` positions ahead — a constant second key leaves
-    # every round at the width-2 base classes, so the final key compares
-    # only four chars of each 15-gram and distinct grams merge.
-    ("ranking-round-second-key-dropped",
-     "src/main/scala/graft/operators/SubstringDedup.scala",
-     "val led = leadByPos(cur, width, block)",
-     "val led = cur.withColumn(\"r2\", lit(-1L))",
-     "doc_substring_dups"),
     # Round-14: the lossy-regime recall gate (embed_hier_recall runs
     # semanticDedupPairs at K=4096, superProbes=2) must notice the
     # production path going DEAD — cell assignment degenerating to
@@ -157,28 +148,23 @@ MUTATIONS = [
      ".select(col(\"id\"), col(\"cell_id\"))",
      ".select(col(\"id\"), col(\"id\").as(\"cell_id\"))",
      "embed_hier_recall"),
-    # Round-14: the global-suffix-ranking gate must be sensitive to
-    # the overlapping-halves final key — dropping its second half
-    # (rank[p + minWidth - w]) groups positions by their first-w-char
-    # prefix only, merging distinct 15-grams that share an 8-char
-    # prefix: grams and counts both come out wrong on the hot-clique
-    # corpus.
-    ("global-sa-second-half-dropped",
+    # Round-18: the exact gram key. Dropping the last full-gram start
+    # of every document loses each doc-final 15-gram; the hot-clique
+    # corpus ends every document with its sentinel, so the sentinel's
+    # last gram disappears from the gate.
+    ("gram-last-start-dropped",
      "src/main/scala/graft/operators/SubstringDedup.scala",
-     "else leadByPos(cur, minWidth - w, block))",
-     "else cur.withColumn(\"r2\", lit(0L)))",
+     "(0 to t.length - minWidth)",
+     "(0 until t.length - minWidth)",
      "doc_hotclique_dups"),
-    # Round-15: the blocked lead's HALO — dropping the copy of each
-    # block's first `width` positions into the previous block starves
-    # every cross-block lead, so ranks near block boundaries collapse
-    # to -1 and boundary-straddling duplicated grams disappear. Caught
-    # by the block=32 halo-parity spec (the sf gate corpus never has a
-    # doc above one 4M block, so the oracle cannot see it).
-    ("halo-copy-dropped",
+    # The key's high byte zeroed: code units that differ only above bit
+    # 7 merge. The gate corpus is BMP-only and mostly ASCII, so the
+    # oracle gates cannot see it; the surrogate-pair specs can.
+    ("gram-key-high-byte-dropped",
      "src/main/scala/graft/operators/SubstringDedup.scala",
-     "val halo = cur.filter(col(\"pos\") >= block && col(\"pos\") % block < width)",
-     "val halo = cur.filter(lit(false))",
-     "test:graft.DedupSpec:halo"),
+     "(c >> 8).toByte",
+     "0",
+     "test:graft.DedupSpec:surrogate"),
     # Round-14: the NaN-equality policy itself — silently reverting
     # distinctNanUnequal to Spark's default ALL_EQUAL distinct
     # collapses every per-priority NaN group to one surviving row;
