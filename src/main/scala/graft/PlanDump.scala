@@ -7,6 +7,24 @@ package graft
   * banding kernel once). Regenerate after plan-affecting changes:
   * `sbt "runMain graft.PlanDump"`. */
 object PlanDump {
+  /** Expression ids (`#123`) and exchange ids (`plan_id=45`) come from
+    * JVM-wide counters, so they shift with everything that ran before;
+    * number each kind in order of first appearance within one plan.
+    * Lambda class names and the per-process scratch root (IoPack's
+    * `graft_io_<pid>`) change every run too and are masked. A second
+    * run then rewrites PLANS.md byte for byte, so its diff shows only
+    * real plan changes. */
+  private def stableIds(plan: String): String = {
+    val masked = plan
+      .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "\\$Lambda")
+      .replaceAll("graft_io_\\d+", "graft_io_<pid>")
+    Seq("#", "plan_id=").foldLeft(masked) { (p, prefix) =>
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      s"$prefix(\\d+)".r.replaceAllIn(p,
+        m => prefix + seen.getOrElseUpdate(m.group(1), seen.size + 1))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -98,7 +116,7 @@ object PlanDump {
             .split("== Initial Plan ==")(0) + "\n"
         } else df.queryExecution
           .explainString(ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n$why\n\n```\n$p```\n")
+      sb.append(s"\n## $name\n\n$why\n\n```\n${stableIds(p)}```\n")
     }
     // opt_runtime_filter needs its confs ACTIVE at explain time (the
     // bloom probe is an optimizer rewrite), and the gate query itself
@@ -120,7 +138,7 @@ object PlanDump {
         sb.append("the lineitem side BEFORE its exchange — shuffle input ")
         sb.append("is cut ahead of the join (oracle-gated answer; confs ")
         sb.append("as in MiscPack.runtimeFilterConfs).\n\n")
-        sb.append(s"```\n$p```\n")
+        sb.append(s"```\n${stableIds(p)}```\n")
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

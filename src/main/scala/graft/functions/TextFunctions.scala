@@ -151,10 +151,12 @@ object TextFunctions {
     bit_count(a.bitwiseXOR(b))
 
   /** Per-row Jaccard similarity of two token-array columns
-    * (nvtext/jaccard.hpp:63), over distinct tokens. */
+    * (nvtext/jaccard.hpp:63), over distinct tokens: each side becomes a
+    * sorted set, then one merge pass (graft.plans.SortedJaccard). */
   def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    inter / (size(array_distinct(a)) + size(array_distinct(b)) - inter)
+    import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
+    def set(c: Column) = expression(array_sort(array_distinct(c)))
+    column(graft.plans.SortedJaccard(set(a), set(b)))
   }
 
   /** Greedy text wrap at `width` characters (strings/wrap.hpp:57):

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,14 +95,26 @@ object Dedup {
         first(col("a.n")).as("n_a"), first(col("b.n")).as("n_b"))
   }
 
+  /** A document's distinct tokens, sorted: the set form the minhash
+    * family bands (a per-seed min ignores order) and verifies over. */
+  private def tokenSet(textCol: String): Column =
+    array_sort(array_distinct(tokens(col(textCol))))
+
+  /** Exact Jaccard of two sorted, duplicate-free token arrays: one merge
+    * pass (graft.plans.SortedJaccard), no per-pair hash sets. */
+  private def sortedJaccard(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
+    column(graft.plans.SortedJaccard(expression(a), expression(b)))
+  }
+
   /** Shared candidate-verify join of the minhash family: attach each
-    * pair's arrays, exact Jaccard, threshold filter. */
+    * pair's sorted sets, exact Jaccard, threshold filter. */
   private def verifyJaccard(cand: DataFrame, arrays: DataFrame,
       arrCol: String, threshold: Double): DataFrame =
     cand
       .join(arrays.select(col("id").as("id_a"), col(arrCol).as("arr_a")), "id_a")
       .join(arrays.select(col("id").as("id_b"), col(arrCol).as("arr_b")), "id_b")
-      .withColumn("jac", jaccard(col("arr_a"), col("arr_b")))
+      .withColumn("jac", sortedJaccard(col("arr_a"), col("arr_b")))
       .filter(col("jac") >= threshold)
       .select(col("id_a"), col("id_b"), col("jac"))
 
@@ -150,7 +162,7 @@ object Dedup {
     // the per-token MD5 + k-remix signature kernel is CPU-dense: guard
     // against unsplittable single-row-group inputs (Spread scaladoc)
     val docs = Spread.spread(df).select(col(idCol).as("id"),
-      array_distinct(tokens(col(textCol))).as("toks"))
+      tokenSet(textCol).as("toks"))
     // Band rows carry ONLY (id, band): the bucket shuffle moves ids,
     // never token arrays (bands× lighter at corpus scale), and the
     // posting-list pair generation runs the fused signature kernel
@@ -175,7 +187,7 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     val docs = Spread.spread(df) // signature kernel: see minhashPairs
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-      .withColumn("sh", shingles("toks", n))
+      .withColumn("sh", array_sort(shingles("toks", n))) // distinct already
     val banded = docs.select(col("id"),
       explode(minhashBandKeys(col("sh"), numHashes, bands)).as("band"))
     val cand = PostingLists.candidatePairs(banded, "id", "band")
@@ -316,14 +328,15 @@ object Dedup {
   }
 
   /** The corpus-side token index for [[nearDupDeltaPairsIndexed]]:
-    * (id_c, toks_c). This plus [[corpusBandIndex]] is exactly the state
-    * a production pipeline persists between crawls — build once, cache
-    * or write as tables, screen every delta/micro-batch against them
-    * without re-running tokenize over the corpus. */
+    * (id_c, toks_c), toks_c each doc's distinct tokens in ascending
+    * order (the verify merges over sorted sets). This plus
+    * [[corpusBandIndex]] is exactly the state a production pipeline
+    * persists between crawls — build once, cache or write as tables,
+    * screen every delta/micro-batch against them without re-running
+    * tokenize over the corpus. */
   def corpusTokenIndex(corpus: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    corpus.select(col(idCol).as("id_c"),
-      array_distinct(tokens(col(textCol))).as("toks_c"))
+    corpus.select(col(idCol).as("id_c"), tokenSet(textCol).as("toks_c"))
 
   /** The corpus-side LSH posting frame: (id_c, band), exploded from the
     * minhash signature of a [[corpusTokenIndex]]. Persisting THIS (not
@@ -335,21 +348,22 @@ object Dedup {
       explode(minhashBandKeys(col("toks_c"), numHashes, bands)).as("band"))
 
   /** [[nearDupDeltaPairs]] against a prebuilt (and typically persisted)
-    * corpus index. The delta side still tokenizes and bands fresh —
+    * corpus index; `corpusToks` must come from [[corpusTokenIndex]]
+    * (sorted sets). The delta side still tokenizes and bands fresh —
     * it is new data by definition. */
   def nearDupDeltaPairsIndexed(corpusToks: DataFrame,
       corpusBands: DataFrame, delta: DataFrame, idCol: String,
       textCol: String, numHashes: Int, bands: Int,
       threshold: Double): DataFrame = {
     val dToks = delta.select(col(idCol).as("id_d"),
-      array_distinct(tokens(col(textCol))).as("toks_d"))
+      tokenSet(textCol).as("toks_d"))
     val dBands = dToks.select(col("id_d"),
       explode(minhashBandKeys(col("toks_d"), numHashes, bands)).as("band"))
     val cand = dBands.join(corpusBands, "band")
       .select(col("id_d"), col("id_c"))
       .dropDuplicates("id_d", "id_c")
     cand.join(dToks, "id_d").join(corpusToks, "id_c")
-      .withColumn("jac", jaccard(col("toks_d"), col("toks_c")))
+      .withColumn("jac", sortedJaccard(col("toks_d"), col("toks_c")))
       .filter(col("jac") >= threshold)
       .select(col("id_d").as("delta_id"), col("id_c").as("corpus_id"),
         col("jac"))

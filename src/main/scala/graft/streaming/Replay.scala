@@ -63,12 +63,26 @@ object Replay {
     *    stop), so recovery loads exactly the latest committed state
     *    version — retaining older versions is pure commit-path cost
     *    here. A rig extended to crash-mid-batch restarts would need
-    *    the retention back. */
+    *    the retention back;
+    *  - checkpoint I/O through [[NioLocalFs]] (the `file:` scheme's
+    *    AbstractFileSystem, which Spark's checkpoint file manager opens
+    *    through FileContext): without libhadoop, Hadoop's LocalFs forks
+    *    `chmod` on every create/mkdir and `readlink` on every rename's
+    *    link checks — about 440 child processes per 4-batch replay
+    *    (ReplaySpec's spawn case: 447 with LocalFs, 2 with NioLocalFs,
+    *    both background Spark work). The session conf reaches
+    *    every Hadoop conf the query derives (offset/commit logs,
+    *    state-schema and operator metadata, the executor-side
+    *    HDFSBackedStateStoreProvider), and FileContext does not cache
+    *    filesystems, so restoring the key ends its reach. The parquet
+    *    sink of [[runWithRestart]] writes through FileSystem, not
+    *    FileContext, and is unaffected. */
   private def withRigConf[A](spark: SparkSession)(body: => A): A = {
     val keys = Seq(
       "spark.sql.shuffle.partitions" -> RigPartitions,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "spark.sql.streaming.minBatchesToRetain" -> "1")
+      "spark.sql.streaming.minBatchesToRetain" -> "1",
+      "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {

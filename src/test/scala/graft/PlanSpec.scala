@@ -342,6 +342,13 @@ class PlanSpec extends AnyFunSuite {
       s"fused minhash kernel must be planned once:\n$p")
   }
 
+  test("doc_minhash_pairs verifies Jaccard with the sorted-set merge kernel") {
+    val p = SparkEntry.queries("doc_minhash_pairs")(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("sortedjaccard("), s"merge kernel missing:\n$p")
+    assert(!p.contains("array_intersect"), s"hash-set verify planned:\n$p")
+  }
+
   test("no gated query scans a full fact-table schema (column pruning sweep)") {
     // every parquet scan in every query must prune: reading l_comment
     // AND l_shipmode (or o_comment AND o_clerk, or all five event

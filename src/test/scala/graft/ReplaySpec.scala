@@ -48,4 +48,38 @@ class ReplaySpec extends AnyFunSuite {
     }
     assert(finalState(1) == finalState(3))
   }
+
+  test("rig checkpoint I/O spawns no process") {
+    // /proc/stat's `processes` counts every task created since boot,
+    // machine-wide, threads included: take this JVM's own thread starts
+    // off it and what is left is child processes (plus co-tenant noise).
+    // Without libhadoop, Hadoop's LocalFs forks chmod / readlink around
+    // every checkpoint file (~440 children, each with a stderr reader
+    // thread, for this replay); the rig's NioLocalFs does that I/O
+    // in-process
+    val stat = java.nio.file.Paths.get("/proc/stat")
+    assume(java.nio.file.Files.isReadable(stat), "needs Linux /proc/stat")
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    def forks(): Long = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(stat).asScala
+        .collectFirst { case l if l.startsWith("processes ") =>
+          l.split("\\s+")(1).toLong }.get - threads.getTotalStartedThreadCount
+    }
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val rows = (0 until 400).map(i =>
+      (new java.sql.Timestamp(t0 + i * 60000L), (i % 37).toLong, s"e${i % 3}"))
+    val before = forks()
+    val out = graft.streaming.Replay.run(spark,
+      graft.streaming.Replay.timeSlices(rows, 4), "append") { ds =>
+      graft.streaming.StatefulOps.streamingDedup(
+        ds.toDF("ts", "user_id", "event_type"), "ts", "40 days",
+        Seq("user_id", "event_type"))
+    }.count()
+    val spawned = forks() - before
+    assert(out == 37 * 3, "every (user, event) key emitted once")
+    info(s"one 4-batch replay started $spawned processes")
+    assert(spawned < 100, s"one 4-batch replay started $spawned processes")
+  }
 }

@@ -248,6 +248,26 @@ MUTATIONS = [
      'col("__s") === 0 && col("__n1") >= 1)',
      'col("__s") === 0 && col("__n1") >= 2)',
      "doc_contaminated_spans"),
+    # The replay rig's checkpoint I/O back on Hadoop's LocalFs: ~440
+    # chmod / readlink children per replay again.
+    ("rig-nio-fs-dropped",
+     "src/main/scala/graft/streaming/Replay.scala",
+     ',\n      "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)',
+     ")",
+     "test:graft.ReplaySpec:spawns"),
+    # The merge skips the next left element after a match, so shared
+    # tokens go uncounted. (Advancing only i on a match is an equivalent
+    # mutant on duplicate-free sets: the next compare advances j.)
+    ("sorted-jaccard-merge-skips",
+     "src/main/scala/graft/plans/SortedJaccard.scala",
+     "if (c == 0) { inter += 1; i += 1; j += 1 }",
+     "if (c == 0) { inter += 1; i += 2; j += 1 }",
+     "doc_minhash_pairs"),
+    ("sorted-jaccard-merge-skips-property",
+     "src/main/scala/graft/plans/SortedJaccard.scala",
+     "if (c == 0) { inter += 1; i += 1; j += 1 }",
+     "if (c == 0) { inter += 1; i += 2; j += 1 }",
+     "test:graft.PropertySpec:SortedJaccard"),
 ]
 
 
