@@ -24,7 +24,6 @@ final case class GFrame(df: DataFrame) {
   def assign(name: String, c: Column): GFrame = GFrame(df.withColumn(name, c))
   def rename(mapping: (String, String)*): GFrame =
     GFrame(mapping.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) })
-  def drop(cols: String*): GFrame = GFrame(df.drop(cols: _*))
   def query(cond: Column): GFrame = GFrame(df.filter(cond))
   def query(sqlCond: String): GFrame = GFrame(df.filter(sqlCond))
   def astype(colName: String, to: String): GFrame =
@@ -33,7 +32,6 @@ final case class GFrame(df: DataFrame) {
   // ---- ordering / slicing ----
   def sortValues(by: String, ascending: Boolean = true): GFrame =
     GFrame(df.orderBy(if (ascending) col(by).asc else col(by).desc))
-  def head(n: Int): GFrame = GFrame(df.limit(n))
   /** Positional row slice [start, end) in the frame's CURRENT order —
     * cudf's iloc. Like the reference (and pandas), only meaningful after
     * an explicit sort; plans as GlobalLimit+offset, not a full collect. */
@@ -41,28 +39,15 @@ final case class GFrame(df: DataFrame) {
     GFrame(df.offset(start).limit(end - start))
   def nlargest(n: Int, by: String): GFrame =
     GFrame(df.orderBy(col(by).desc).limit(n))
-  def nsmallest(n: Int, by: String): GFrame =
-    GFrame(df.orderBy(col(by).asc).limit(n))
 
   // ---- joins (core/join/join.py merge) ----
   def merge(other: GFrame, on: Seq[String], how: String = "inner"): GFrame =
     GFrame(df.join(other.df, on, how))
-  /** Band join: all pairs with |this.`leftCol` − other.`rightCol`| <
-    * `width` (conditional_join.hpp's inequality pair), planned as a
-    * bucketed hash equi-join — never a broadcast nested loop or
-    * cartesian product, so BOTH sides may be fact-sized. Optional
-    * `keys` are exact-match preconditions (same-user bands etc.). */
-  def bandJoin(other: GFrame, leftCol: String, rightCol: String,
-      width: Double, keys: Seq[String] = Nil): GFrame =
-    GFrame(graft.operators.IntervalJoin.bandJoin(
-      df, leftCol, other.df, rightCol, width, keys))
 
   // ---- groupby (core/groupby/groupby.py) ----
   def groupby(keys: String*): GGroupBy = GGroupBy(df, keys)
 
   // ---- dedup / nulls (stream_compaction, replace.hpp) ----
-  def dropDuplicates(subset: String*): GFrame =
-    GFrame(if (subset.isEmpty) df.dropDuplicates() else df.dropDuplicates(subset))
   def dropDuplicatesKeepFirst(subset: Seq[String], orderBy: String): GFrame = {
     val w = Window.partitionBy(subset.map(col): _*).orderBy(col(orderBy))
     GFrame(df.withColumn("__rn", row_number().over(w))
@@ -89,8 +74,6 @@ final case class GFrame(df: DataFrame) {
       aggfunc: String = "sum"): GFrame =
     GFrame(df.groupBy(col(index)).pivot(columns)
       .agg(expr(s"$aggfunc($values)")))
-  def getDummies(colName: String, values: Seq[String]): GFrame =
-    GFrame(Reshape.oneHot(df, colName, values))
 
   // ---- grouped time-series helpers (core/window, groupby scan/shift/
   //      diff/pct_change/cumsum — SURVEY §2.4 grouped scans) ----
@@ -118,14 +101,6 @@ final case class GFrame(df: DataFrame) {
     GFrame(df.withColumn(valueCol,
       when(col(valueCol).isNull, lit(null))
         .otherwise(greatest(least(col(valueCol), lit(hi)), lit(lo)))))
-  /** Series.interpolate (pandas method='index'): linear fill of nulls
-    * along `axisCol` per partition; leading nulls stay null, trailing
-    * nulls forward-fill. */
-  def interpolate(valueCol: String, axisCol: String,
-      partitionBy: Seq[String]): GFrame =
-    GFrame(graft.operators.Interpolate.linear(df, valueCol, axisCol,
-      partitionBy))
-
   /** rolling(n).mean/min/max analog (rolling_window, rolling.hpp:194):
     * trailing n-row frame per group; min_periods=1 semantics. */
   def rolling(valueCol: String, n: Int, partitionBy: Seq[String],
@@ -213,23 +188,10 @@ final case class GFrame(df: DataFrame) {
   def valueCounts(colName: String): GFrame =
     GFrame(df.groupBy(col(colName)).agg(count(lit(1)).as("count"))
       .orderBy(col("count").desc, col(colName)))
-  def describe(cols: String*): GFrame = GFrame(df.describe(cols: _*))
 
   // ---- text/LLM pipeline shortcuts (north star ops as one-liners) ----
   def dedupExact(idCol: String, textCol: String): GFrame =
     GFrame(Dedup.exactSurvivors(df, idCol, textCol))
-  def nearDupPairs(idCol: String, textCol: String, threshold: Double): GFrame =
-    GFrame(Dedup.minhashPairs(df, idCol, textCol, threshold = threshold))
-  /** Embedding-cosine near-dup pairs via multi-table sign-LSH +
-    * exact-cosine verify (Similarity.cosineNearDupPairs). */
-  def nearDupPairsEmbedding(idCol: String, vecCol: String,
-      threshold: Double): GFrame =
-    GFrame(Similarity.cosineNearDupPairs(df, idCol, vecCol, threshold))
-  /** Order-sensitive near-dup pairs over word n-gram shingles
-    * (minhash_ngrams). */
-  def nearDupPairsNgrams(idCol: String, textCol: String, n: Int = 3,
-      threshold: Double = 0.8): GFrame =
-    GFrame(Dedup.minhashNgramPairs(df, idCol, textCol, n, threshold = threshold))
   /** Every duplicated minWidth-gram corpus-wide with its exact
     * occurrence count — the exact-gram-key screen
     * (nvtext resolve_duplicates canonicalized to grams;
@@ -245,21 +207,6 @@ final case class GFrame(df: DataFrame) {
   def contaminationGrams(other: GFrame, idCol: String, textCol: String,
       minWidth: Int = 15): GFrame =
     GFrame(graft.operators.SubstringDedup.duplicatedGramsPair(
-      df, other.df, idCol, textCol, minWidth))
-  /** Maximal duplicated spans per document — the deletion list a
-    * training-data dedup pass cuts: every maximal [start, end) range
-    * covered by corpus-duplicated minWidth-grams (adjacent covers
-    * merged). */
-  def duplicatedSpans(idCol: String, textCol: String,
-      minWidth: Int = 15): GFrame =
-    GFrame(graft.operators.SubstringDedup.duplicatedSpans(
-      df, idCol, textCol, minWidth))
-  /** Decontamination deletion list: maximal ranges of THIS frame's
-    * documents covered by minWidth-grams also present in `other` —
-    * cut them and no minWidth-gram bridges into `other`. */
-  def contaminatedSpans(other: GFrame, idCol: String, textCol: String,
-      minWidth: Int = 15): GFrame =
-    GFrame(graft.operators.SubstringDedup.contaminatedSpans(
       df, other.df, idCol, textCol, minWidth))
   /** All unordered co-occurring (id_a, id_b) pairs sharing a key —
     * market baskets, band buckets, cluster cells. One posting-list
@@ -287,8 +234,6 @@ final case class GFrame(df: DataFrame) {
   /** Per-row repeat by a count column (cudf filling.hpp:90). */
   def repeatRows(countCol: String, repCol: String = "rep"): GFrame =
     GFrame(Reshape.repeatRows(df, col(countCol), repCol))
-  def interleave(idCol: String, cols: Seq[String]): GFrame =
-    GFrame(Reshape.interleave(df, idCol, cols))
   /** byte_cast (cudf reshape.hpp:84): numeric column → raw bytes. */
   def byteCast(c: String, bigEndian: Boolean = true): GFrame =
     GFrame(df.withColumn(s"${c}_bytes",
@@ -312,35 +257,6 @@ final case class GFrame(df: DataFrame) {
       overlap: Int = 0): GFrame =
     GFrame(graft.operators.TextPipeline.chunkDocuments(
       df, idCol, textCol, chunkSize, overlap))
-  def redactPii(textCol: String): GFrame =
-    GFrame(graft.operators.TextPipeline.redactPii(df, textCol))
-  def bertEncode(idCol: String, textCol: String, vocab: Seq[String],
-      maxLen: Int): GFrame =
-    GFrame(graft.operators.TextPipeline.bertEncode(df, idCol, textCol,
-      vocab, maxLen))
-  def packSequences(idCol: String, textCol: String, budgetTokens: Int,
-      groups: Int = 32): GFrame =
-    GFrame(graft.operators.TextPipeline.packSequences(df, idCol, textCol,
-      budgetTokens, groups))
-  def tfidf(idCol: String, textCol: String): GFrame =
-    GFrame(graft.operators.TextPipeline.tfidf(df, idCol, textCol))
-  /** Sentence segmentation into an array column. */
-  def sentences(textCol: String, outCol: String = "sentences"): GFrame =
-    GFrame(df.withColumn(outCol,
-      graft.functions.TextFunctions.sentences(col(textCol))))
-  /** Language-ID with confidence: adds lang / hits / margin columns. */
-  def langIdMargin(textCol: String): GFrame = {
-    val m = graft.functions.TextFunctions.langIdWithMargin(
-      graft.functions.TextFunctions.tokens(col(textCol)))
-    GFrame(df.withColumn("_m", m)
-      .withColumn("lang_detected", col("_m.lang"))
-      .withColumn("lang_hits", col("_m.hits"))
-      .withColumn("lang_margin", col("_m.margin"))
-      .drop("_m"))
-  }
-  /** Join-key skew profile (pre-join shuffle/broadcast/salt decision). */
-  def joinKeyProfile(keyCol: String, topK: Int = 5): GFrame =
-    GFrame(graft.operators.Validate.joinKeyProfile(df, keyCol, topK))
   /** Corpus n-gram diversity (distinct-n) per group, n = 1..maxN. */
   def ngramDiversity(groupCol: String, textCol: String,
       maxN: Int = 3): GFrame =
@@ -376,11 +292,6 @@ final case class GFrame(df: DataFrame) {
       delimRegex: String = "\n", joinSep: String = "\n"): GFrame =
     GFrame(graft.operators.SegmentDedup.dedupSegmentsKeepFirst(
       df, idCol, textCol, delimRegex, joinSep))
-  def lineScreen(idCol: String, textCol: String,
-      delimRegex: String = "\n", joinSep: String = "\n",
-      minDocs: Long = 1): graft.operators.IngestScreen =
-    graft.operators.SegmentDedup.segmentScreenBatch(
-      df, idCol, textCol, delimRegex, joinSep, minDocs)
   def fuzzyJoin(idCol: String, keyCol: String, other: GFrame,
       otherId: String, otherKey: String, k: Int = 1): GFrame =
     GFrame(graft.operators.FuzzyJoin.editDistanceJoin(
@@ -389,14 +300,6 @@ final case class GFrame(df: DataFrame) {
       dictKey: String, k: Int = 1): GFrame =
     GFrame(graft.operators.FuzzyJoin.closestMatch(
       df, idCol, keyCol, dict.df, dictKey, k))
-  /** Streaming typo-variant gate indexed over THIS frame's keys. */
-  def fuzzyScreen(keyCol: String, k: Int = 1): graft.operators.IngestScreen =
-    graft.operators.FuzzyJoin.fuzzyScreenBatch(df, keyCol, k)
-  def jaroWinklerBlocked(keyCol: String, blockKey: Column => Column,
-      threshold: Double): GFrame =
-    GFrame(graft.operators.FuzzyJoin.jaroWinklerBlockedJoin(
-      df, keyCol, blockKey, threshold))
-  /** Record-linkage resolution: best in-block JW match per key. */
   /** Record-linkage best match. `excludeExact` defaults true here (the
     * facade's common call is SELF-linkage, frame against itself); pass
     * false when `dict` is a separate reference table — an exact dict
@@ -469,25 +372,6 @@ final case class GFrame(df: DataFrame) {
       .withColumn("diff_est", KmvSetEst.diff(col(sketchA), col(sketchB)))
       .withColumn("jaccard_est", KmvSetEst.jaccard(col(sketchA), col(sketchB))))
   }
-  /** Space-Saving heavy hitters: top-k values with estimate + error
-    * (exact when m ≥ distinct; plans/SpaceSavingAgg). */
-  def topkHeavy(valueCol: String, m: Int = 64, k: Int = 10): GFrame =
-    GFrame(df.agg(
-        graft.plans.SpaceSavingTopK.of(col(valueCol), m, k).as("tk"))
-      .select(posexplode(col("tk")))
-      .select((col("pos") + 1).as("rank"), col("col.term").as("term"),
-        col("col.cnt").as("cnt"), col("col.err").as("err")))
-  /** Regular-grid resample + forward fill (operators/Resample). */
-  /** Between-observations TWAP per (key, bucket); exact-decimal v·Δt. */
-  def twap(keyCol: String, tsCol: String, valueCol: String,
-      tieBreakCol: String, bucketMicros: Long): GFrame =
-    GFrame(graft.operators.Resample.twap(df, keyCol, tsCol, valueCol,
-      tieBreakCol, bucketMicros))
-  /** In-span buckets with no observations (coverage-gap report). */
-  def missingBuckets(keyCol: String, tsCol: String,
-      bucketMicros: Long): GFrame =
-    GFrame(graft.operators.Resample.missingBuckets(df, keyCol, tsCol,
-      bucketMicros))
   def resampleFfill(keyCol: String, tsCol: String, valueCol: String,
       tieCol: String, stepMicros: Long): GFrame =
     GFrame(graft.operators.Resample.resampleFfill(df, keyCol, tsCol,
@@ -504,27 +388,12 @@ final case class GFrame(df: DataFrame) {
       parentKey))
   def mergeChanges(changes: GFrame, keyCol: String, opCol: String): GFrame =
     GFrame(graft.operators.Cdc.merge(df, changes.df, keyCol, opCol))
-  def compactChangeLog(keyCol: String, seqCol: String,
-      opCol: String): GFrame =
-    GFrame(graft.operators.Cdc.compactLog(df, keyCol, seqCol, opCol))
   def trainTestSplitLeakFree(idCol: String, textCol: String, seed: String,
       cuts: Seq[(String, Double)]): GFrame =
     GFrame(graft.operators.Curation.assignSplitLeakFree(df, idCol,
       textCol, seed, cuts))
-  def writeZOrdered(path: String, dims: Seq[String], bits: Int = 16,
-      files: Int = 16): GFrame =
-    GFrame(graft.sources.Layout.writeZOrdered(df, path, dims, bits, files))
 
   // ---- corpus assembly (graft.operators.Curation) ----
-  /** Deterministic train/val/test split; cuts are cumulative upper
-    * bounds, e.g. Seq("train" -> 0.8, "val" -> 0.9, "test" -> 1.0). */
-  def trainTestSplit(idCol: String, seed: String,
-      cuts: Seq[(String, Double)]): GFrame =
-    GFrame(graft.operators.Curation.assignSplit(df, idCol, seed, cuts))
-  /** At most k rows per group, chosen by stable hash of the id. */
-  def sampleByGroup(groupCol: String, idCol: String, k: Int,
-      seed: String): GFrame =
-    GFrame(graft.operators.Curation.sampleByGroup(df, groupCol, idCol, k, seed))
   /** Weighted priority sampling (Ohlsson/Duffield): k rows drawn
     * ∝ weightCol, deterministic in (seed, id), no global sort. */
   def sampleWeighted(idCol: String, weightCol: String, k: Int,
@@ -536,19 +405,6 @@ final case class GFrame(df: DataFrame) {
       weightCol: String, k: Int, seed: String): GFrame =
     GFrame(graft.operators.Curation.sampleWeightedByGroup(df, groupCol,
       idCol, weightCol, k, seed))
-  /** Deterministic contrastive negatives: k partner ids per anchor. */
-  def sampleNegatives(idCol: String, k: Int, seed: String): GFrame =
-    GFrame(graft.operators.Curation.sampleNegatives(df, idCol, k, seed))
-  /** PageRank over (srcCol, dstCol) edges — link-based quality prior.
-    * `exact = true` = bit-replayable fixed-point sums (oracle mode). */
-  def pageRank(srcCol: String, dstCol: String, damping: Double = 0.85,
-      iters: Int = 10, exact: Boolean = false): GFrame =
-    GFrame(graft.operators.LinkAnalysis.pageRank(df, srcCol, dstCol,
-      damping, iters, exact))
-  /** Contingency table with exact independence diagnostics —
-    * e_num = r·c and resid_num = n·o − r·c per cell, no division. */
-  def contingency(aCol: String, bCol: String): GFrame =
-    GFrame(graft.operators.Stats.contingency(df, aCol, bCol))
   /** Mann-Whitney U rank-sum test between two groups of an integral
     * value column — count-based (no global rank sort); doubled-U and
     * tie-correction exact integers plus the normal-approximation z. */
@@ -569,62 +425,11 @@ final case class GFrame(df: DataFrame) {
     * non-image mimes pass through. */
   def resizeImages(dstW: Int, dstH: Int): GFrame =
     GFrame(graft.operators.Multimodal.resizeImages(df, dstW, dstH))
-  /** Per-group mean embedding (class prototypes), one row per
-    * (group, dim); dyadic fixed-point sums — partitioning-independent. */
-  def centroidsByGroup(groupCol: String, vecCol: String): GFrame =
-    GFrame(graft.operators.Embeddings.centroidsByGroup(df, groupCol, vecCol))
-  /** BFS hop distance from `sourceId` — (id, level) for reachable
-    * nodes; frontier-sized shuffles, edges partitioned once. */
-  def bfsLevels(srcCol: String, dstCol: String, sourceId: Long,
-      maxLevels: Int = 30): GFrame =
-    GFrame(graft.operators.LinkAnalysis.bfsLevels(df, srcCol, dstCol,
-      sourceId, maxLevels))
-  /** Per-node triangle count + clustering coefficient (degree-oriented
-    * wedge join — fan-out bounded by oriented out-degree). */
-  def triangleStats(srcCol: String, dstCol: String): GFrame =
-    GFrame(graft.operators.LinkAnalysis.triangleStats(df, srcCol, dstCol))
-  /** Pairwise association rules (support/confidence/lift, exact
-    * rationals) over distinct items per basket key. */
-  def associationRules(basketCols: Seq[String], itemCol: String,
-      minCount: Long = 1L): GFrame =
-    GFrame(graft.operators.MarketBasket.associationRules(df, basketCols,
-      itemCol, minCount))
-  /** Per-group KS + total-variation drift vs a reference group
-    * (exact integer-numerator rationals; no PSI/ln). */
-  def driftReport(groupCol: String, valueCol: String, refGroup: String,
-      binWidth: Long = 8): GFrame =
-    GFrame(graft.operators.Curation.driftReport(df, groupCol, valueCol,
-      refGroup, binWidth))
   /** Per-group type-1 weighted percentiles (integer-exact thresholds). */
   def weightedPercentiles(groupCol: String, valueCol: String,
       weightCol: String, ps: Seq[(String, Long, Long)]): GFrame =
     GFrame(graft.operators.Stats.weightedPercentiles(df, groupCol,
       valueCol, weightCol, ps))
-  /** Weighted mixture sampling: keep fraction weights(source) per source. */
-  def mixCorpora(sourceCol: String, idCol: String,
-      weights: Map[String, Double], seed: String): GFrame =
-    GFrame(graft.operators.Curation.mixCorpora(df, sourceCol, idCol,
-      weights, seed))
-  /** Scrub docs sharing ≥ minShared winnow fingerprints with `evalDf`. */
-  def decontaminate(evalDf: GFrame, idCol: String, textCol: String,
-      minShared: Int = 3): GFrame =
-    GFrame(graft.operators.Curation.decontaminate(df, evalDf.toDF,
-      idCol, textCol, minShared))
-  /** Per-group modified z-score (median/MAD robust outlier rule). */
-  def modifiedZByGroup(groupCol: String, valueCol: String,
-      zCol: String = "mz"): GFrame =
-    GFrame(graft.operators.Curation.modifiedZByGroup(df, groupCol,
-      valueCol, zCol))
-  /** Source-interleaved training order (round-robin over sources). */
-  def interleaveBySource(sourceCol: String, idCol: String,
-      seed: String): GFrame =
-    GFrame(graft.operators.Curation.interleaveBySource(df, sourceCol,
-      idCol, seed))
-  /** Per-group quantile (rank) normalization to [0, 1]. */
-  def quantileNormalizeByGroup(groupCol: String, valueCol: String,
-      outCol: String = "qnorm"): GFrame =
-    GFrame(graft.operators.Curation.quantileNormalizeByGroup(df,
-      groupCol, valueCol, outCol))
   /** Keep the top `frac` of rows per group by score (per-source gate). */
   def filterTopFracByGroup(groupCol: String, scoreCol: String,
       frac: Double): GFrame =
@@ -644,27 +449,6 @@ final case class GFrame(df: DataFrame) {
   def curriculumBuckets(scoreCol: String, nBuckets: Int): GFrame =
     GFrame(graft.operators.Curation.curriculumBuckets(df, scoreCol,
       nBuckets))
-  /** Highest-score survivor per duplicate group. */
-  def survivorsByScore(keyCol: String, idCol: String,
-      scoreCol: String): GFrame =
-    GFrame(graft.operators.Curation.survivorsByScore(df, keyCol, idCol,
-      scoreCol))
-  /** Tukey IQR outlier fence on a numeric column (k=1.5 default). */
-  def filterOutliers(valueCol: String, k: Double = 1.5): GFrame =
-    GFrame(graft.operators.Curation.filterOutliersIqr(df, valueCol, k))
-  /** Clamp a numeric column to its [lo, hi] quantiles (row-preserving). */
-  def winsorize(valueCol: String, lo: Double = 0.01,
-      hi: Double = 0.99): GFrame =
-    GFrame(graft.operators.Curation.winsorize(df, valueCol, lo, hi))
-  /** One-row (median, mad) of a numeric column. */
-  def mad(valueCol: String): GFrame =
-    GFrame(graft.operators.Curation.mad(df, valueCol))
-  /** Stable pseudo-random sort key; orderBy it for a seeded shuffle. */
-  def shuffleKey(idCol: String, seed: String): GFrame =
-    GFrame(graft.operators.Curation.shuffleKey(df, idCol, seed))
-  /** Gopher-style duplicate-ngram fractions per document. */
-  def repetitionStats(idCol: String, textCol: String, n: Int = 2): GFrame =
-    GFrame(graft.operators.TextPipeline.repetitionStats(df, idCol, textCol, n))
   /** CCNet-style bigram-LM quality score + OOV rate vs a reference
     * corpus (this frame is scored; `ref` trains the model). */
   def lmScore(idCol: String, textCol: String, ref: GFrame,
@@ -685,27 +469,6 @@ final case class GFrame(df: DataFrame) {
     GFrame(df.withColumn(outCol,
       graft.operators.Embeddings.randomProject(col(vecCol), inDim, outDim,
         seed)))
-  /** SemDeDup-style semantic near-dup pairs (k-means cell blocking).
-    *
-    * Contract note: an EXPLICIT `nCells` always runs the exact flat
-    * argmax assignment — O(nCells·n) distance evaluations. Big-K
-    * callers (nCells ≥ ~4096) who want the O(n·√K) hierarchical
-    * descent must pass `superProbes > 0` (recall-gated lossy regime);
-    * `nCells <= 0` stays corpus-adaptive and picks the path itself. */
-  def semanticDedupPairs(idCol: String, vecCol: String, threshold: Double,
-      nCells: Int, superProbes: Int = 0): GFrame =
-    GFrame(graft.operators.Similarity.semanticDedupPairs(df, idCol, vecCol,
-      threshold, nCells, superProbes = superProbes))
-  /** Diverse coreset: one exemplar per k-means cell + cell population
-    * (SemDeDup's dual). */
-  def semanticExemplars(idCol: String, vecCol: String,
-      nCells: Int): GFrame =
-    GFrame(graft.operators.Similarity.semanticExemplars(df, idCol, vecCol,
-      nCells))
-  /** Incremental ingest: this frame's rows deduped against an already-
-    * ingested corpus (exact digests) and within itself (keep-first). */
-  def dedupAgainst(corpus: GFrame, idCol: String, textCol: String): GFrame =
-    GFrame(graft.operators.Dedup.dedupDelta(corpus.toDF, df, idCol, textCol))
   /** Streaming ingest screens over THIS frame as the static corpus:
     * batch→batch functions for `writeStream.foreachBatch` that admit
     * only novel documents / embeddings (corpus index built and
@@ -733,12 +496,6 @@ final case class GFrame(df: DataFrame) {
   def knn(queries: GFrame, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): GFrame =
     GFrame(Similarity.knnBrute(df, queries.toDF, k, idCol, vecCol))
-  /** Hard negatives: top-k most-similar vectors BELOW a near-dup
-    * ceiling — the false-negative filter of contrastive training. */
-  def hardNegatives(queries: GFrame, k: Int, maxSim: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): GFrame =
-    GFrame(Similarity.hardNegatives(df, queries.toDF, k, maxSim, idCol,
-      vecCol))
   /** Approximate top-k via sign-LSH bucket blocking (the scale path). */
   def knnLsh(queries: GFrame, k: Int, nBits: Int = 12,
       idCol: String = "vec_id", vecCol: String = "embedding"): GFrame =
@@ -768,20 +525,8 @@ final case class GStrOps(gf: GFrame, c: String) {
   private def add(suffix: String, expr: Column): GFrame =
     gf.assign(s"${c}_$suffix", expr)
   def lower(): GFrame = add("lower", org.apache.spark.sql.functions.lower(col(c)))
-  def upper(): GFrame = add("upper", org.apache.spark.sql.functions.upper(col(c)))
-  def len(): GFrame = add("len", length(col(c)))
   def strip(): GFrame = add("strip", trim(col(c)))
   def contains(pat: String): GFrame = add("contains", col(c).contains(pat))
-  def startswith(p: String): GFrame = add("startswith", col(c).startsWith(p))
-  def replace(from: String, to: String): GFrame =
-    add("replace", org.apache.spark.sql.functions.replace(col(c), lit(from), lit(to)))
-  /** cudf s.str.slice(start, stop): 0-based, stop EXCLUSIVE — mapped
-    * onto Spark's 1-based substring(start+1, stop-start) so mechanical
-    * ports keep their indices (the facade's porting contract). */
-  def slice(start: Int, stop: Int): GFrame =
-    add("slice", substring(col(c), start + 1, math.max(stop - start, 0)))
-  def split(sep: String): GFrame =
-    add("split", org.apache.spark.sql.functions.split(col(c), java.util.regex.Pattern.quote(sep)))
   /** cudf s.str.wrap — since r12 the KERNEL-exact char walk
     * (plans.WrapText; asymmetric width caps, words never split), not
     * the regex approximation TextFunctions.wrap keeps for str_extra. */
@@ -791,15 +536,9 @@ final case class GStrOps(gf: GFrame, c: String) {
     add("partition", graft.functions.TextFunctions.strPartition(col(c), sep))
   def rpartition(sep: String): GFrame =
     add("rpartition", graft.functions.TextFunctions.strRpartition(col(c), sep))
-  def findMultiple(targets: Seq[String]): GFrame =
-    add("find", graft.functions.TextFunctions.findMultiple(col(c), targets))
-  def normalize(): GFrame =
-    add("norm", graft.functions.TextFunctions.normalizeText(col(c)))
   def stem(): GFrame =
     add("stem", graft.plans.GraftExpressions.porterStem(col(c)))
   def isalpha(): GFrame = add("isalpha", graft.functions.TextFunctions.isAlpha(col(c)))
-  def isdigit(): GFrame = add("isdigit", graft.functions.TextFunctions.isDigit(col(c)))
-  def isalnum(): GFrame = add("isalnum", graft.functions.TextFunctions.isAlnum(col(c)))
 }
 
 /** Datetime accessor (datetime.hpp extraction/floor surface). */
@@ -807,13 +546,8 @@ final case class GDtOps(gf: GFrame, c: String) {
   private def add(suffix: String, expr: Column): GFrame =
     gf.assign(s"${c}_$suffix", expr)
   def year(): GFrame = add("year", org.apache.spark.sql.functions.year(col(c)))
-  def month(): GFrame = add("month", org.apache.spark.sql.functions.month(col(c)))
-  def day(): GFrame = add("day", dayofmonth(col(c)))
-  def hour(): GFrame = add("hour", org.apache.spark.sql.functions.hour(col(c)))
   def minute(): GFrame = add("minute", org.apache.spark.sql.functions.minute(col(c)))
-  def second(): GFrame = add("second", org.apache.spark.sql.functions.second(col(c)))
   def quarter(): GFrame = add("quarter", org.apache.spark.sql.functions.quarter(col(c)))
-  def dayofyear(): GFrame = add("dayofyear", org.apache.spark.sql.functions.dayofyear(col(c)))
   def floor(unit: String): GFrame = add(s"floor_$unit", date_trunc(unit, col(c)))
   // date_trunc accepts units (quarter) that are not interval-literal
   // units; translate so floor/ceil/round accept the same unit set
@@ -837,12 +571,10 @@ final case class GDtOps(gf: GFrame, c: String) {
       when(unix_micros(col(c)) - unix_micros(fl) <
            unix_micros(next) - unix_micros(col(c)), fl).otherwise(next))
   }
-  def dayofweek(): GFrame = add("dayofweek", weekday(col(c)))
   def isLeapYear(): GFrame = add("is_leap",
     dayofmonth(last_day(make_date(org.apache.spark.sql.functions.year(col(c)),
       lit(2), lit(1)))) === 29)
   def daysInMonth(): GFrame = add("days_in_mo", dayofmonth(last_day(col(c))))
-  def lastDay(): GFrame = add("last_day", last_day(col(c)))
 }
 
 /** Grouped frame: agg with the reference's (column -> aggname) dict shape. */
@@ -854,9 +586,6 @@ final case class GGroupBy(df: DataFrame, keys: Seq[String]) {
     }
     GFrame(df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*))
   }
-  def count(): GFrame =
-    GFrame(df.groupBy(keys.map(col): _*)
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("count")))
   /** pandas groupby().transform: the per-group aggregate broadcast back
     * onto every row — one window, no join back to the input. */
   def transform(colName: String, fn: String): GFrame =
@@ -868,24 +597,6 @@ final case class GGroupBy(df: DataFrame, keys: Seq[String]) {
 object GFrame {
   def readParquet(spark: SparkSession, path: String): GFrame =
     GFrame(spark.read.parquet(path))
-  def readCsv(spark: SparkSession, path: String): GFrame =
-    GFrame(spark.read.option("header", "true").option("inferSchema", "true").csv(path))
-  def readJson(spark: SparkSession, path: String): GFrame =
-    GFrame(spark.read.json(path))
-  def readOrc(spark: SparkSession, path: String): GFrame =
-    GFrame(spark.read.orc(path))
   def concat(frames: Seq[GFrame]): GFrame =
     GFrame(frames.map(_.df).reduce(_.unionByName(_, allowMissingColumns = true)))
-
-  // ---- footer metadata AS TABLES (io/parquet_metadata.hpp,
-  // io/orc_metadata.hpp): counts, sizes, min/max/null statistics read
-  // from footers only — recursive over partitioned layouts, footer
-  // reads distributed over executors past a small-directory threshold
-  def parquetMetadata(spark: SparkSession, path: String): GFrame =
-    GFrame(graft.sources.Layout.parquetMetadata(spark, path))
-  def orcMetadata(spark: SparkSession, path: String): GFrame =
-    GFrame(graft.sources.Layout.orcMetadata(spark, path))
-  /** [[orcMetadata]] at per-stripe grain (parquet's row-group analog). */
-  def orcStripeMetadata(spark: SparkSession, path: String): GFrame =
-    GFrame(graft.sources.Layout.orcStripeMetadata(spark, path))
 }

@@ -96,9 +96,11 @@ object Dedup {
   }
 
   /** A document's distinct tokens, sorted: the set form the minhash
-    * family bands (a per-seed min ignores order) and verifies over. */
+    * family bands (a per-seed min ignores order) and verifies over.
+    * `split` never yields a null token, so sort_array (no comparator
+    * lambda) gives array_sort's order. */
   private def tokenSet(textCol: String): Column =
-    array_sort(array_distinct(tokens(col(textCol))))
+    sort_array(array_distinct(tokens(col(textCol))))
 
   /** Exact Jaccard of two sorted, duplicate-free token arrays: one merge
     * pass (graft.plans.SortedJaccard), no per-pair hash sets. */
@@ -187,7 +189,7 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     val docs = Spread.spread(df) // signature kernel: see minhashPairs
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-      .withColumn("sh", array_sort(shingles("toks", n))) // distinct already
+      .withColumn("sh", sort_array(shingles("toks", n))) // distinct, null-free
     val banded = docs.select(col("id"),
       explode(minhashBandKeys(col("sh"), numHashes, bands)).as("band"))
     val cand = PostingLists.candidatePairs(banded, "id", "band")

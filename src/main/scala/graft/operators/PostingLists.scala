@@ -56,8 +56,10 @@ private[graft] object PostingLists {
     * extra shuffle of the input ahead of the groupBy. */
   def candidatePairs(keyed: DataFrame, idCol: String, keyCol: String,
       distinctIds: Boolean): DataFrame = {
+    // collect_list skips nulls, so sort_array's nulls-first order never
+    // applies and it sorts without array_sort's comparator lambda
     val collected = collect_list(col(idCol))
-    val ids = array_sort(
+    val ids = sort_array(
       if (distinctIds) array_distinct(collected) else collected)
     keyed
       .groupBy(col(keyCol))

@@ -28,12 +28,6 @@ object DoubleMetaphoneImpl {
   private val EsEpEbElEyIbIlInIeEiEr =
     Array("ES", "EP", "EB", "EL", "EY", "IB", "IL", "IN", "IE", "EI", "ER")
 
-  /** Both codes, '|'-joined (primary|alternate), each capped at 4. */
-  def encodeBoth(input: String): String = {
-    val r = run(input)
-    if (r == null) null else r._1 + "|" + r._2
-  }
-
   def primary(input: String): String = {
     val r = run(input); if (r == null) null else r._1
   }

@@ -17,11 +17,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Same double as the hash-set formula for the same integer counts (one
   * int → double division). Nulls: a null array gives null; null
-  * elements sort last (array_sort's order) and match each other, as in
-  * `array_intersect`; two empty sets give null (0/0). Verify queries
-  * over candidate pairs call this directly on their sorted token
-  * arrays; [[graft.functions.TextFunctions.jaccard]] wraps it for
-  * arbitrary arrays. */
+  * elements must sort last (array_sort's order, not sort_array's nulls
+  * first) and match each other, as in `array_intersect`; two empty sets
+  * give null (0/0). Verify queries over candidate pairs call this
+  * directly on their null-free token arrays, sorted with sort_array;
+  * [[graft.functions.TextFunctions.jaccard]] wraps it for arbitrary
+  * arrays, which may hold nulls, so it sorts with array_sort. */
 case class SortedJaccard(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType

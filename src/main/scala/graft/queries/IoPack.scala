@@ -73,13 +73,16 @@ object IoPack extends QueryPack {
        |  ${dsumSql("l_quantity", 2)} AS sum_qty
        |FROM lineitem GROUP BY 1 ORDER BY ship_year""".stripMargin
 
-  /** Avro write → read (avro.hpp:217) over the Hadoop-format bridge
-    * (sources/Avro.scala): primitive columns, nullable unions. */
+  /** Avro write → read (avro.hpp:217) through the `graft-avro`
+    * DataSource (sources/AvroDataSource.scala): a long, a string, a
+    * double and a string key, all four read back and aggregated. */
   def avroRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val slice = Tables.customer(s, dir)
+    val path = scratch("avro_customer")
+    Tables.customer(s, dir)
       .select($"c_custkey", $"c_name", $"c_acctbal", $"c_mktsegment")
-    graft.sources.Avro.roundTrip(slice, scratch("avro_customer"))
+      .write.format("graft-avro").mode("overwrite").save(path)
+    s.read.format("graft-avro").load(path)
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"), dsum($"c_acctbal", 2).as("sum_bal"),
         min($"c_custkey").as("min_key"), max($"c_name").as("max_name"))

@@ -18,10 +18,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Pluggable source via the DataSource V2 API (SURVEY §2.1 "pluggable
-  * source/sink"; the reference's datasource.hpp): a full V2 stack —
-  * TableProvider → Table → ScanBuilder → Batch → PartitionReader — over
-  * Avro container files, usable as `spark.read.format("graft-avro")`.
+/** Avro source/sink (cpp/include/cudf/io/avro.hpp:217 read_avro) and
+  * the engine's pluggable source via the DataSource V2 API (SURVEY §2.1
+  * "pluggable source/sink"; the reference's datasource.hpp): a full V2
+  * stack — TableProvider → Table → ScanBuilder → Batch →
+  * PartitionReader, plus a two-phase-commit BatchWrite — over Avro
+  * container files, usable as `spark.read.format("graft-avro")` and
+  * `df.write.format("graft-avro")`. The `spark-avro` module is absent
+  * from this offline classpath; Avro core is present. Primitive columns
+  * (int/long/float/double/string/boolean) plus nullable unions are
+  * supported — the surface cudf's read_avro supports (avro.hpp: "only
+  * primitive types").
   *
   * Scale shape: one InputPartition per file (Avro blocks make files
   * independently consumable), readers decode on executors, and
@@ -150,7 +157,7 @@ case class AvroWriterFactory(path: String, schemaJson: String,
       DataType.fromJson(schemaJson).asInstanceOf[StructType]
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
       private val conf = AvroDataSource.confFromProps(confProps)
-      private val avro = Avro.avroSchema(sparkSchema)
+      private val avro = AvroDataSource.avroSchema(sparkSchema)
       private val tmp = new Path(AvroBatchWrite.stagingDir(path, jobId),
         s"part-$partitionId-$taskId.avro")
       private val fs = tmp.getFileSystem(conf)
@@ -190,6 +197,38 @@ case class AvroWriterFactory(path: String, schemaJson: String,
 }
 
 object AvroDataSource {
+  private def avroType(dt: DataType): org.apache.avro.Schema = {
+    import org.apache.avro.Schema.{create, Type}
+    dt match {
+      case IntegerType => create(Type.INT)
+      case LongType    => create(Type.LONG)
+      case FloatType   => create(Type.FLOAT)
+      case DoubleType  => create(Type.DOUBLE)
+      case StringType  => create(Type.STRING)
+      case BooleanType => create(Type.BOOLEAN)
+      case other => throw new IllegalArgumentException(
+        s"graft-avro supports primitive columns only (avro.hpp), got $other")
+    }
+  }
+
+  /** Spark StructType → Avro record schema (nullable → union[null, T]). */
+  private[sources] def avroSchema(schema: StructType): org.apache.avro.Schema = {
+    import org.apache.avro.Schema
+    val fields = new java.util.ArrayList[Schema.Field]()
+    schema.fields.foreach { f =>
+      val base = avroType(f.dataType)
+      if (f.nullable) {
+        val union = Schema.createUnion(java.util.Arrays.asList(
+          Schema.create(Schema.Type.NULL), base))
+        fields.add(new Schema.Field(f.name, union, null,
+          Schema.Field.NULL_DEFAULT_VALUE))
+      } else fields.add(new Schema.Field(f.name, base, null, null))
+    }
+    val rec = Schema.createRecord("graft_record", null, "graft", false)
+    rec.setFields(fields)
+    rec
+  }
+
   private[sources] def sparkType(s: org.apache.avro.Schema): DataType = {
     import org.apache.avro.Schema.Type._
     s.getType match {

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.StructType
   * maxPartitionBytes), and predicate pushdown in parquet/orc footers.
   *
   * Avro (avro.hpp:217): the `spark-avro` DataSource module is absent
-  * from this offline classpath, so [[Avro]] implements read/write over
-  * the Hadoop-format bridge with the avro core + avro-mapred jars that
-  * ARE present. Kafka (custreamz) maps to readStream.format("kafka");
+  * from this offline classpath, so [[AvroDataSource]] registers the
+  * `graft-avro` DataSource V2 format over the avro core jar that IS
+  * present. Kafka (custreamz) maps to readStream.format("kafka");
   * no broker in this environment — exercised via MemoryStream.
   */
 object Io {

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deterministic micro-batch replay harness — the evidence bridge that
@@ -116,26 +117,18 @@ object Replay {
     val out = build(input.toDS())
     val schema = out.schema
     val buf = ArrayBuffer.empty[Row]
-    val q = out.writeStream.outputMode(outputMode)
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        val rows = df.collect()
-        buf.synchronized {
-          buf ++= rows.map(r => Row.fromSeq(id +: r.toSeq))
+    feed(input, batches) {
+      out.writeStream.outputMode(outputMode)
+        .foreachBatch { (df: Dataset[Row], id: Long) =>
+          val rows = df.collect()
+          buf.synchronized {
+            buf ++= rows.map(r => Row.fromSeq(id +: r.toSeq))
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    try {
-      batches.foreach { b =>
-        if (b.nonEmpty) input.addData(b)
-        q.processAllAvailable()
-      }
-      q.processAllAvailable()
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.asJava,
-      StructType(StructField("batch_id", LongType, nullable = false) +:
-        schema.fields))
+        .start()
+    }
+    withBatchId(spark, buf, schema)
   }
 
   /** [[run]] for the foreachBatch-shaped ingest screens: feed `batches`
@@ -154,29 +147,21 @@ object Replay {
     val input = MemoryStream[In]
     val buf = ArrayBuffer.empty[Row]
     @volatile var schema: StructType = null
-    val q = input.toDS().toDF().writeStream
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        val out = f(df)
-        val rows = out.collect()
-        buf.synchronized {
-          if (schema == null) schema = out.schema
-          buf ++= rows.map(r => Row.fromSeq(id +: r.toSeq))
+    feed(input, batches) {
+      input.toDS().toDF().writeStream
+        .foreachBatch { (df: Dataset[Row], id: Long) =>
+          val out = f(df)
+          val rows = out.collect()
+          buf.synchronized {
+            if (schema == null) schema = out.schema
+            buf ++= rows.map(r => Row.fromSeq(id +: r.toSeq))
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    try {
-      batches.foreach { b =>
-        if (b.nonEmpty) input.addData(b)
-        q.processAllAvailable()
-      }
-      q.processAllAvailable()
-    } finally q.stop()
+        .start()
+    }
     require(schema != null, "no micro-batch ran")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.asJava,
-      StructType(StructField("batch_id", LongType, nullable = false) +:
-        schema.fields))
+    withBatchId(spark, buf, schema)
   }
 
   /** [[run]] with a CRASH-RESTART in the middle: the first schedule
@@ -200,21 +185,33 @@ object Replay {
     def start() = build(input.toDS()).writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append").format("parquet").option("path", out).start()
-    val q1 = start()
-    try {
-      firstBatches.foreach { b =>
-        if (b.nonEmpty) input.addData(b)
-        q1.processAllAvailable()
-      }
-    } finally q1.stop()
-    val q2 = start()
-    try {
-      secondBatches.foreach { b =>
-        if (b.nonEmpty) input.addData(b)
-        q2.processAllAvailable()
-      }
-      q2.processAllAvailable()
-    } finally q2.stop()
+    feed(input, firstBatches)(start())
+    feed(input, secondBatches)(start())
     spark.read.parquet(out)
+  }
+
+  /** Start `query`, feed it `batches` one processAllAvailable at a time
+    * (an empty batch only triggers), drain once more so watermark-
+    * advance-only batches run, and stop it whatever happens. */
+  private def feed[In](input: MemoryStream[In], batches: Seq[Seq[In]])(
+      query: => StreamingQuery): Unit = {
+    val q = query
+    try {
+      batches.foreach { b =>
+        if (b.nonEmpty) input.addData(b)
+        q.processAllAvailable()
+      }
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** The captured micro-batch rows as one DataFrame, each prefixed with
+    * the `batch_id` that emitted it. */
+  private def withBatchId(spark: SparkSession, rows: ArrayBuffer[Row],
+      schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava,
+      StructType(StructField("batch_id", LongType, nullable = false) +:
+        schema.fields))
   }
 }

@@ -51,30 +51,25 @@ class IoSpec extends AnyFunSuite {
       java.sql.Timestamp.valueOf("1996-02-29 13:14:15.123456"))
   }
 
-  test("avro round trip preserves primitives and nulls over the Hadoop bridge") {
-    import graft.sources.Avro
-    val df = Seq(
-      (1L, Some("alpha"), Some(1.25), true),
-      (2L, None, Some(-2.5e-10), false),
-      (3L, Some("gamma"), None, true)
-    ).toDF("k", "s", "v", "b")
-    val back = Avro.roundTrip(df, tmp("avro")).orderBy("k").collect()
-    assert(back.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-    assert(back(0).getString(1) == "alpha" && back(1).isNullAt(1))
-    assert(back(0).getDouble(2) == 1.25 && back(2).isNullAt(2))
-    assert(back.map(_.getBoolean(3)).toSeq == Seq(true, false, true))
-    // overwrite semantics: second write replaces, not appends
-    val again = Avro.roundTrip(df, tmp("avro2"))
-    assert(again.count() == 3)
-  }
-
   test("graft-avro DataSource V2 reads with schema inference and column pruning") {
-    import graft.sources.Avro
-    val df = Seq((1L, "alpha", 1.5), (2L, "beta", -0.25), (3L, "gamma", 2.0))
-      .toDF("k", "s", "v")
-    val path = tmp("avro_v2")
-    Avro.write(df, path)
-    val back = spark.read.format("graft-avro").load(path)
+    // fixture written with avro core's own writer, not graft-avro's
+    import org.apache.avro.SchemaBuilder
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = SchemaBuilder.record("fixture").fields()
+      .requiredLong("k").requiredString("s").requiredDouble("v").endRecord()
+    val rows = Seq((1L, "alpha", 1.5), (2L, "beta", -0.25), (3L, "gamma", 2.0))
+    val dir = Files.createTempDirectory("graft_avro_v2")
+    val writer = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](schema))
+      .create(schema, dir.resolve("part-0.avro").toFile)
+    try rows.foreach { case (k, s, v) =>
+      val rec = new GenericData.Record(schema)
+      rec.put("k", k); rec.put("s", s); rec.put("v", v)
+      writer.append(rec)
+    } finally writer.close()
+    val df = rows.toDF("k", "s", "v")
+    val back = spark.read.format("graft-avro").load(dir.toString)
     assert(back.schema.fieldNames.toSeq == Seq("k", "s", "v"))
     assert(back.orderBy("k").collect().toSeq == df.orderBy("k").collect().toSeq)
     // column pruning reaches the scan: ReadSchema shows only (k)
@@ -85,13 +80,20 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("graft-avro DSv2 write path: df.write.format round-trips with overwrite") {
-    val df = Seq((1L, "a", 1.5), (2L, "b", -0.25)).toDF("k", "s", "v")
+    // every supported primitive, and a null in each nullable column
+    val df = Seq(
+      (1L, Some(10), Some(1.5f), Some(1.25), Some("alpha"), Some(true)),
+      (2L, None, Some(-0.5f), Some(-2.5e-10), None, Some(false)),
+      (3L, Some(-7), None, None, Some("gamma"), None)
+    ).toDF("k", "i", "f", "v", "s", "b")
     val path = tmp("avro_v2_w")
     df.write.format("graft-avro").mode("overwrite").save(path)
     val back = spark.read.format("graft-avro").load(path)
+    assert(back.schema == df.schema, back.schema.treeString)
     assert(back.orderBy("k").collect().toSeq == df.orderBy("k").collect().toSeq)
     // overwrite replaces, not appends
-    val df2 = Seq((9L, "z", 0.0)).toDF("k", "s", "v")
+    val df2 = Seq((9L, Some(0), Some(0f), Some(0.0), Some("z"), Some(false)))
+      .toDF("k", "i", "f", "v", "s", "b")
     df2.write.format("graft-avro").mode("overwrite").save(path)
     val back2 = spark.read.format("graft-avro").load(path)
     assert(back2.collect().toSeq == df2.collect().toSeq)

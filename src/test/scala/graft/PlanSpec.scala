@@ -349,6 +349,19 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("array_intersect"), s"hash-set verify planned:\n$p")
   }
 
+  test("doc_minhash_pairs and doc_jaccard_pairs sort without array_sort's lambda") {
+    // array_sort's default comparator is an interpreted lambda
+    // (CodegenFallback); their null-free token sets and id lists sort
+    // with sort_array instead
+    import org.apache.spark.sql.catalyst.expressions.ArraySort
+    for (q <- Seq("doc_minhash_pairs", "doc_jaccard_pairs")) {
+      val p = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val sorts = p.flatMap(_.expressions.flatMap(_.collect {
+        case a: ArraySort => a }))
+      assert(sorts.isEmpty, s"$q plans ArraySort:\n$p")
+    }
+  }
+
   test("no gated query scans a full fact-table schema (column pruning sweep)") {
     // every parquet scan in every query must prune: reading l_comment
     // AND l_shipmode (or o_comment AND o_clerk, or all five event

@@ -268,6 +268,14 @@ MUTATIONS = [
      "if (c == 0) { inter += 1; i += 1; j += 1 }",
      "if (c == 0) { inter += 1; i += 2; j += 1 }",
      "test:graft.PropertySpec:SortedJaccard"),
+    # The graft-avro writer shifts every LONG value by one, so the
+    # c_custkey that io_avro_roundtrip reads back (min_key) is off; the
+    # DSv2 gate prunes that column away, so only the moved gate sees it.
+    ("avro-long-write-shifted",
+     "src/main/scala/graft/sources/AvroDataSource.scala",
+     "case LongType => row.getLong(i)",
+     "case LongType => row.getLong(i) + 1",
+     "io_avro_roundtrip"),
 ]
 
 
