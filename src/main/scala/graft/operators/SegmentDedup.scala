@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * AQE turns the removal join into a broadcast at runtime when it fits,
   * and degrades to a shuffle join when it doesn't — no driver-side
   * collect either way. Reassembly sorts each doc's surviving segments
-  * with array_sort over (position, segment) structs, so collect_list's
+  * with sort_array over (position, segment) structs, so collect_list's
   * arrival order can never leak into results.
   */
 object SegmentDedup {
@@ -86,7 +86,9 @@ object SegmentDedup {
       .agg(
         array_join(
           transform(
-            array_sort(collect_list(struct(col("seg_no"), col("seg")))),
+            // posexplode of a split: seg_no and seg are never null, so
+            // sort_array needs no null-aware comparator lambda
+            sort_array(collect_list(struct(col("seg_no"), col("seg")))),
             s => s("seg")),
           joinSep).as("cleaned"),
         count(lit(1)).as("n_kept"))

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.functions.TextFunctions.tokens
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.VocabIds
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,27 +13,25 @@ import org.apache.spark.sql.functions._
   * Token ids are row indices within the vocabulary; tokens absent from
   * the vocabulary map to `defaultId` (reference: `default_id`).
   *
-  * Two id-lookup paths, matching the two vocab regimes:
-  *  - [[idsFor]] / [[tokenizeWithVocabulary]]: the vocab ships in the
-  *    plan as ONE MapType literal (not an expression tree), evaluated
-  *    inside codegen as a hash-map probe per token — zero shuffle, right
-  *    for subword vocabs (≤ ~100k entries, the reference's regime).
-  *  - [[tokenizeWithVocabularyJoin]]: vocab as a DataFrame, broadcast
-  *    hash join over position-exploded tokens and re-assembly by
-  *    position — the path for vocabularies too large to embed in a task
-  *    binary but still broadcastable; nothing in it is driver-sided.
+  * One id-lookup path: [[idsFor]] loads the vocabulary once into a hash
+  * map on the driver and resolves ids with [[graft.plans.VocabIds]],
+  * which ships that map as one broadcast and probes it once per token —
+  * a pure map stage, no shuffle, and no vocab entries in the plan.
   */
 object VocabTokenize {
 
   /** Map an ARRAY OF TOKEN STRINGS column to an array of vocab ids.
     * Vocabulary order defines the ids (row index), like the reference's
     * tokenize_vocabulary. Composes over any tokenizer output — including
-    * BPE / WordPiece piece arrays — which is how those gain id output. */
+    * BPE / WordPiece piece arrays — which is how those gain id output.
+    * The vocabulary is broadcast through the active session. */
   def idsFor(tokArr: Column, vocab: Seq[String], defaultId: Int = -1): Column = {
     require(vocab.nonEmpty, "vocabulary must not be empty")
     require(vocab.distinct.size == vocab.size, "vocabulary entries must be unique")
-    val m = typedlit(vocab.zipWithIndex.toMap)
-    transform(tokArr, t => coalesce(element_at(m, t), lit(defaultId)))
+    val ids = new java.util.HashMap[String, Integer](vocab.size * 2)
+    vocab.zipWithIndex.foreach { case (t, i) => ids.put(t, Integer.valueOf(i)) }
+    column(VocabIds(expression(tokArr),
+      SparkSession.active.sparkContext.broadcast(ids), defaultId))
   }
 
   /** Whitespace-tokenize a STRING column and map to vocab ids
@@ -40,45 +40,10 @@ object VocabTokenize {
       defaultId: Int = -1): Column =
     idsFor(tokens(text), vocab, defaultId)
 
-  /** Large-vocab path: `vocabDf`'s first column is the token, second the
-    * id (taken POSITIONALLY, so callers' column names — including ones
-    * that collide with `idCol`, like "id" — never matter). Tokens of
-    * `textCol` are position-exploded, id-resolved via broadcast join,
-    * and re-assembled in token order. Returns (idCol, ids ARRAY<INT>).
-    * One broadcast, one shuffle (the per-doc regroup).
-    *
-    * `idCol` values must be UNIQUE (the per-doc regroup is a groupBy on
-    * it — duplicates would silently merge ids arrays), and so must the
-    * vocab's TOKEN column (a duplicate token fans the join out and
-    * misaligns the ids array; buildVocabulary guarantees this, external
-    * vocabDfs must too). NULL text yields an EMPTY ids array (a row per
-    * input, not a dropped row); note EMPTY-STRING text tokenizes to
-    * [""] → [defaultId] — the tokens() contract both engines share —
-    * and vocab matching is over LOWERCASED tokens (tokens() lowers;
-    * supply a lowercase vocab, as buildVocabulary does). */
-  def tokenizeWithVocabularyJoin(df: DataFrame, idCol: String, textCol: String,
-      vocabDf: DataFrame, defaultId: Int = -1): DataFrame = {
-    val vocab = vocabDf.select(
-      col(vocabDf.columns(0)).as("__tok"), col(vocabDf.columns(1)).as("__vid"))
-    // posexplode_outer keeps null/empty-text rows (as a single row with
-    // null __pos/__tok) so they surface as empty arrays downstream
-    val exploded = df.select(col(idCol),
-      posexplode_outer(tokens(col(textCol))).as(Seq("__pos", "__tok")))
-    exploded
-      .join(broadcast(vocab), Seq("__tok"), "left")
-      .groupBy(col(idCol))
-      // collect_list drops null entries, so the null-__pos placeholder
-      // row contributes nothing and its doc keeps ids = []
-      .agg(array_sort(collect_list(when(col("__pos").isNotNull,
-        struct(col("__pos"),
-          coalesce(col("__vid"), lit(defaultId)).as("tid"))))).as("ps"))
-      .select(col(idCol), transform(col("ps"), p => p("tid")).as("ids"))
-  }
-
   /** Build a vocabulary DataFrame (token, id) from a corpus: distinct
     * tokens, ids assigned by sorted order. The global row_number window
     * funnels through one partition — acceptable because a vocabulary is
-    * BOUNDED by construction (it is about to be broadcast / embedded);
+    * BOUNDED by construction (it is about to be broadcast);
     * never call this on an unbounded key domain. */
   def buildVocabulary(df: DataFrame, textCol: String,
       minTokenLength: Int = 1): DataFrame =
@@ -92,14 +57,16 @@ object VocabTokenize {
     * token strings grouped by `rowIdxCol`, concatenated with `sep` in
     * `orderCol` order (the reference uses input row position; Spark has
     * no implicit row order, so the position column is explicit). Null
-    * row indices are dropped, matching the reference. */
+    * row indices are dropped, matching the reference. Each group sorts
+    * with sort_array over (position, token) structs: the structs are
+    * never null, so no comparator lambda is needed. */
   def detokenize(df: DataFrame, tokenCol: String, rowIdxCol: String,
       orderCol: String, sep: String = " "): DataFrame =
     df.filter(col(rowIdxCol).isNotNull)
       .groupBy(col(rowIdxCol))
       .agg(array_join(
         transform(
-          array_sort(collect_list(struct(col(orderCol).as("o"),
+          sort_array(collect_list(struct(col(orderCol).as("o"),
             col(tokenCol).as("t")))),
           p => p("t")),
         sep).as("text"))

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -13,44 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash map, cost O(word² · merges-applied) per word, linear in corpus
   * size overall.
   *
-  * Two merge-table regimes (load_merge_pairs is unbounded in the
-  * reference):
-  *  - inline `merges`: the table ships inside the expression (task
-  *    closure) — fine up to ~50k pairs;
-  *  - `broadcastMerges`: a Broadcast handle — the table ships via
-  *    TorrentBroadcast ONCE per executor and the plan/closure carries
-  *    only the id, the regime for 100k+ production merge tables.
+  * The merge table (load_merge_pairs is unbounded in the reference) is
+  * loaded once into a [[BpeEncode.Ranks]] index on the driver and ships
+  * as one broadcast: executors fetch it once, and the plan and task
+  * closure carry only the handle.
   */
-case class BpeEncode(child: Expression,
-    merges: Seq[(String, String)] = Nil,
-    broadcastMerges: Option[
-      org.apache.spark.broadcast.Broadcast[Array[(String, String)]]] = None)
+case class BpeEncode(child: Expression, ranks: Broadcast[BpeEncode.Ranks])
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  // Two-level rank index (first symbol → second symbol → rank): the
-  // inner-loop lookup allocates nothing, vs a tuple per probe with a
-  // Map[(String, String), Int]. Last rank wins for a duplicated pair,
-  // matching the previous zipWithIndex.toMap behavior.
-  @transient private lazy val rank
-      : java.util.HashMap[String, java.util.HashMap[String, Integer]] = {
-    val m = new java.util.HashMap[String, java.util.HashMap[String, Integer]]()
-    val it = broadcastMerges match {
-      case Some(bc) => bc.value.iterator
-      case None => merges.iterator
-    }
-    var i = 0
-    it.foreach { case (a, b) =>
-      var inner = m.get(a)
-      if (inner == null) {
-        inner = new java.util.HashMap[String, Integer]()
-        m.put(a, inner)
-      }
-      inner.put(b, Integer.valueOf(i))
-      i += 1
-    }
-    m
-  }
 
   // Word → pieces cache (natural text is Zipfian: a few thousand words
   // cover most tokens). Capped so an adversarial all-distinct column
@@ -65,6 +36,7 @@ case class BpeEncode(child: Expression,
   private def encodeWord(word: String): Array[String] = {
     val hit = cache.get(word)
     if (hit != null) return hit
+    val rank = ranks.value
     val n = word.length
     val toks = new Array[String](n)
     var i = 0
@@ -132,14 +104,21 @@ case class BpeEncode(child: Expression,
 
 object BpeEncode {
   import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-  def apply(c: Column, merges: Seq[(String, String)]): Column =
-    column(BpeEncode(expression(c), merges))
 
-  /** Broadcast-merges mode for large tables: ships the pairs once per
-    * executor; the expression (and its plan rendering) holds only the
-    * broadcast handle. */
-  def broadcast(c: Column, spark: org.apache.spark.sql.SparkSession,
-      merges: Seq[(String, String)]): Column =
-    column(BpeEncode(expression(c), Nil,
-      Some(spark.sparkContext.broadcast(merges.toArray))))
+  /** Two-level rank index (first symbol → second symbol → rank): the
+    * inner-loop lookup allocates nothing, vs a tuple per probe with a
+    * Map[(String, String), Int]. */
+  type Ranks = java.util.HashMap[String, java.util.HashMap[String, Integer]]
+
+  /** Encode `c` with `merges` (rank = position; the last rank wins for a
+    * duplicated pair), broadcast once through the active session. */
+  def apply(c: Column, merges: Seq[(String, String)]): Column = {
+    val m: Ranks = new java.util.HashMap()
+    merges.zipWithIndex.foreach { case ((a, b), i) =>
+      m.computeIfAbsent(a, _ => new java.util.HashMap[String, Integer]())
+        .put(b, Integer.valueOf(i))
+    }
+    column(BpeEncode(expression(c),
+      SparkSession.active.sparkContext.broadcast(m)))
+  }
 }

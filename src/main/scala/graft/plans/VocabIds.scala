@@ -1,24 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Token-array → vocab-id-array lookup (nvtext/tokenize.hpp:216
-  * tokenize_with_vocabulary's id-mapping step) against a BROADCAST
-  * vocabulary: the entries ship via TorrentBroadcast once per executor
-  * and the expression (and its plan rendering) holds only the handle —
-  * the >100k-entry regime where VocabTokenize.idsFor's MapType plan
-  * literal would bloat every task closure. Ids are vocabulary row
-  * indices; absent (or null) tokens map to `defaultId`, matching
-  * idsFor's `coalesce(element_at(m, t), defaultId)` exactly. */
+  * tokenize_with_vocabulary's id-mapping step), the one path every
+  * token-id output takes (built by [[graft.operators.VocabTokenize.idsFor]]).
+  * The vocabulary is loaded once into a token → row-index hash map on
+  * the driver and ships as one broadcast: executors fetch it once, the
+  * plan and task closure carry only the handle, and each token costs one
+  * hash probe. Absent (or null) tokens map to `defaultId`. */
 case class VocabIds(child: Expression,
-    vocab: Seq[String] = Nil,
-    broadcastVocab: Option[
-      org.apache.spark.broadcast.Broadcast[Array[String]]] = None,
-    defaultId: Int = -1)
+    ids: Broadcast[java.util.HashMap[String, Integer]], defaultId: Int)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
@@ -32,17 +28,10 @@ case class VocabIds(child: Expression,
           .TypeCheckFailure(s"vocab_ids needs ARRAY<STRING>, got $other")
     }
 
-  @transient private lazy val idx: java.util.HashMap[String, Integer] = {
-    val entries = broadcastVocab.map(_.value.toSeq).getOrElse(vocab)
-    val m = new java.util.HashMap[String, Integer](entries.size * 2)
-    var i = 0
-    entries.foreach { e => m.putIfAbsent(e, i); i += 1 }
-    m
-  }
-
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
+    val idx = ids.value
     val out = new Array[Int](n)
     var i = 0
     while (i < n) {
@@ -59,19 +48,4 @@ case class VocabIds(child: Expression,
 
   override protected def withNewChildInternal(c: Expression): VocabIds =
     copy(child = c)
-}
-
-object VocabIds {
-  import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-
-  /** Broadcast-vocab id lookup: ships the vocabulary once per executor.
-    * Same uniqueness contract as VocabTokenize.idsFor. */
-  def broadcast(c: Column, spark: org.apache.spark.sql.SparkSession,
-      vocab: Seq[String], defaultId: Int = -1): Column = {
-    require(vocab.nonEmpty, "vocabulary must not be empty")
-    require(vocab.distinct.size == vocab.size,
-      "vocabulary entries must be unique")
-    column(VocabIds(expression(c), Nil,
-      Some(spark.sparkContext.broadcast(vocab.toArray)), defaultId))
-  }
 }

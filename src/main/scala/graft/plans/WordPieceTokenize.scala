@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -12,15 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * longest-match-first against a vocabulary, continuation pieces prefixed
   * "##", unknown words → [UNK].
   *
-  * Two vocab regimes: inline `vocab` ships inside the expression (task
-  * closure — fine at typical 30-50k subword sizes, like the reference's
-  * device-resident vocab); `broadcastVocab` ships via TorrentBroadcast
-  * once per executor with only the handle in the plan/closure — the
-  * regime for 100k+ vocabularies.
+  * The vocabulary is loaded once into a [[WordPieceTokenize.Vocab]] on
+  * the driver and ships as one broadcast (the reference's device-resident
+  * vocab object): executors fetch it once, and the plan and task closure
+  * carry only the handle, whatever the vocabulary size.
   */
-case class WordPieceTokenize(child: Expression, vocab: Seq[String] = Nil,
-    broadcastVocab: Option[
-      org.apache.spark.broadcast.Broadcast[Array[String]]] = None,
+case class WordPieceTokenize(child: Expression,
+    vocab: Broadcast[WordPieceTokenize.Vocab],
     doLowerCase: Boolean = true)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -31,21 +30,16 @@ case class WordPieceTokenize(child: Expression, vocab: Seq[String] = Nil,
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"wordpiece_tokenize needs string, got ${child.dataType}")
 
-  @transient private lazy val entries: Seq[String] =
-    broadcastVocab.map(_.value.toSeq).getOrElse(vocab)
-  @transient private lazy val vocabSet: Set[String] = entries.toSet
-  @transient private lazy val maxLen: Int =
-    if (entries.isEmpty) 0 else entries.map(_.stripPrefix("##").length).max
-
-  private def tokenizeWord(word: String): Seq[String] = {
+  private def tokenizeWord(v: WordPieceTokenize.Vocab,
+      word: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var start = 0
     while (start < word.length) {
-      var end = math.min(word.length, start + maxLen)
+      var end = math.min(word.length, start + v.maxLen)
       var piece: String = null
       while (end > start && piece == null) {
         val cand = (if (start > 0) "##" else "") + word.substring(start, end)
-        if (vocabSet.contains(cand)) piece = cand else end -= 1
+        if (v.entries.contains(cand)) piece = cand else end -= 1
       }
       if (piece == null) return Seq("[UNK]")
       out += piece
@@ -60,8 +54,9 @@ case class WordPieceTokenize(child: Expression, vocab: Seq[String] = Nil,
     // otherwise never match and collapse every cased word to [UNK].
     val text = if (doLowerCase) v.toString.toLowerCase(java.util.Locale.ROOT)
       else v.toString
+    val table = vocab.value
     val words = text.split("\\s+").filter(_.nonEmpty)
-    val pieces = words.flatMap(tokenizeWord)
+    val pieces = words.flatMap(tokenizeWord(table, _))
     new GenericArrayData(pieces.map(UTF8String.fromString(_)))
   }
 
@@ -71,13 +66,17 @@ case class WordPieceTokenize(child: Expression, vocab: Seq[String] = Nil,
 
 object WordPieceTokenize {
   import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-  def apply(c: Column, vocab: Seq[String]): Column =
-    column(WordPieceTokenize(expression(c), vocab))
 
-  /** Broadcast-vocab mode for large vocabularies: ships the entries once
-    * per executor; the expression holds only the broadcast handle. */
-  def broadcast(c: Column, spark: org.apache.spark.sql.SparkSession,
-      vocab: Seq[String]): Column =
-    column(WordPieceTokenize(expression(c), Nil,
-      Some(spark.sparkContext.broadcast(vocab.toArray))))
+  /** The loaded vocabulary: its entries and the longest entry stem
+    * (without "##"), which bounds each longest-match probe. */
+  final case class Vocab(entries: Set[String], maxLen: Int)
+
+  /** Tokenize `c` against `vocab`, broadcast once through the active
+    * session. */
+  def apply(c: Column, vocab: Seq[String]): Column = {
+    val maxLen =
+      if (vocab.isEmpty) 0 else vocab.map(_.stripPrefix("##").length).max
+    column(WordPieceTokenize(expression(c),
+      SparkSession.active.sparkContext.broadcast(Vocab(vocab.toSet, maxLen))))
+  }
 }

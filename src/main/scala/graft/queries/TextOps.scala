@@ -2510,8 +2510,9 @@ object TextOps extends QueryPack {
          |ORDER BY doc_id""".stripMargin
 
   /** WordPiece subword tokenization via the custom broadcast-vocab
-    * expression. Oracle-checked: greedy longest-match-first is
-    * replicated in DuckDB with a recursive CTE — each state (word, pos)
+    * expression (also gated as doc_wordpiece_bc). Oracle-checked:
+    * greedy longest-match-first is replicated in DuckDB with a
+    * recursive CTE — each state (word, pos)
     * advances by the longest vocab entry matching at pos (NOT EXISTS a
     * longer match), continuation entries require pos > 0; a word whose
     * recursion never reaches len(word) collapses to a single [UNK].
@@ -2527,18 +2528,6 @@ object TextOps extends QueryPack {
     Tables.documents(s, dir)
       .select(explode(
         graft.plans.WordPieceTokenize(col("text"), wordpieceVocab)).as("piece"))
-      .groupBy(col("piece")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("piece"))
-      .limit(25)
-
-  /** [[wordpiece]] through the BROADCAST-vocab path — identical output
-    * contract (shares [[wordpieceSql]]), so the gate proves the
-    * broadcast mode end to end cross-engine, not just in the unit test
-    * that compares it against the inline mode. */
-  def wordpieceBroadcast(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(explode(graft.plans.WordPieceTokenize.broadcast(
-        col("text"), s, wordpieceVocab)).as("piece"))
       .groupBy(col("piece")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("piece"))
       .limit(25)
@@ -2668,14 +2657,20 @@ object TextOps extends QueryPack {
 
   /** Vocabulary tokenization (nvtext/tokenize.hpp:228 tokenize_with_
     * vocabulary): corpus-derived vocabulary (distinct tokens of length
-    * ≥ 3, ids by sorted order), documents mapped to id arrays via the
-    * broadcast-join path; shorter tokens fall to default_id = -1. */
+    * ≥ 3, ids by sorted order), collected in id order while the query
+    * is built and resolved per document through VocabIds; shorter
+    * tokens fall to default_id = -1. NULL text has no tokens, and the
+    * oracle emits no row for such a document. */
   def tokenIds(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
+    // the vocabulary is bounded (it is about to be broadcast): put it in
+    // id order on the driver rather than with a distributed sort
     val vocab = graft.operators.VocabTokenize
       .buildVocabulary(docs, "text", minTokenLength = 3)
-    graft.operators.VocabTokenize
-      .tokenizeWithVocabularyJoin(docs, "doc_id", "text", vocab)
+      .collect().sortBy(_.getInt(1)).map(_.getString(0)).toSeq
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), graft.operators.VocabTokenize
+        .tokenizeWithVocabulary(col("text"), vocab).as("ids"))
       // ids rendered as a space-joined string: the driver's comparator
       // sorts result columns with pandas, which cannot hash raw arrays
       .select(col("doc_id"),
@@ -2819,7 +2814,8 @@ object TextOps extends QueryPack {
     "doc_chunks" -> chunksQ,
     "doc_chunk_dedup" -> chunkDedup,
     "doc_wordpiece" -> wordpiece,
-    "doc_wordpiece_bc" -> wordpieceBroadcast,
+    // the same single broadcast-vocab path as doc_wordpiece
+    "doc_wordpiece_bc" -> wordpiece,
     "doc_bert_encode" -> bertEncodeQ,
     "doc_dedup_exact" -> dedupExact,
     "doc_dedup_fingerprint" -> dedupFingerprint,

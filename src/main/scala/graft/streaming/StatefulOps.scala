@@ -150,7 +150,8 @@ object StatefulOps {
     * SCALING.md prescribes for 100 TB streaming anyway.
     *
     * Timer protocol: every batch re-registers the single timer at
-    * session end + gap (stale timers are deleted); an expired timer
+    * session end + gap (stale timers are deleted, except a firing one,
+    * which the operator deletes after its handler); an expired timer
     * closes the session only if it is still quiet (expiry ≥ end + gap) —
     * a timer raced by a session-extending event is simply ignored. */
   class SessionProcessor(gapMillis: Long) extends StatefulProcessor[
@@ -160,13 +161,15 @@ object StatefulOps {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       session = getHandle.getValueState("session", sessAccEnc, TTLConfig.NONE)
 
+    /** `firing` is the expiry of the timer being handled, if any: the
+      * operator deletes that timer itself once the handler returns. */
     private def step(user: Long,
         rows: Iterator[(Long, java.sql.Timestamp, Double)],
-        wmMs: Long): Iterator[SessionOut] = {
+        wmMs: Long, firing: Option[Long]): Iterator[SessionOut] = {
       val (acc, emit, nextTimeout) = advanceSession(user, rows,
         if (session.exists) session.get else EmptyAcc, wmMs, gapMillis)
-      getHandle.listTimers().foreach(t =>
-        getHandle.deleteTimer(t.asInstanceOf[Long]))
+      getHandle.listTimers().filterNot(firing.contains)
+        .foreach(getHandle.deleteTimer)
       nextTimeout match {
         case Some(ts) =>
           session.update(acc)
@@ -179,13 +182,14 @@ object StatefulOps {
     override def handleInputRows(user: Long,
         rows: Iterator[(Long, java.sql.Timestamp, Double)],
         timerValues: TimerValues): Iterator[SessionOut] =
-      step(user, rows, timerValues.getCurrentWatermarkInMs)
+      step(user, rows, timerValues.getCurrentWatermarkInMs, None)
 
     override def handleExpiredTimer(user: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] =
       // the advanced watermark does the closing; a timer raced by a
       // session-extending event simply re-registers via step()
-      step(user, Iterator.empty, timerValues.getCurrentWatermarkInMs)
+      step(user, Iterator.empty, timerValues.getCurrentWatermarkInMs,
+        Some(expiredTimerInfo.getExpiryTimeInMs()))
   }
 
   /** Run [[SessionProcessor]] over a watermarked grouped stream.

@@ -168,39 +168,34 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(msgs(ex).exists(_.contains("ewma")), ex.toString)
   }
 
-  test("broadcast-vocab tokenizers match inline results; no giant plan payload") {
-    import graft.plans.{BpeEncode, VocabIds, WordPieceTokenize}
-    // >50k-entry synthetic vocab with a recognizable sentinel: the
-    // broadcast mode must neither change results nor embed the entries
-    // in the plan/closure rendering
-    val sentinel = "zq_sentinel_99999"
+  test("broadcast tokenizer tables: known output, no plan payload") {
+    import graft.plans.{BpeEncode, WordPieceTokenize}
+    // >50k-entry synthetic tables with a recognizable sentinel entry:
+    // each expression must produce the known pieces / ids and render
+    // only its broadcast handle, never the entries, into the plan
+    val sentinel = "zq_sentinel_12345"
     val bigVocab = (0 until 60000).map(i => s"zq_sentinel_$i") ++
       Seq("un", "##aff", "##able", "low", "##er")
     val df = Seq("unaffable lower").toDF("s")
-    val inlineWp = df.select(WordPieceTokenize($"s", bigVocab).as("p"))
-    val bcWp = df.select(
-      WordPieceTokenize.broadcast($"s", spark, bigVocab).as("p"))
-    assert(bcWp.as[Seq[String]].head() == inlineWp.as[Seq[String]].head())
-    assert(!bcWp.queryExecution.executedPlan.toString.contains(sentinel),
-      "broadcast mode must not render vocab entries into the plan")
+    val wp = df.select(WordPieceTokenize($"s", bigVocab).as("p"))
+    assert(wp.as[Seq[String]].head() ==
+      Seq("un", "##aff", "##able", "low", "##er"))
+    assert(!wp.queryExecution.executedPlan.toString.contains(sentinel),
+      "vocab entries must not render into the plan")
 
     val bigMerges = (0 until 60000).map(i => (s"zq$i", s"sent$i")) ++
       Seq("l" -> "o", "lo" -> "w", "e" -> "r", "er" -> "!")
-    val inlineBpe = df.select(BpeEncode($"s", bigMerges).as("p"))
-    val bcBpe = df.select(
-      BpeEncode.broadcast($"s", spark, bigMerges).as("p"))
-    assert(bcBpe.as[Seq[String]].head() == inlineBpe.as[Seq[String]].head())
-    assert(!bcBpe.queryExecution.executedPlan.toString.contains("zq59999"))
+    val bpe = df.select(BpeEncode($"s", bigMerges).as("p"))
+    assert(bpe.as[Seq[String]].head() ==
+      Seq("u", "n", "a", "f", "f", "a", "b", "l", "e", "low", "er"))
+    assert(!bpe.queryExecution.executedPlan.toString.contains("zq12345"))
 
-    // VocabIds: broadcast id lookup vs the MapType-literal idsFor
-    val toks = Seq(Seq("low", sentinel, "missing")).toDF("t")
-    val inlineIds = toks.select(graft.operators.VocabTokenize
+    // VocabIds (via idsFor): ids are vocab row indices, -1 when missing
+    val toks = Seq(Seq("low", "zq_sentinel_59999", "missing")).toDF("t")
+    val ids = toks.select(graft.operators.VocabTokenize
       .idsFor($"t", bigVocab).as("ids"))
-    val bcIds = toks.select(
-      VocabIds.broadcast($"t", spark, bigVocab).as("ids"))
-    assert(bcIds.as[Seq[Int]].head() == inlineIds.as[Seq[Int]].head())
-    assert(bcIds.as[Seq[Int]].head().last == -1, "missing token -> defaultId")
-    assert(!bcIds.queryExecution.executedPlan.toString.contains(sentinel))
+    assert(ids.as[Seq[Int]].head() == Seq(60003, 59999, -1))
+    assert(!ids.queryExecution.executedPlan.toString.contains(sentinel))
   }
 
   test("BpeEncode applies merges in rank order (classic lower->low+er)") {

@@ -123,10 +123,25 @@ class PlanSpec extends AnyFunSuite {
         s"got $lineitemScans scans:\n$p")
   }
 
-  test("graft-avro DSv2 and vocab join keep their scan/broadcast shapes") {
+  test("doc_token_ids resolves ids in one map stage; no map-literal lookup") {
+    // the vocabulary is collected while the query is built and resolved
+    // per document through VocabIds: no explode, no vocab join and no
+    // per-document regroup ahead of the final sort
     val p = plan("doc_token_ids")
-    assert(p.contains("BroadcastHashJoin"),
-      "vocab resolution must broadcast, not shuffle")
+    val nodes = p.linesIterator.filter(_.matches("""\(\d+\) .*""")).toSeq
+    for (op <- Seq("Generate", "Join", "HashAggregate"))
+      assert(!nodes.exists(_.contains(op)), s"doc_token_ids plans $op:\n$p")
+    assert(p.contains("vocabids("), s"ids must resolve through VocabIds:\n$p")
+    // doc_bert_encode's ids resolve through the broadcast VocabIds too,
+    // not element_at over a MapType literal (a scan of every key per token)
+    import org.apache.spark.sql.catalyst.expressions.{ElementAt, Literal}
+    import org.apache.spark.sql.types.MapType
+    val bert = SparkEntry.queries("doc_bert_encode")(spark, dir)
+      .queryExecution.optimizedPlan
+    val mapLookups = bert.flatMap(_.expressions.flatMap(_.collect {
+      case e @ ElementAt(Literal(_, _: MapType), _, _, _) => e }))
+    assert(mapLookups.isEmpty, s"doc_bert_encode plans a map-literal lookup:\n$bert")
+    assert(bert.toString.contains("vocabids("), bert.toString)
   }
 
   test("io_avro_dsv2_roundtrip: pruning reaches the DSv2 scan (gate query)") {

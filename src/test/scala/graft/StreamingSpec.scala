@@ -699,7 +699,11 @@ class StreamingSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
-  test("transformWithState sessionizer matches the fMGWS one (RocksDB state)") {
+  /** Runs the transformWithState sessionizer (RocksDB state) over four
+    * batches whose last two push the watermark past both of user 1's
+    * sessions, so they close through expired timers; returns user 1's
+    * (user, n_events, sum_value) rows. */
+  private def runTwsSessionizer(queryName: String): Seq[(Long, Long, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -713,7 +717,7 @@ class StreamingSpec extends AnyFunSuite {
     val sessions = graft.streaming.StatefulOps
       .sessionizeStreamTws(grouped, gapMillis = 30L * 60 * 1000)
     val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("tws_sess_out").start()
+      .format("memory").queryName(queryName).start()
     try {
       input.addData((1L, ts("2024-01-01 00:00:00"), 1.0),
         (1L, ts("2024-01-01 00:10:00"), 2.0))
@@ -726,12 +730,11 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData((2L, ts("2024-01-01 06:00:01"), 1.0))
       q.processAllAvailable()
-      val got = spark.sql(
-        "SELECT user, n_events, sum_value FROM tws_sess_out WHERE user = 1 " +
+      spark.sql(
+        s"SELECT user, n_events, sum_value FROM $queryName WHERE user = 1 " +
           "ORDER BY sum_value")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(got.toSeq == Seq((1L, 2L, 3.0), (1L, 1L, 5.0)),
-        s"expected both user-1 sessions closed, got ${got.toSeq}")
+        .toSeq
     } finally {
       q.stop()
       prev match {
@@ -741,6 +744,42 @@ class StreamingSpec extends AnyFunSuite {
           spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
+  }
+
+  test("transformWithState sessionizer matches the fMGWS one (RocksDB state)") {
+    val got = runTwsSessionizer("tws_sess_out")
+    assert(got == Seq((1L, 2L, 3.0), (1L, 1L, 5.0)),
+      s"expected both user-1 sessions closed, got $got")
+  }
+
+  test("TWS sessionizer never deletes a timer that is gone") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // the operator deletes a firing timer after its handler returns; a
+    // handler that deletes it too makes TimerStateImpl warn per firing.
+    // Start the session first: its logging setup reloads the log4j
+    // configuration, which would drop an appender attached before it.
+    spark.sparkContext
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution." +
+      "streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val got =
+      try runTwsSessionizer("tws_timer_out")
+      finally { logger.removeAppender(appender); appender.stop() }
+    // both sessions closed, so their timers fired
+    assert(got == Seq((1L, 2L, 3.0), (1L, 1L, 5.0)))
+    val failed = warnings.toArray.count(_.toString.contains("Failed to delete timer"))
+    assert(failed == 0, s"$failed 'Failed to delete timer' warnings")
   }
 
   test("streaming ingest curation: redact -> quality-filter -> dedup in one query") {

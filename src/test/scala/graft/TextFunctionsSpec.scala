@@ -122,20 +122,30 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(got == Seq(3, 1, 0, 3, -1))
   }
 
-  test("tokenizeWithVocabularyJoin matches the map-literal path") {
+  test("tokenizeWithVocabulary keeps ids per document row") {
     import graft.operators.VocabTokenize
-    val docs = Seq((0L, "the cat and the zebra"), (1L, "hat the")).toDF("doc_id", "text")
-    val vocabDf = Seq(("and", 0), ("cat", 1), ("hat", 2), ("the", 3))
-      .toDF("tok", "id")
-    val viaJoin = VocabTokenize
-      .tokenizeWithVocabularyJoin(docs, "doc_id", "text", vocabDf)
-      .orderBy($"doc_id").as[(Long, Seq[Int])].collect().toSeq
-    assert(viaJoin == Seq(0L -> Seq(3, 1, 0, 3, -1), 1L -> Seq(2, 3)))
-    val viaMap = docs.select($"doc_id",
+    val docs = Seq((0L, "the cat and the zebra"), (1L, "hat the"))
+      .toDF("doc_id", "text")
+    val got = docs.select($"doc_id",
         VocabTokenize.tokenizeWithVocabulary($"text",
           Seq("and", "cat", "hat", "the")).as("ids"))
       .orderBy($"doc_id").as[(Long, Seq[Int])].collect().toSeq
-    assert(viaJoin == viaMap)
+    assert(got == Seq(0L -> Seq(3, 1, 0, 3, -1), 1L -> Seq(2, 3)))
+  }
+
+  test("doc_token_ids: no row for NULL text, [-1] for empty text") {
+    // rows pinned from the gate's DuckDB oracle SQL over the same five
+    // documents: it emits no row for a document without tokens, and
+    // empty or blank text splits to one empty token (default id -1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-tokids").toString
+    Seq[(Long, String)]((1L, "the cat sat on the mat"), (2L, null), (3L, ""),
+        (4L, "   "), (5L, "Cat  THE dog at"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("doc_token_ids")(spark, dir)
+      .as[(Long, String, Int, Int)].collect().toSeq
+    // vocab: cat 0, dog 1, mat 2, sat 3, the 4
+    assert(got == Seq((1L, "4 0 3 -1 4 2", 1, 6), (3L, "-1", 1, 1),
+      (4L, "-1", 1, 1), (5L, "0 4 1 -1", 1, 4)))
   }
 
   test("detokenize reproduces the reference's tokenize.hpp examples") {

@@ -276,6 +276,13 @@ MUTATIONS = [
      "case LongType => row.getLong(i)",
      "case LongType => row.getLong(i) + 1",
      "io_avro_roundtrip"),
+    # VocabIds is the only token-id path: shifting every found token's
+    # id by one moves every non-default id doc_token_ids renders.
+    ("vocab-id-shifted",
+     "src/main/scala/graft/plans/VocabIds.scala",
+     "if (id == null) defaultId else id.intValue()",
+     "if (id == null) defaultId else id.intValue() + 1",
+     "doc_token_ids"),
 ]
 
 
