@@ -24,11 +24,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    packs.flatMap(_.gates).map(g => g.name -> g.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Every query has one (OperatorsSpec checks
-    * the key sets are equal). */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    packs.flatMap(_.oracle).toMap
+    packs.flatMap(_.gates).map(g => g.name -> g.oracleSql).toMap
 }

@@ -4,8 +4,8 @@ import graft.functions.TextFunctions.tokens
 import graft.plans.VocabIds
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Vocabulary tokenization: token strings ↔ token ids against a fixed
   * vocabulary (cpp/include/nvtext/tokenize.hpp:216-293 —
@@ -40,18 +40,20 @@ object VocabTokenize {
       defaultId: Int = -1): Column =
     idsFor(tokens(text), vocab, defaultId)
 
-  /** Build a vocabulary DataFrame (token, id) from a corpus: distinct
-    * tokens, ids assigned by sorted order. The global row_number window
-    * funnels through one partition — acceptable because a vocabulary is
-    * BOUNDED by construction (it is about to be broadcast);
-    * never call this on an unbounded key domain. */
+  /** Build a vocabulary from a corpus: its distinct tokens of at least
+    * `minTokenLength` characters, sorted by their unsigned UTF-8 bytes
+    * (`UTF8String` order, which Spark and DuckDB both sort strings by;
+    * `String` order compares UTF-16 units and puts U+1F600 before
+    * U+FF41). A token's id is its index. One distinct + collect: the
+    * sort runs on the driver, since a vocabulary is bounded by
+    * construction (it is about to be broadcast); never call this on an
+    * unbounded key domain. */
   def buildVocabulary(df: DataFrame, textCol: String,
-      minTokenLength: Int = 1): DataFrame =
+      minTokenLength: Int = 1): Seq[String] =
     df.select(explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) >= minTokenLength)
       .distinct()
-      .select(col("tok"),
-        (row_number().over(Window.orderBy(col("tok"))) - 1).as("id"))
+      .collect().map(_.getString(0)).sortBy(UTF8String.fromString).toSeq
 
   /** Inverse of tokenization (nvtext detokenize, tokenize.hpp:216):
     * token strings grouped by `rowIdxCol`, concatenated with `sep` in

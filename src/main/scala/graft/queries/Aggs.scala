@@ -601,47 +601,25 @@ object Aggs extends QueryPack {
       |FROM tgt t JOIN s ON s.idx = t.idx
       |ORDER BY CAST(t.q_num AS DOUBLE) / t.q_den, t.interp""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_rows_quantiles" -> aggRowsQuantiles,
-    "agg_winsorize" -> aggWinsorize,
-    "agg_distinct_nan" -> aggDistinctNan,
-    "agg_weighted_pctl" -> aggWeightedPctl,
-    "agg_corr_matrix" -> aggCorrMatrix,
-    "agg_skew_kurt" -> aggSkewKurt,
-    "agg_mode" -> aggMode,
-    "agg_basic" -> aggBasic,
-    "agg_distinct" -> aggDistinct,
-    "agg_distinct_nulls" -> aggDistinctNulls,
-    "agg_product" -> aggProduct,
-    "agg_argminmax" -> aggArgMinMax,
-    "agg_bool_bitwise" -> aggBoolBitwise,
-    "agg_stats" -> aggStats,
-    "agg_percentiles" -> aggPercentiles,
-    "agg_quantile_modes" -> aggQuantileModes,
-    "agg_collect" -> aggCollect,
-    "agg_rollup" -> aggRollup,
-    "agg_cube" -> aggCube,
-    "agg_histogram" -> aggHistogram)
-
-  override def oracle: Map[String, String] = Map(
-    "agg_rows_quantiles" -> aggRowsQuantilesSql,
-    "agg_winsorize" -> aggWinsorizeSql,
-    "agg_distinct_nan" -> aggDistinctNanSql,
-    "agg_weighted_pctl" -> aggWeightedPctlSql,
-    "agg_corr_matrix" -> aggCorrMatrixSql,
-    "agg_skew_kurt" -> aggSkewKurtSql,
-    "agg_mode" -> aggModeSql,
-    "agg_basic" -> aggBasicSql,
-    "agg_distinct" -> aggDistinctSql,
-    "agg_distinct_nulls" -> aggDistinctNullsSql,
-    "agg_product" -> aggProductSql,
-    "agg_argminmax" -> aggArgMinMaxSql,
-    "agg_bool_bitwise" -> aggBoolBitwiseSql,
-    "agg_stats" -> aggStatsSql,
-    "agg_percentiles" -> aggPercentilesSql,
-    "agg_quantile_modes" -> aggQuantileModesSql,
-    "agg_collect" -> aggCollectSql,
-    "agg_rollup" -> aggRollupSql,
-    "agg_cube" -> aggCubeSql,
-    "agg_histogram" -> aggHistogramSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("agg_rows_quantiles", aggRowsQuantiles, aggRowsQuantilesSql),
+    Gate("agg_winsorize", aggWinsorize, aggWinsorizeSql),
+    Gate("agg_distinct_nan", aggDistinctNan, aggDistinctNanSql),
+    Gate("agg_weighted_pctl", aggWeightedPctl, aggWeightedPctlSql),
+    Gate("agg_corr_matrix", aggCorrMatrix, aggCorrMatrixSql),
+    Gate("agg_skew_kurt", aggSkewKurt, aggSkewKurtSql),
+    Gate("agg_mode", aggMode, aggModeSql),
+    Gate("agg_basic", aggBasic, aggBasicSql),
+    Gate("agg_distinct", aggDistinct, aggDistinctSql),
+    Gate("agg_distinct_nulls", aggDistinctNulls, aggDistinctNullsSql),
+    Gate("agg_product", aggProduct, aggProductSql),
+    Gate("agg_argminmax", aggArgMinMax, aggArgMinMaxSql),
+    Gate("agg_bool_bitwise", aggBoolBitwise, aggBoolBitwiseSql),
+    Gate("agg_stats", aggStats, aggStatsSql),
+    Gate("agg_percentiles", aggPercentiles, aggPercentilesSql),
+    Gate("agg_quantile_modes", aggQuantileModes, aggQuantileModesSql),
+    Gate("agg_collect", aggCollect, aggCollectSql),
+    Gate("agg_rollup", aggRollup, aggRollupSql),
+    Gate("agg_cube", aggCube, aggCubeSql),
+    Gate("agg_histogram", aggHistogram, aggHistogramSql))
 }

@@ -689,59 +689,31 @@ object CurationPack extends QueryPack {
       |  FROM documents GROUP BY source)
       |ORDER BY source""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dup_rate" -> dupRateQ,
-    "corpus_drift" -> driftQ,
-    "outlier_modified_z" -> modifiedZQ,
-    "corpus_interleave" -> interleaveQ,
-    "corpus_quantile_norm" -> quantileNormQ,
-    "corpus_top_frac" -> topFracQ,
-    "corpus_standardize" -> standardizeQ,
-    "corpus_temperature_mix" -> temperatureMix,
-    "corpus_curriculum" -> curriculumQ,
-    "corpus_negatives" -> sampleNegativesQ,
-    "corpus_sample_weighted" -> sampleWeightedQ,
-    "corpus_sample_weighted_group" -> sampleWeightedGroupQ,
-    "corpus_split" -> split,
-    "corpus_split_leakfree" -> splitLeakFree,
-    "corpus_sample_group" -> sampleGroup,
-    "corpus_bootstrap" -> bootstrapQ,
-    "corpus_mixture" -> mixture,
-    "corpus_survivors" -> survivors,
-    "corpus_shuffle" -> shuffle,
-    "doc_repetition" -> repetition,
-    "doc_lm_score" -> lmScore,
-    "outlier_filter" -> outlierFilter,
-    "outlier_winsorize" -> winsorizeQ,
-    "outlier_mad" -> madQ,
-    "corpus_build" -> corpusBuild,
-    "doc_neardup_clusters" -> neardupClusters)
-
-  override def oracle: Map[String, String] = Map(
-    "corpus_dup_rate" -> dupRateSql,
-    "corpus_drift" -> driftSql,
-    "outlier_modified_z" -> modifiedZSql,
-    "corpus_interleave" -> interleaveSql,
-    "corpus_quantile_norm" -> quantileNormSql,
-    "corpus_top_frac" -> topFracSql,
-    "corpus_standardize" -> standardizeSql,
-    "corpus_temperature_mix" -> temperatureMixSql,
-    "corpus_curriculum" -> curriculumSql,
-    "corpus_negatives" -> sampleNegativesSql,
-    "corpus_sample_weighted" -> sampleWeightedSql,
-    "corpus_sample_weighted_group" -> sampleWeightedGroupSql,
-    "corpus_split" -> splitSql,
-    "corpus_split_leakfree" -> splitLeakFreeSql,
-    "corpus_sample_group" -> sampleGroupSql,
-    "corpus_bootstrap" -> bootstrapSql,
-    "corpus_mixture" -> mixtureSql,
-    "corpus_survivors" -> survivorsSql,
-    "corpus_shuffle" -> shuffleSql,
-    "doc_repetition" -> repetitionSql,
-    "doc_lm_score" -> lmScoreSql,
-    "outlier_filter" -> outlierFilterSql,
-    "outlier_winsorize" -> winsorizeSql,
-    "outlier_mad" -> madSql,
-    "corpus_build" -> corpusBuildSql,
-    "doc_neardup_clusters" -> neardupClustersSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("corpus_dup_rate", dupRateQ, dupRateSql),
+    Gate("corpus_drift", driftQ, driftSql),
+    Gate("outlier_modified_z", modifiedZQ, modifiedZSql),
+    Gate("corpus_interleave", interleaveQ, interleaveSql),
+    Gate("corpus_quantile_norm", quantileNormQ, quantileNormSql),
+    Gate("corpus_top_frac", topFracQ, topFracSql),
+    Gate("corpus_standardize", standardizeQ, standardizeSql),
+    Gate("corpus_temperature_mix", temperatureMix, temperatureMixSql),
+    Gate("corpus_curriculum", curriculumQ, curriculumSql),
+    Gate("corpus_negatives", sampleNegativesQ, sampleNegativesSql),
+    Gate("corpus_sample_weighted", sampleWeightedQ, sampleWeightedSql),
+    Gate("corpus_sample_weighted_group", sampleWeightedGroupQ, sampleWeightedGroupSql),
+    Gate("corpus_split", split, splitSql),
+    Gate("corpus_split_leakfree", splitLeakFree, splitLeakFreeSql),
+    Gate("corpus_sample_group", sampleGroup, sampleGroupSql),
+    Gate("corpus_bootstrap", bootstrapQ, bootstrapSql),
+    Gate("corpus_mixture", mixture, mixtureSql),
+    Gate("corpus_survivors", survivors, survivorsSql),
+    Gate("corpus_shuffle", shuffle, shuffleSql),
+    Gate("doc_repetition", repetition, repetitionSql),
+    Gate("doc_lm_score", lmScore, lmScoreSql),
+    Gate("outlier_filter", outlierFilter, outlierFilterSql),
+    Gate("outlier_winsorize", winsorizeQ, winsorizeSql),
+    Gate("outlier_mad", madQ, madSql),
+    Gate("corpus_build", corpusBuild, corpusBuildSql),
+    Gate("doc_neardup_clusters", neardupClusters, neardupClustersSql))
 }

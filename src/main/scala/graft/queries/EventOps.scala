@@ -613,43 +613,23 @@ object EventOps extends QueryPack {
       |                    AND o.bucket = g.bucket)
       |ORDER BY user_id, bucket""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_twap" -> twapQ,
-    "events_gaps" -> gapsQ,
-    "events_quota" -> quota,
-    "events_quota_hopping" -> quotaHopping,
-    "events_topk_daily" -> topkDaily,
-    "events_transitions" -> transitions,
-    "events_funnel" -> funnel,
-    "events_funnel_steps" -> funnelSteps,
-    "events_assoc" -> assocQ,
-    "events_anomaly" -> anomalyQ,
-    "events_bounce_rate" -> bounceRate,
-    "events_sessionize" -> sessionize,
-    "events_tumbling" -> tumbling,
-    "events_asof_prev" -> asofPrevSignup,
-    "events_resample_ffill" -> resampleFfill,
-    "events_decayed_sum" -> decayedSum,
-    "events_interval_union" -> intervalUnion,
-    "events_hopping" -> hopping)
-
-  override def oracle: Map[String, String] = Map(
-    "events_twap" -> twapSql,
-    "events_gaps" -> gapsSql,
-    "events_quota" -> quotaSql,
-    "events_quota_hopping" -> quotaHoppingSql,
-    "events_topk_daily" -> topkDailySql,
-    "events_transitions" -> transitionsSql,
-    "events_funnel" -> funnelSql,
-    "events_funnel_steps" -> funnelStepsSql,
-    "events_assoc" -> assocSql,
-    "events_anomaly" -> anomalySql,
-    "events_bounce_rate" -> bounceRateSql,
-    "events_sessionize" -> sessionizeSql,
-    "events_tumbling" -> tumblingSql,
-    "events_asof_prev" -> asofPrevSignupSql,
-    "events_resample_ffill" -> resampleFfillSql,
-    "events_decayed_sum" -> decayedSumSql,
-    "events_interval_union" -> intervalUnionSql,
-    "events_hopping" -> hoppingSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("events_twap", twapQ, twapSql),
+    Gate("events_gaps", gapsQ, gapsSql),
+    Gate("events_quota", quota, quotaSql),
+    Gate("events_quota_hopping", quotaHopping, quotaHoppingSql),
+    Gate("events_topk_daily", topkDaily, topkDailySql),
+    Gate("events_transitions", transitions, transitionsSql),
+    Gate("events_funnel", funnel, funnelSql),
+    Gate("events_funnel_steps", funnelSteps, funnelStepsSql),
+    Gate("events_assoc", assocQ, assocSql),
+    Gate("events_anomaly", anomalyQ, anomalySql),
+    Gate("events_bounce_rate", bounceRate, bounceRateSql),
+    Gate("events_sessionize", sessionize, sessionizeSql),
+    Gate("events_tumbling", tumbling, tumblingSql),
+    Gate("events_asof_prev", asofPrevSignup, asofPrevSignupSql),
+    Gate("events_resample_ffill", resampleFfill, resampleFfillSql),
+    Gate("events_decayed_sum", decayedSum, decayedSumSql),
+    Gate("events_interval_union", intervalUnion, intervalUnionSql),
+    Gate("events_hopping", hopping, hoppingSql))
 }

@@ -1027,75 +1027,39 @@ object Funcs extends QueryPack {
        |FROM part ORDER BY p_partkey""".stripMargin
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "str_wrap_partition" -> strWrapPartition,
-    "str_fuzzy_join" -> strFuzzyJoin,
-    "str_jaro_winkler" -> strJaroWinkler,
-    "str_jw_blocked_join" -> strJwBlockedJoin,
-    "str_record_linkage" -> strRecordLinkage,
-    "str_sorted_neighborhood" -> strSortedNeighborhood,
-    "str_durations" -> strDurations,
-    "str_list_repr" -> strListRepr,
-    "str_case_convert" -> strCaseConvert,
-    "str_pad_center" -> strPadCenter,
-    "dt_month_edges" -> dtMonthEdges,
-    "str_numeric_convert" -> strNumericConvert,
-    "str_attributes" -> strAttributes,
-    "math_normalize" -> mathNormalize,
-    "str_extra" -> strExtra,
-    "str_chartypes" -> strChartypes,
-    "dt_calendar" -> dtCalendar,
-    "str_basic" -> strBasic,
-    "str_search" -> strSearch,
-    "str_regex" -> strRegex,
-    "str_split_explode" -> strSplitExplode,
-    "str_distance" -> strDistance,
-    "str_edit_family" -> strEditFamily,
-    "dt_extract_date" -> dtExtractDate,
-    "dt_extract_time" -> dtExtractTime,
-    "dt_arith" -> dtArith,
-    "dt_round_freq" -> dtRoundFreq,
-    "null_handling" -> nullHandling,
-    "cond_case" -> condCase,
-    "math_funcs" -> mathFuncs,
-    "hash_funcs" -> hashFuncs,
-    "hash_variants" -> hashVariants,
-    "json_funcs" -> jsonFuncs,
-    "json_roundtrip" -> jsonRoundtrip)
-
-  override def oracle: Map[String, String] = Map(
-    "str_wrap_partition" -> strWrapPartitionSql,
-    "str_fuzzy_join" -> strFuzzyJoinSql,
-    "str_jaro_winkler" -> strJaroWinklerSql,
-    "str_jw_blocked_join" -> strJwBlockedJoinSql,
-    "str_record_linkage" -> strRecordLinkageSql,
-    "str_sorted_neighborhood" -> strSortedNeighborhoodSql,
-    "str_durations" -> strDurationsSql,
-    "str_list_repr" -> strListReprSql,
-    "str_case_convert" -> strCaseConvertSql,
-    "str_pad_center" -> strPadCenterSql,
-    "dt_month_edges" -> dtMonthEdgesSql,
-    "str_numeric_convert" -> strNumericConvertSql,
-    "str_attributes" -> strAttributesSql,
-    "math_normalize" -> mathNormalizeSql,
-    "str_extra" -> strExtraSql,
-    "str_chartypes" -> strChartypesSql,
-    "dt_calendar" -> dtCalendarSql,
-    "str_basic" -> strBasicSql,
-    "str_search" -> strSearchSql,
-    "str_regex" -> strRegexSql,
-    "str_split_explode" -> strSplitExplodeSql,
-    "str_distance" -> strDistanceSql,
-    "str_edit_family" -> strEditFamilySql,
-    "dt_extract_date" -> dtExtractDateSql,
-    "dt_extract_time" -> dtExtractTimeSql,
-    "dt_arith" -> dtArithSql,
-    "dt_round_freq" -> dtRoundFreqSql,
-    "null_handling" -> nullHandlingSql,
-    "cond_case" -> condCaseSql,
-    "math_funcs" -> mathFuncsSql,
-    "hash_funcs" -> hashFuncsSql,
-    "hash_variants" -> hashVariantsSql,
-    "json_funcs" -> jsonFuncsSql,
-    "json_roundtrip" -> jsonRoundtripSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("str_wrap_partition", strWrapPartition, strWrapPartitionSql),
+    Gate("str_fuzzy_join", strFuzzyJoin, strFuzzyJoinSql),
+    Gate("str_jaro_winkler", strJaroWinkler, strJaroWinklerSql),
+    Gate("str_jw_blocked_join", strJwBlockedJoin, strJwBlockedJoinSql),
+    Gate("str_record_linkage", strRecordLinkage, strRecordLinkageSql),
+    Gate("str_sorted_neighborhood", strSortedNeighborhood, strSortedNeighborhoodSql),
+    Gate("str_durations", strDurations, strDurationsSql),
+    Gate("str_list_repr", strListRepr, strListReprSql),
+    Gate("str_case_convert", strCaseConvert, strCaseConvertSql),
+    Gate("str_pad_center", strPadCenter, strPadCenterSql),
+    Gate("dt_month_edges", dtMonthEdges, dtMonthEdgesSql),
+    Gate("str_numeric_convert", strNumericConvert, strNumericConvertSql),
+    Gate("str_attributes", strAttributes, strAttributesSql),
+    Gate("math_normalize", mathNormalize, mathNormalizeSql),
+    Gate("str_extra", strExtra, strExtraSql),
+    Gate("str_chartypes", strChartypes, strChartypesSql),
+    Gate("dt_calendar", dtCalendar, dtCalendarSql),
+    Gate("str_basic", strBasic, strBasicSql),
+    Gate("str_search", strSearch, strSearchSql),
+    Gate("str_regex", strRegex, strRegexSql),
+    Gate("str_split_explode", strSplitExplode, strSplitExplodeSql),
+    Gate("str_distance", strDistance, strDistanceSql),
+    Gate("str_edit_family", strEditFamily, strEditFamilySql),
+    Gate("dt_extract_date", dtExtractDate, dtExtractDateSql),
+    Gate("dt_extract_time", dtExtractTime, dtExtractTimeSql),
+    Gate("dt_arith", dtArith, dtArithSql),
+    Gate("dt_round_freq", dtRoundFreq, dtRoundFreqSql),
+    Gate("null_handling", nullHandling, nullHandlingSql),
+    Gate("cond_case", condCase, condCaseSql),
+    Gate("math_funcs", mathFuncs, mathFuncsSql),
+    Gate("hash_funcs", hashFuncs, hashFuncsSql),
+    Gate("hash_variants", hashVariants, hashVariantsSql),
+    Gate("json_funcs", jsonFuncs, jsonFuncsSql),
+    Gate("json_roundtrip", jsonRoundtrip, jsonRoundtripSql))
 }

@@ -433,35 +433,19 @@ object IoPack extends QueryPack {
       |  max(l_linenumber = 1) AS nullable_has_null
       |FROM lineitem WHERE l_orderkey % 13 < 6""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "io_parquet_metadata" -> parquetMetadataGate,
-    "io_orc_metadata" -> orcMetadataGate,
-    "io_orc_stripe_metadata" -> orcStripeMetadataGate,
-    "io_csv_roundtrip" -> csvRoundTrip,
-    "io_json_roundtrip" -> jsonRoundTrip,
-    "io_orc_roundtrip" -> orcRoundTrip,
-    "io_avro_roundtrip" -> avroRoundTrip,
-    "io_avro_dsv2_roundtrip" -> avroDsv2RoundTrip,
-    "io_arrow_roundtrip" -> arrowRoundTrip,
-    "io_text_delim" -> textDelim,
-    "io_bucketed_join" -> bucketedJoin,
-    "io_partition_prune" -> partitionPrune,
-    "io_zorder_prune" -> zorderPrune,
-    "io_zorder3_prune" -> zorder3Prune)
-
-  override def oracle: Map[String, String] = Map(
-    "io_parquet_metadata" -> parquetMetadataGateSql,
-    "io_orc_metadata" -> orcMetadataGateSql,
-    "io_orc_stripe_metadata" -> orcStripeMetadataGateSql,
-    "io_csv_roundtrip" -> csvRoundTripSql,
-    "io_json_roundtrip" -> jsonRoundTripSql,
-    "io_orc_roundtrip" -> orcRoundTripSql,
-    "io_avro_roundtrip" -> avroRoundTripSql,
-    "io_avro_dsv2_roundtrip" -> avroDsv2RoundTripSql,
-    "io_arrow_roundtrip" -> arrowRoundTripSql,
-    "io_text_delim" -> textDelimSql,
-    "io_bucketed_join" -> bucketedJoinSql,
-    "io_partition_prune" -> partitionPruneSql,
-    "io_zorder_prune" -> zorderPruneSql,
-    "io_zorder3_prune" -> zorder3PruneSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("io_parquet_metadata", parquetMetadataGate, parquetMetadataGateSql),
+    Gate("io_orc_metadata", orcMetadataGate, orcMetadataGateSql),
+    Gate("io_orc_stripe_metadata", orcStripeMetadataGate, orcStripeMetadataGateSql),
+    Gate("io_csv_roundtrip", csvRoundTrip, csvRoundTripSql),
+    Gate("io_json_roundtrip", jsonRoundTrip, jsonRoundTripSql),
+    Gate("io_orc_roundtrip", orcRoundTrip, orcRoundTripSql),
+    Gate("io_avro_roundtrip", avroRoundTrip, avroRoundTripSql),
+    Gate("io_avro_dsv2_roundtrip", avroDsv2RoundTrip, avroDsv2RoundTripSql),
+    Gate("io_arrow_roundtrip", arrowRoundTrip, arrowRoundTripSql),
+    Gate("io_text_delim", textDelim, textDelimSql),
+    Gate("io_bucketed_join", bucketedJoin, bucketedJoinSql),
+    Gate("io_partition_prune", partitionPrune, partitionPruneSql),
+    Gate("io_zorder_prune", zorderPrune, zorderPruneSql),
+    Gate("io_zorder3_prune", zorder3Prune, zorder3PruneSql))
 }

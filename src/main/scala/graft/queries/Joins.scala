@@ -310,35 +310,19 @@ object Joins extends QueryPack {
       .orderBy($"o_orderpriority")
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_skewed_raw" -> joinSkewedRaw,
-    "join_skewed_salted" -> joinSkewedSalted,
-    "join_interval_grid" -> joinIntervalGrid,
-    "join_mark" -> joinMark,
-    "join_inner" -> joinInner,
-    "join_left" -> joinLeft,
-    "join_full" -> joinFull,
-    "join_semi" -> joinSemi,
-    "join_anti" -> joinAnti,
-    "join_cross" -> joinCross,
-    "join_nonequi" -> joinNonEqui,
-    "join_band_bucketed" -> joinBandBucketed,
-    "join_mixed" -> joinMixed,
-    "join_nullsafe" -> joinNullSafe)
-
-  override def oracle: Map[String, String] = Map(
-    "join_skewed_raw" -> joinSkewedSaltedSql,
-    "join_skewed_salted" -> joinSkewedSaltedSql,
-    "join_interval_grid" -> joinIntervalGridSql,
-    "join_mark" -> joinMarkSql,
-    "join_inner" -> joinInnerSql,
-    "join_left" -> joinLeftSql,
-    "join_full" -> joinFullSql,
-    "join_semi" -> joinSemiSql,
-    "join_anti" -> joinAntiSql,
-    "join_cross" -> joinCrossSql,
-    "join_nonequi" -> joinNonEquiSql,
-    "join_band_bucketed" -> joinBandBucketedSql,
-    "join_mixed" -> joinMixedSql,
-    "join_nullsafe" -> joinNullSafeSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("join_skewed_raw", joinSkewedRaw, joinSkewedSaltedSql),
+    Gate("join_skewed_salted", joinSkewedSalted, joinSkewedSaltedSql),
+    Gate("join_interval_grid", joinIntervalGrid, joinIntervalGridSql),
+    Gate("join_mark", joinMark, joinMarkSql),
+    Gate("join_inner", joinInner, joinInnerSql),
+    Gate("join_left", joinLeft, joinLeftSql),
+    Gate("join_full", joinFull, joinFullSql),
+    Gate("join_semi", joinSemi, joinSemiSql),
+    Gate("join_anti", joinAnti, joinAntiSql),
+    Gate("join_cross", joinCross, joinCrossSql),
+    Gate("join_nonequi", joinNonEqui, joinNonEquiSql),
+    Gate("join_band_bucketed", joinBandBucketed, joinBandBucketedSql),
+    Gate("join_mixed", joinMixed, joinMixedSql),
+    Gate("join_nullsafe", joinNullSafe, joinNullSafeSql))
 }

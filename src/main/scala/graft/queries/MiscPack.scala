@@ -1176,41 +1176,40 @@ object MiscPack extends QueryPack {
        |WHERE o_orderpriority = '1-URGENT'
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "opt_runtime_filter" -> optRuntimeFilter,
-    "graph_pagerank" -> pageRankQ,
-    "graph_triangles" -> trianglesQ,
-    "graph_bfs_levels" -> bfsQ,
-    "graph_components" -> componentsQ,
-    "agg_theta_setops" -> thetaSetOps,
-    "agg_kmv_rollup" -> kmvRollup,
-    "agg_topk_heavy" -> topkHeavy,
-    "is_sorted_check" -> isSortedQ,
-    "encode_factorize" -> encodeFactorize,
-    "search_sorted" -> searchSorted,
-    "agg_tdigest" -> tdigestQuantiles,
-    "agg_tdigest_merge" -> tdigestMergeRollup,
-    "agg_tdigest_rekeyed" -> tdigestRekeyed,
-    "agg_hll_rollup" -> hllRollup,
-    "agg_cms_freq" -> cmsFrequencies,
-    "dq_rule_audit" -> dqRuleAudit,
-    "dq_join_profile" -> dqJoinProfile,
-    "dq_profile" -> dqProfile,
-    "cdc_merge" -> cdcMerge,
-    "agg_kmv_distinct" -> kmvDistinct,
-    "decimal_arith" -> decimalArith,
-    "decimal_round" -> decimalRound,
-    "subquery_scalar" -> subqueryScalar,
-    "bin_label" -> binLabel,
-    "bin_qcut" -> binQcut,
-    "isin_filter" -> isinFilter,
-    "ipv4_roundtrip" -> ipv4RoundTrip,
-    "agg_approx" -> aggApprox,
-    "sample_seeded" -> sampleSeeded,
-    "doc_stems" -> docStems,
-    "events_ewma" -> eventsEwma,
-    "events_ewm_adjust" -> eventsEwmAdjust)
-
+  override def gates: Seq[Gate] = Seq(
+    Gate("opt_runtime_filter", optRuntimeFilter, optRuntimeFilterSql),
+    Gate("graph_pagerank", pageRankQ, pageRankSql),
+    Gate("graph_triangles", trianglesQ, trianglesSql),
+    Gate("graph_bfs_levels", bfsQ, bfsSql),
+    Gate("graph_components", componentsQ, componentsSql),
+    Gate("agg_theta_setops", thetaSetOps, thetaSetOpsSql),
+    Gate("agg_kmv_rollup", kmvRollup, kmvRollupSql),
+    Gate("agg_topk_heavy", topkHeavy, topkHeavySql),
+    Gate("is_sorted_check", isSortedQ, isSortedSql),
+    Gate("encode_factorize", encodeFactorize, encodeFactorizeSql),
+    Gate("search_sorted", searchSorted, searchSortedSql),
+    Gate("agg_tdigest", tdigestQuantiles, tdigestQuantilesSql),
+    Gate("agg_tdigest_merge", tdigestMergeRollup, tdigestMergeRollupSql),
+    Gate("agg_tdigest_rekeyed", tdigestRekeyed, tdigestRekeyedSql),
+    Gate("agg_hll_rollup", hllRollup, hllRollupSql),
+    Gate("agg_cms_freq", cmsFrequencies, cmsFrequenciesSql),
+    Gate("dq_rule_audit", dqRuleAudit, dqRuleAuditSql),
+    Gate("dq_join_profile", dqJoinProfile, dqJoinProfileSql),
+    Gate("dq_profile", dqProfile, dqProfileSql),
+    Gate("cdc_merge", cdcMerge, cdcMergeSql),
+    Gate("agg_kmv_distinct", kmvDistinct, kmvDistinctSql),
+    Gate("decimal_arith", decimalArith, decimalArithSql),
+    Gate("decimal_round", decimalRound, decimalRoundSql),
+    Gate("subquery_scalar", subqueryScalar, subqueryScalarSql),
+    Gate("bin_label", binLabel, binLabelSql),
+    Gate("bin_qcut", binQcut, binQcutSql),
+    Gate("isin_filter", isinFilter, isinFilterSql),
+    Gate("ipv4_roundtrip", ipv4RoundTrip, ipv4RoundTripSql),
+    Gate("agg_approx", aggApprox, aggApproxSql),
+    Gate("sample_seeded", sampleSeeded, sampleSeededSql),
+    Gate("doc_stems", docStems, docStemsSql),
+    Gate("events_ewma", eventsEwma, eventsEwmaSql),
+    Gate("events_ewm_adjust", eventsEwmAdjust, eventsEwmAdjustSql))
   val eventsEwmaSql: String =
     """SELECT user_id, event_id, value,
       |  list_reduce(list(value) OVER w,
@@ -1220,40 +1219,6 @@ object MiscPack extends QueryPack {
       |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin
 
-  override def oracle: Map[String, String] = Map(
-    "opt_runtime_filter" -> optRuntimeFilterSql,
-    "graph_pagerank" -> pageRankSql,
-    "graph_triangles" -> trianglesSql,
-    "graph_bfs_levels" -> bfsSql,
-    "graph_components" -> componentsSql,
-    "agg_theta_setops" -> thetaSetOpsSql,
-    "agg_kmv_rollup" -> kmvRollupSql,
-    "agg_topk_heavy" -> topkHeavySql,
-    "dq_rule_audit" -> dqRuleAuditSql,
-    "dq_join_profile" -> dqJoinProfileSql,
-    "dq_profile" -> dqProfileSql,
-    "cdc_merge" -> cdcMergeSql,
-    "agg_kmv_distinct" -> kmvDistinctSql,
-    "is_sorted_check" -> isSortedSql,
-    "encode_factorize" -> encodeFactorizeSql,
-    "search_sorted" -> searchSortedSql,
-    "decimal_arith" -> decimalArithSql,
-    "decimal_round" -> decimalRoundSql,
-    "subquery_scalar" -> subqueryScalarSql,
-    "bin_label" -> binLabelSql,
-    "bin_qcut" -> binQcutSql,
-    "isin_filter" -> isinFilterSql,
-    "ipv4_roundtrip" -> ipv4RoundTripSql,
-    "events_ewma" -> eventsEwmaSql,
-    "events_ewm_adjust" -> eventsEwmAdjustSql,
-    "sample_seeded" -> sampleSeededSql,
-    "agg_approx" -> aggApproxSql,
-    "agg_tdigest" -> tdigestQuantilesSql,
-    "agg_tdigest_merge" -> tdigestMergeRollupSql,
-    "agg_tdigest_rekeyed" -> tdigestRekeyedSql,
-    "agg_hll_rollup" -> hllRollupSql,
-    "agg_cms_freq" -> cmsFrequenciesSql,
-    "doc_stems" -> docStemsSql)
 
   /** Fixed Porter-1980 word→stem table for the 31-token corpus
     * vocabulary — see [[docStems]] for the per-word rule derivations.

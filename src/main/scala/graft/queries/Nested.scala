@@ -369,39 +369,21 @@ object Nested extends QueryPack {
       |ORDER BY g_status, g_prio, o_orderstatus NULLS FIRST,
       |  o_orderpriority NULLS FIRST""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "flatten_nested" -> flattenNested,
-    "agg_grouping_sets" -> groupingSets,
-    "map_ops" -> mapOps,
-    "reshape_onehot" -> oneHot,
-    "reshape_crosstab" -> crosstabQ,
-    "reshape_interleave" -> interleaveQ,
-    "reshape_tile" -> tileQ,
-    "reshape_repeat" -> repeatRowsQ,
-    "reshape_bytecast" -> byteCastQ,
-    "reshape_transpose" -> transposeQ,
-    "arr_ops" -> arrOps,
-    "arr_lambda" -> arrLambda,
-    "seq_explode" -> seqExplode,
-    "pivot_wide" -> pivotWide,
-    "unpivot_long" -> unpivotLong,
-    "struct_ops" -> structOps)
-
-  override def oracle: Map[String, String] = Map(
-    "flatten_nested" -> flattenNestedSql,
-    "agg_grouping_sets" -> groupingSetsSql,
-    "map_ops" -> mapOpsSql,
-    "reshape_onehot" -> oneHotSql,
-    "reshape_crosstab" -> crosstabSql,
-    "reshape_interleave" -> interleaveSql,
-    "reshape_tile" -> tileSql,
-    "reshape_repeat" -> repeatRowsSql,
-    "reshape_bytecast" -> byteCastSql,
-    "reshape_transpose" -> transposeSql,
-    "arr_ops" -> arrOpsSql,
-    "arr_lambda" -> arrLambdaSql,
-    "seq_explode" -> seqExplodeSql,
-    "pivot_wide" -> pivotWideSql,
-    "unpivot_long" -> unpivotLongSql,
-    "struct_ops" -> structOpsSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("flatten_nested", flattenNested, flattenNestedSql),
+    Gate("agg_grouping_sets", groupingSets, groupingSetsSql),
+    Gate("map_ops", mapOps, mapOpsSql),
+    Gate("reshape_onehot", oneHot, oneHotSql),
+    Gate("reshape_crosstab", crosstabQ, crosstabSql),
+    Gate("reshape_interleave", interleaveQ, interleaveSql),
+    Gate("reshape_tile", tileQ, tileSql),
+    Gate("reshape_repeat", repeatRowsQ, repeatRowsSql),
+    Gate("reshape_bytecast", byteCastQ, byteCastSql),
+    Gate("reshape_transpose", transposeQ, transposeSql),
+    Gate("arr_ops", arrOps, arrOpsSql),
+    Gate("arr_lambda", arrLambda, arrLambdaSql),
+    Gate("seq_explode", seqExplode, seqExplodeSql),
+    Gate("pivot_wide", pivotWide, pivotWideSql),
+    Gate("unpivot_long", unpivotLong, unpivotLongSql),
+    Gate("struct_ops", structOps, structOpsSql))
 }

@@ -4,16 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** A named bundle of driver-checkable queries plus their DuckDB oracle SQL.
+/** One driver-checked query: its name, the builder that runs it over a
+  * test-data directory, and the DuckDB SQL its result must equal.
   *
   * Convention (driver contract): the comparator sorts columns by name and
   * hash-compares values, so every computed column is aliased identically in
   * the Spark query and the oracle SQL, and every query ends in a total
   * ORDER BY so row order is deterministic in both engines.
   */
+final case class Gate(name: String, build: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
+/** A named bundle of gates covering one slice of the operator inventory. */
 trait QueryPack {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracle: Map[String, String]
+  def gates: Seq[Gate]
 }
 
 /** Shared helpers for cross-engine deterministic results.

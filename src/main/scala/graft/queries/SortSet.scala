@@ -246,29 +246,16 @@ object SortSet extends QueryPack {
       |  FROM orders)
       |WHERE rn = 1 ORDER BY o_custkey""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sort_multi_nulls" -> sortMultiNulls,
-    "dedup_keep_variants" -> dedupKeepVariants,
-    "topk" -> topK,
-    "limit_offset" -> limitOffset,
-    "set_union_all" -> unionAll,
-    "set_intersect" -> intersectKeys,
-    "set_except" -> exceptKeys,
-    "distinct_rows" -> distinctRows,
-    "distinct_nan_unequal" -> distinctNanUnequalQ,
-    "dedup_keep_first" -> dedupKeepFirst,
-    "unique_consecutive" -> uniqueConsecutive)
-
-  override def oracle: Map[String, String] = Map(
-    "sort_multi_nulls" -> sortMultiNullsSql,
-    "dedup_keep_variants" -> dedupKeepVariantsSql,
-    "topk" -> topKSql,
-    "limit_offset" -> limitOffsetSql,
-    "set_union_all" -> unionAllSql,
-    "set_intersect" -> intersectKeysSql,
-    "set_except" -> exceptKeysSql,
-    "distinct_rows" -> distinctRowsSql,
-    "distinct_nan_unequal" -> distinctNanUnequalSql,
-    "dedup_keep_first" -> dedupKeepFirstSql,
-    "unique_consecutive" -> uniqueConsecutiveSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("sort_multi_nulls", sortMultiNulls, sortMultiNullsSql),
+    Gate("dedup_keep_variants", dedupKeepVariants, dedupKeepVariantsSql),
+    Gate("topk", topK, topKSql),
+    Gate("limit_offset", limitOffset, limitOffsetSql),
+    Gate("set_union_all", unionAll, unionAllSql),
+    Gate("set_intersect", intersectKeys, intersectKeysSql),
+    Gate("set_except", exceptKeys, exceptKeysSql),
+    Gate("distinct_rows", distinctRows, distinctRowsSql),
+    Gate("distinct_nan_unequal", distinctNanUnequalQ, distinctNanUnequalSql),
+    Gate("dedup_keep_first", dedupKeepFirst, dedupKeepFirstSql),
+    Gate("unique_consecutive", uniqueConsecutive, uniqueConsecutiveSql))
 }

@@ -738,35 +738,19 @@ object StreamPack extends QueryPack {
          |LEFT JOIN agg a ON a.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_running_agg" -> runningAggQ,
-    "stream_dedup" -> dedupQ,
-    "stream_sessionize" -> sessionizeQ,
-    "stream_sessionize_tws" -> sessionizeTwsQ,
-    "stream_restart" -> restartQ,
-    "stream_drift" -> driftQ,
-    "stream_weighted_reservoir" -> reservoirQ,
-    "stream_asof" -> asofQ,
-    "stream_interval_join" -> intervalJoinQ,
-    "stream_rekey" -> rekeyQ,
-    "stream_curation" -> curationQ,
-    "stream_fuzzy_screen" -> fuzzyScreenQ,
-    "stream_segment_screen" -> segmentScreenQ,
-    "stream_rig_baseline" -> rigBaselineQ)
-
-  override def oracle: Map[String, String] = Map(
-    "stream_running_agg" -> runningAggSql,
-    "stream_dedup" -> dedupSql,
-    "stream_sessionize" -> sessionizeSql,
-    "stream_sessionize_tws" -> sessionizeSql,
-    "stream_restart" -> sessionizeSql,
-    "stream_drift" -> driftSql,
-    "stream_weighted_reservoir" -> reservoirSql,
-    "stream_asof" -> asofSql,
-    "stream_interval_join" -> intervalJoinSql,
-    "stream_rekey" -> rekeySql,
-    "stream_curation" -> curationSql,
-    "stream_fuzzy_screen" -> fuzzyScreenSql,
-    "stream_segment_screen" -> segmentScreenSql,
-    "stream_rig_baseline" -> rigBaselineSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("stream_running_agg", runningAggQ, runningAggSql),
+    Gate("stream_dedup", dedupQ, dedupSql),
+    Gate("stream_sessionize", sessionizeQ, sessionizeSql),
+    Gate("stream_sessionize_tws", sessionizeTwsQ, sessionizeSql),
+    Gate("stream_restart", restartQ, sessionizeSql),
+    Gate("stream_drift", driftQ, driftSql),
+    Gate("stream_weighted_reservoir", reservoirQ, reservoirSql),
+    Gate("stream_asof", asofQ, asofSql),
+    Gate("stream_interval_join", intervalJoinQ, intervalJoinSql),
+    Gate("stream_rekey", rekeyQ, rekeySql),
+    Gate("stream_curation", curationQ, curationSql),
+    Gate("stream_fuzzy_screen", fuzzyScreenQ, fuzzyScreenSql),
+    Gate("stream_segment_screen", segmentScreenQ, segmentScreenSql),
+    Gate("stream_rig_baseline", rigBaselineQ, rigBaselineSql))
 }

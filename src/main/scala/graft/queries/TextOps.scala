@@ -2657,17 +2657,14 @@ object TextOps extends QueryPack {
 
   /** Vocabulary tokenization (nvtext/tokenize.hpp:228 tokenize_with_
     * vocabulary): corpus-derived vocabulary (distinct tokens of length
-    * ≥ 3, ids by sorted order), collected in id order while the query
-    * is built and resolved per document through VocabIds; shorter
+    * ≥ 3, ids by sorted order), collected while the query is built
+    * and resolved per document through VocabIds; shorter
     * tokens fall to default_id = -1. NULL text has no tokens, and the
     * oracle emits no row for such a document. */
   def tokenIds(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // the vocabulary is bounded (it is about to be broadcast): put it in
-    // id order on the driver rather than with a distributed sort
     val vocab = graft.operators.VocabTokenize
       .buildVocabulary(docs, "text", minTokenLength = 3)
-      .collect().sortBy(_.getInt(1)).map(_.getString(0)).toSeq
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), graft.operators.VocabTokenize
         .tokenizeWithVocabulary(col("text"), vocab).as("ids"))
@@ -2795,164 +2792,84 @@ object TextOps extends QueryPack {
       |SELECT CAST(rank AS INT) AS rank, a, b, CAST(cnt AS BIGINT) AS cnt
       |FROM vals ORDER BY rank""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_bpe_merges" -> bpeMerges,
-    "doc_bpe_learn" -> bpeLearn,
-    "doc_bpe_tokens" -> bpeTokens,
-    "doc_token_ids" -> tokenIds,
-    "doc_detok" -> detok,
-    "doc_tfidf" -> tfidfQ,
-    "doc_bm25" -> bm25Q,
-    "doc_strip_html" -> stripHtmlQ,
-    "doc_ngram_diversity" -> ngramDiversityQ,
-    "doc_sentences" -> sentencesQ,
-    "doc_langid_margin" -> langidMarginQ,
-    "doc_oov" -> oovQ,
-    "corpus_diff" -> corpusDiffQ,
-    "corpus_leakage_report" -> leakageReportQ,
-    "corpus_decontaminate" -> decontaminateQ,
-    "doc_chunks" -> chunksQ,
-    "doc_chunk_dedup" -> chunkDedup,
-    "doc_wordpiece" -> wordpiece,
+  override def gates: Seq[Gate] = Seq(
+    Gate("doc_bpe_merges", bpeMerges, bpeMergesSql),
+    Gate("doc_bpe_learn", bpeLearn, bpeLearnSql),
+    Gate("doc_bpe_tokens", bpeTokens, bpeTokensSql),
+    Gate("doc_token_ids", tokenIds, tokenIdsSql),
+    Gate("doc_detok", detok, detokSql),
+    Gate("doc_tfidf", tfidfQ, tfidfSql),
+    Gate("doc_bm25", bm25Q, bm25Sql),
+    Gate("doc_strip_html", stripHtmlQ, stripHtmlSql),
+    Gate("doc_ngram_diversity", ngramDiversityQ, ngramDiversitySql),
+    Gate("doc_sentences", sentencesQ, sentencesSql),
+    Gate("doc_langid_margin", langidMarginQ, langidMarginSql),
+    Gate("doc_oov", oovQ, oovSql),
+    Gate("corpus_diff", corpusDiffQ, corpusDiffSql),
+    Gate("corpus_leakage_report", leakageReportQ, leakageReportSql),
+    Gate("corpus_decontaminate", decontaminateQ, decontaminateSql),
+    Gate("doc_chunks", chunksQ, chunksSql),
+    Gate("doc_chunk_dedup", chunkDedup, chunkDedupSql),
+    Gate("doc_wordpiece", wordpiece, wordpieceSql),
     // the same single broadcast-vocab path as doc_wordpiece
-    "doc_wordpiece_bc" -> wordpiece,
-    "doc_bert_encode" -> bertEncodeQ,
-    "doc_dedup_exact" -> dedupExact,
-    "doc_dedup_fingerprint" -> dedupFingerprint,
-    "doc_dedup_normalized" -> dedupNormalized,
-    "doc_df_prune" -> dfPrune,
-    "doc_seg_dedup" -> segDedupFirst,
-    "doc_spell_correct" -> spellCorrect,
-    "doc_normalize" -> normalize,
-    "doc_token_replace" -> tokenReplace,
-    "doc_token_stats" -> tokenStats,
-    "doc_quality" -> quality,
-    "doc_quality_buckets" -> qualityBuckets,
-    "doc_char_entropy" -> charEntropyQ,
-    "doc_winnow" -> docWinnow,
-    "doc_winnow_pairs" -> docWinnowPairs,
-    "doc_soundex" -> docSoundex,
-    "doc_metaphone" -> docMetaphone,
-    "doc_double_metaphone" -> docDoubleMetaphone,
-    "doc_phonetic_extra" -> docPhoneticExtra,
-    "doc_scripts" -> docScripts,
-    "doc_langid" -> langid,
-    "doc_jaccard_pairs" -> jaccardPairs,
-    "doc_containment_pairs" -> containmentPairs,
-    "doc_minhash_pairs" -> minhashPairs,
-    "doc_minhash_ngram_pairs" -> minhashNgramPairs,
-    "doc_simhash_pairs" -> simhashPairs,
-    "doc_substring_dups" -> substringDups,
-    "doc_duplicated_spans" -> duplicatedSpans,
-    "doc_contaminated_spans" -> contaminatedSpans,
-    "doc_hotclique_dups" -> hotCliqueDups,
-    "doc_hotclique_contamination" -> hotCliqueContamination,
-    "doc_contamination" -> contamination,
-    "doc_curation" -> curation,
-    "doc_redact_pii" -> redactPii,
-    "doc_pack_bins" -> packBins,
-    "doc_multimodal" -> multimodal,
-    "doc_media_decode" -> mediaDecode,
-    "doc_media_resize" -> mediaResize,
-    "doc_multimodal_embed" -> multimodalEmbed,
-    "embed_knn" -> embedKnn,
-    "embed_hard_negatives" -> embedHardNegatives,
-    "embed_knn_lsh" -> embedKnnLsh,
-    "embed_knn_ivf" -> embedKnnIvf,
-    "embed_ann_recall" -> embedAnnRecall,
-    "embed_neardup" -> embedNearDup,
-    "embed_neardup_lsh" -> embedNearDupLsh,
-    "embed_auto_granularity" -> embedAutoGranularity,
-    "embed_normalize" -> embedNormalize,
-    "embed_centroids" -> embedCentroids,
-    "stats_contingency" -> contingencyQ,
-    "stats_rank_test" -> rankTestQ,
-    "embed_quantize" -> embedQuantize,
-    "embed_project" -> embedProject,
-    "embed_semdedup" -> embedSemDedup,
-    "embed_hier_assign" -> embedHierAssign,
-    "embed_hier_recall" -> embedHierRecall,
-    "embed_exemplars" -> embedExemplars,
-    "doc_dedup_delta" -> dedupDelta,
-    "doc_dedup_delta_near" -> dedupDeltaNear)
-
-  override def oracle: Map[String, String] = Map(
-    "doc_bpe_tokens" -> bpeTokensSql,
-    "doc_token_ids" -> tokenIdsSql,
-    "doc_detok" -> detokSql,
-    "doc_tfidf" -> tfidfSql,
-    "doc_bm25" -> bm25Sql,
-    "doc_strip_html" -> stripHtmlSql,
-    "doc_ngram_diversity" -> ngramDiversitySql,
-    "doc_sentences" -> sentencesSql,
-    "doc_langid_margin" -> langidMarginSql,
-    "doc_oov" -> oovSql,
-    "corpus_diff" -> corpusDiffSql,
-    "corpus_leakage_report" -> leakageReportSql,
-    "corpus_decontaminate" -> decontaminateSql,
-    "doc_chunks" -> chunksSql,
-    "doc_chunk_dedup" -> chunkDedupSql,
-    "doc_substring_dups" -> substringDupsSql,
-    "doc_duplicated_spans" -> duplicatedSpansSql,
-    "doc_contaminated_spans" -> contaminatedSpansSql,
-    "doc_hotclique_dups" -> hotCliqueDupsSql,
-    "doc_hotclique_contamination" -> hotCliqueContaminationSql,
-    "doc_contamination" -> contaminationSql,
-    "doc_dedup_exact" -> dedupExactSql,
-    "doc_dedup_fingerprint" -> dedupFingerprintSql,
-    "doc_dedup_normalized" -> dedupNormalizedSql,
-    "doc_df_prune" -> dfPruneSql,
-    "doc_seg_dedup" -> segDedupFirstSql,
-    "doc_spell_correct" -> spellCorrectSql,
-    "doc_normalize" -> normalizeSql,
-    "doc_token_replace" -> tokenReplaceSql,
-    "doc_token_stats" -> tokenStatsSql,
-    "doc_quality" -> qualitySql,
-    "doc_quality_buckets" -> qualityBucketsSql,
-    "doc_char_entropy" -> charEntropySql,
-    "doc_winnow" -> docWinnowSql,
-    "doc_winnow_pairs" -> docWinnowPairsSql,
-    "doc_soundex" -> docSoundexSql,
-    "doc_metaphone" -> docMetaphoneSql,
-    "doc_double_metaphone" -> docDoubleMetaphoneSql,
-    "doc_phonetic_extra" -> docPhoneticExtraSql,
-    "doc_scripts" -> docScriptsSql,
-    "doc_langid" -> langidSql,
-    "doc_jaccard_pairs" -> jaccardPairsSql,
-    "doc_containment_pairs" -> containmentPairsSql,
-    "doc_wordpiece" -> wordpieceSql,
-    "doc_wordpiece_bc" -> wordpieceSql,
-    "doc_bert_encode" -> bertEncodeSql,
-    "doc_curation" -> curationSql,
-    "doc_redact_pii" -> redactPiiSql,
-    "doc_pack_bins" -> packBinsSql,
-    "doc_multimodal" -> multimodalSql,
-    "doc_media_decode" -> mediaDecodeSql,
-    "doc_media_resize" -> mediaResizeSql,
-    "embed_knn" -> embedKnnSql,
-    "embed_hard_negatives" -> embedHardNegativesSql,
-    "embed_knn_lsh" -> embedKnnLshSql,
-    "embed_knn_ivf" -> embedKnnIvfSql,
-    "embed_ann_recall" -> embedAnnRecallSql,
-    "embed_semdedup" -> embedSemDedupSql,
-    "embed_hier_assign" -> embedHierAssignSql,
-    "embed_hier_recall" -> embedHierRecallSql,
-    "embed_exemplars" -> embedExemplarsSql,
-    "embed_neardup_lsh" -> embedNearDupLshSql,
-    "embed_auto_granularity" -> embedAutoGranularitySql,
-    "doc_multimodal_embed" -> multimodalEmbedSql,
-    "embed_neardup" -> embedNearDupSql,
-    "embed_normalize" -> embedNormalizeSql,
-    "embed_centroids" -> embedCentroidsSql,
-    "stats_contingency" -> contingencySql,
-    "stats_rank_test" -> rankTestSql,
-    "embed_quantize" -> embedQuantizeSql,
-    "embed_project" -> embedProjectSql,
-    "doc_dedup_delta" -> dedupDeltaSql,
-    "doc_minhash_pairs" -> minhashPairsSql,
-    "doc_minhash_ngram_pairs" -> minhashNgramPairsSql,
-    "doc_simhash_pairs" -> simhashPairsSql,
-    "doc_dedup_delta_near" -> dedupDeltaNearSql,
-    "doc_bpe_merges" -> bpeMergesSql,
-    "doc_bpe_learn" -> bpeLearnSql)
+    Gate("doc_wordpiece_bc", wordpiece, wordpieceSql),
+    Gate("doc_bert_encode", bertEncodeQ, bertEncodeSql),
+    Gate("doc_dedup_exact", dedupExact, dedupExactSql),
+    Gate("doc_dedup_fingerprint", dedupFingerprint, dedupFingerprintSql),
+    Gate("doc_dedup_normalized", dedupNormalized, dedupNormalizedSql),
+    Gate("doc_df_prune", dfPrune, dfPruneSql),
+    Gate("doc_seg_dedup", segDedupFirst, segDedupFirstSql),
+    Gate("doc_spell_correct", spellCorrect, spellCorrectSql),
+    Gate("doc_normalize", normalize, normalizeSql),
+    Gate("doc_token_replace", tokenReplace, tokenReplaceSql),
+    Gate("doc_token_stats", tokenStats, tokenStatsSql),
+    Gate("doc_quality", quality, qualitySql),
+    Gate("doc_quality_buckets", qualityBuckets, qualityBucketsSql),
+    Gate("doc_char_entropy", charEntropyQ, charEntropySql),
+    Gate("doc_winnow", docWinnow, docWinnowSql),
+    Gate("doc_winnow_pairs", docWinnowPairs, docWinnowPairsSql),
+    Gate("doc_soundex", docSoundex, docSoundexSql),
+    Gate("doc_metaphone", docMetaphone, docMetaphoneSql),
+    Gate("doc_double_metaphone", docDoubleMetaphone, docDoubleMetaphoneSql),
+    Gate("doc_phonetic_extra", docPhoneticExtra, docPhoneticExtraSql),
+    Gate("doc_scripts", docScripts, docScriptsSql),
+    Gate("doc_langid", langid, langidSql),
+    Gate("doc_jaccard_pairs", jaccardPairs, jaccardPairsSql),
+    Gate("doc_containment_pairs", containmentPairs, containmentPairsSql),
+    Gate("doc_minhash_pairs", minhashPairs, minhashPairsSql),
+    Gate("doc_minhash_ngram_pairs", minhashNgramPairs, minhashNgramPairsSql),
+    Gate("doc_simhash_pairs", simhashPairs, simhashPairsSql),
+    Gate("doc_substring_dups", substringDups, substringDupsSql),
+    Gate("doc_duplicated_spans", duplicatedSpans, duplicatedSpansSql),
+    Gate("doc_contaminated_spans", contaminatedSpans, contaminatedSpansSql),
+    Gate("doc_hotclique_dups", hotCliqueDups, hotCliqueDupsSql),
+    Gate("doc_hotclique_contamination", hotCliqueContamination, hotCliqueContaminationSql),
+    Gate("doc_contamination", contamination, contaminationSql),
+    Gate("doc_curation", curation, curationSql),
+    Gate("doc_redact_pii", redactPii, redactPiiSql),
+    Gate("doc_pack_bins", packBins, packBinsSql),
+    Gate("doc_multimodal", multimodal, multimodalSql),
+    Gate("doc_media_decode", mediaDecode, mediaDecodeSql),
+    Gate("doc_media_resize", mediaResize, mediaResizeSql),
+    Gate("doc_multimodal_embed", multimodalEmbed, multimodalEmbedSql),
+    Gate("embed_knn", embedKnn, embedKnnSql),
+    Gate("embed_hard_negatives", embedHardNegatives, embedHardNegativesSql),
+    Gate("embed_knn_lsh", embedKnnLsh, embedKnnLshSql),
+    Gate("embed_knn_ivf", embedKnnIvf, embedKnnIvfSql),
+    Gate("embed_ann_recall", embedAnnRecall, embedAnnRecallSql),
+    Gate("embed_neardup", embedNearDup, embedNearDupSql),
+    Gate("embed_neardup_lsh", embedNearDupLsh, embedNearDupLshSql),
+    Gate("embed_auto_granularity", embedAutoGranularity, embedAutoGranularitySql),
+    Gate("embed_normalize", embedNormalize, embedNormalizeSql),
+    Gate("embed_centroids", embedCentroids, embedCentroidsSql),
+    Gate("stats_contingency", contingencyQ, contingencySql),
+    Gate("stats_rank_test", rankTestQ, rankTestSql),
+    Gate("embed_quantize", embedQuantize, embedQuantizeSql),
+    Gate("embed_project", embedProject, embedProjectSql),
+    Gate("embed_semdedup", embedSemDedup, embedSemDedupSql),
+    Gate("embed_hier_assign", embedHierAssign, embedHierAssignSql),
+    Gate("embed_hier_recall", embedHierRecall, embedHierRecallSql),
+    Gate("embed_exemplars", embedExemplars, embedExemplarsSql),
+    Gate("doc_dedup_delta", dedupDelta, dedupDeltaSql),
+    Gate("doc_dedup_delta_near", dedupDeltaNear, dedupDeltaNearSql))
 }

@@ -1761,85 +1761,44 @@ object TpcDs extends QueryPack {
        |ORDER BY partkey""".stripMargin
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ds_resale_chain" -> dsResaleChain,
-    "ds_or_exists" -> dsOrExists,
-    "ds_frequent_best" -> dsFrequentBest,
-    "ds_band_distincts" -> dsBandDistincts,
-    "ds_two_ended_rank" -> dsTwoEndedRank,
-    "ds_demand_cov" -> dsDemandCov,
-    "ds_except_customers" -> dsExceptCustomers,
-    "ds_monthly_pivot" -> dsMonthlyPivot,
-    "ds_return_rate_rank" -> dsReturnRateRank,
-    "ds_growth_compare" -> dsGrowthCompare,
-    "ds_deviation_window" -> dsDeviationWindow,
-    "ds_returns_net" -> dsReturnsNet,
-    "ds_margin_rollup_rank" -> dsMarginRollupRank,
-    "ds_cross_channel_tolerance" -> dsCrossChannelTolerance,
-    "ds_timeband_counts" -> dsTimebandCounts,
-    "ds_sequential_purchase" -> dsSequentialPurchase,
-    "ds_union_weekday" -> dsUnionWeekday,
-    "ds_exists_chain" -> dsExistsChain,
-    "ds_market_share_window" -> dsMarketShareWindow,
-    "ds_all_channel_customers" -> dsAllChannelCustomers,
-    "ds_regression" -> dsRegression,
-    "ds_basket_pairs" -> dsBasketPairs,
-    "ds_moving_avg" -> dsMovingAvg,
-    "ds_rollup_ranking" -> dsRollupRanking,
-    "ds_cumulative_compare" -> dsCumulativeCompare,
-    "ds_sales_ranking" -> dsSalesRanking,
-    "ds_yoy_growth" -> dsYoyGrowth,
-    "ds_week_matrix" -> dsWeekMatrix,
-    "ds_multi_band" -> dsMultiBand,
-    "ds_cohort_retention" -> dsCohortRetention,
-    "ds_channel_report" -> dsChannelReport,
-    "ds_repeat_customers" -> dsRepeatCustomers,
-    "ds_no_returns" -> dsNoReturns,
-    "ds_returns_above_avg" -> dsReturnsAboveAvg,
-    "ds_channel_coverage" -> dsChannelCoverage,
-    "ds_in_all_channels" -> dsInAllChannels,
-    "ds_having_threshold" -> dsHavingThreshold,
-    "ds_multi_fact_rollup" -> dsMultiFactRollup,
-    "ds_excess_discount" -> dsExcessDiscount)
-
-  override def oracle: Map[String, String] = Map(
-    "ds_resale_chain" -> dsResaleChainSql,
-    "ds_frequent_best" -> dsFrequentBestSql,
-    "ds_band_distincts" -> dsBandDistinctsSql,
-    "ds_two_ended_rank" -> dsTwoEndedRankSql,
-    "ds_demand_cov" -> dsDemandCovSql,
-    "ds_except_customers" -> dsExceptCustomersSql,
-    "ds_monthly_pivot" -> dsMonthlyPivotSql,
-    "ds_return_rate_rank" -> dsReturnRateRankSql,
-    "ds_growth_compare" -> dsGrowthCompareSql,
-    "ds_deviation_window" -> dsDeviationWindowSql,
-    "ds_returns_net" -> dsReturnsNetSql,
-    "ds_margin_rollup_rank" -> dsMarginRollupRankSql,
-    "ds_cross_channel_tolerance" -> dsCrossChannelToleranceSql,
-    "ds_timeband_counts" -> dsTimebandCountsSql,
-    "ds_sequential_purchase" -> dsSequentialPurchaseSql,
-    "ds_union_weekday" -> dsUnionWeekdaySql,
-    "ds_exists_chain" -> dsExistsChainSql,
-    "ds_market_share_window" -> dsMarketShareWindowSql,
-    "ds_all_channel_customers" -> dsAllChannelCustomersSql,
-    "ds_regression" -> dsRegressionSql,
-    "ds_basket_pairs" -> dsBasketPairsSql,
-    "ds_moving_avg" -> dsMovingAvgSql,
-    "ds_rollup_ranking" -> dsRollupRankingSql,
-    "ds_cumulative_compare" -> dsCumulativeCompareSql,
-    "ds_sales_ranking" -> dsSalesRankingSql,
-    "ds_yoy_growth" -> dsYoyGrowthSql,
-    "ds_week_matrix" -> dsWeekMatrixSql,
-    "ds_multi_band" -> dsMultiBandSql,
-    "ds_cohort_retention" -> dsCohortRetentionSql,
-    "ds_channel_report" -> dsChannelReportSql,
-    "ds_repeat_customers" -> dsRepeatCustomersSql,
-    "ds_no_returns" -> dsNoReturnsSql,
-    "ds_returns_above_avg" -> dsReturnsAboveAvgSql,
-    "ds_channel_coverage" -> dsChannelCoverageSql,
-    "ds_in_all_channels" -> dsInAllChannelsSql,
-    "ds_having_threshold" -> dsHavingThresholdSql,
-    "ds_multi_fact_rollup" -> dsMultiFactRollupSql,
-    "ds_excess_discount" -> dsExcessDiscountSql,
-    "ds_or_exists" -> dsOrExistsSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("ds_resale_chain", dsResaleChain, dsResaleChainSql),
+    Gate("ds_or_exists", dsOrExists, dsOrExistsSql),
+    Gate("ds_frequent_best", dsFrequentBest, dsFrequentBestSql),
+    Gate("ds_band_distincts", dsBandDistincts, dsBandDistinctsSql),
+    Gate("ds_two_ended_rank", dsTwoEndedRank, dsTwoEndedRankSql),
+    Gate("ds_demand_cov", dsDemandCov, dsDemandCovSql),
+    Gate("ds_except_customers", dsExceptCustomers, dsExceptCustomersSql),
+    Gate("ds_monthly_pivot", dsMonthlyPivot, dsMonthlyPivotSql),
+    Gate("ds_return_rate_rank", dsReturnRateRank, dsReturnRateRankSql),
+    Gate("ds_growth_compare", dsGrowthCompare, dsGrowthCompareSql),
+    Gate("ds_deviation_window", dsDeviationWindow, dsDeviationWindowSql),
+    Gate("ds_returns_net", dsReturnsNet, dsReturnsNetSql),
+    Gate("ds_margin_rollup_rank", dsMarginRollupRank, dsMarginRollupRankSql),
+    Gate("ds_cross_channel_tolerance", dsCrossChannelTolerance, dsCrossChannelToleranceSql),
+    Gate("ds_timeband_counts", dsTimebandCounts, dsTimebandCountsSql),
+    Gate("ds_sequential_purchase", dsSequentialPurchase, dsSequentialPurchaseSql),
+    Gate("ds_union_weekday", dsUnionWeekday, dsUnionWeekdaySql),
+    Gate("ds_exists_chain", dsExistsChain, dsExistsChainSql),
+    Gate("ds_market_share_window", dsMarketShareWindow, dsMarketShareWindowSql),
+    Gate("ds_all_channel_customers", dsAllChannelCustomers, dsAllChannelCustomersSql),
+    Gate("ds_regression", dsRegression, dsRegressionSql),
+    Gate("ds_basket_pairs", dsBasketPairs, dsBasketPairsSql),
+    Gate("ds_moving_avg", dsMovingAvg, dsMovingAvgSql),
+    Gate("ds_rollup_ranking", dsRollupRanking, dsRollupRankingSql),
+    Gate("ds_cumulative_compare", dsCumulativeCompare, dsCumulativeCompareSql),
+    Gate("ds_sales_ranking", dsSalesRanking, dsSalesRankingSql),
+    Gate("ds_yoy_growth", dsYoyGrowth, dsYoyGrowthSql),
+    Gate("ds_week_matrix", dsWeekMatrix, dsWeekMatrixSql),
+    Gate("ds_multi_band", dsMultiBand, dsMultiBandSql),
+    Gate("ds_cohort_retention", dsCohortRetention, dsCohortRetentionSql),
+    Gate("ds_channel_report", dsChannelReport, dsChannelReportSql),
+    Gate("ds_repeat_customers", dsRepeatCustomers, dsRepeatCustomersSql),
+    Gate("ds_no_returns", dsNoReturns, dsNoReturnsSql),
+    Gate("ds_returns_above_avg", dsReturnsAboveAvg, dsReturnsAboveAvgSql),
+    Gate("ds_channel_coverage", dsChannelCoverage, dsChannelCoverageSql),
+    Gate("ds_in_all_channels", dsInAllChannels, dsInAllChannelsSql),
+    Gate("ds_having_threshold", dsHavingThreshold, dsHavingThresholdSql),
+    Gate("ds_multi_fact_rollup", dsMultiFactRollup, dsMultiFactRollupSql),
+    Gate("ds_excess_discount", dsExcessDiscount, dsExcessDiscountSql))
 }

@@ -398,35 +398,19 @@ object Tpch extends QueryPack {
        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
        |GROUP BY c_nationkey % 10 ORDER BY cntrycode""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q9_product_profit" -> q9,
-    "q13_customer_distribution" -> q13,
-    "q17_small_qty_revenue" -> q17,
-    "q22_global_sales_opportunity" -> q22,
-    "q4_order_priority" -> q4,
-    "q12_shipping_priority_class" -> q12,
-    "q14_promo_revenue" -> q14,
-    "q18_large_orders" -> q18,
-    "q19_disjunctive_filter" -> q19,
-    "q1_pricing_summary" -> q1,
-    "q3_shipping_priority" -> q3,
-    "q5_local_supplier_volume" -> q5,
-    "q6_revenue_change" -> q6,
-    "q10_returned_items" -> q10)
-
-  override def oracle: Map[String, String] = Map(
-    "q9_product_profit" -> q9Sql,
-    "q13_customer_distribution" -> q13Sql,
-    "q17_small_qty_revenue" -> q17Sql,
-    "q22_global_sales_opportunity" -> q22Sql,
-    "q4_order_priority" -> q4Sql,
-    "q12_shipping_priority_class" -> q12Sql,
-    "q14_promo_revenue" -> q14Sql,
-    "q18_large_orders" -> q18Sql,
-    "q19_disjunctive_filter" -> q19Sql,
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier_volume" -> q5Sql,
-    "q6_revenue_change" -> q6Sql,
-    "q10_returned_items" -> q10Sql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("q9_product_profit", q9, q9Sql),
+    Gate("q13_customer_distribution", q13, q13Sql),
+    Gate("q17_small_qty_revenue", q17, q17Sql),
+    Gate("q22_global_sales_opportunity", q22, q22Sql),
+    Gate("q4_order_priority", q4, q4Sql),
+    Gate("q12_shipping_priority_class", q12, q12Sql),
+    Gate("q14_promo_revenue", q14, q14Sql),
+    Gate("q18_large_orders", q18, q18Sql),
+    Gate("q19_disjunctive_filter", q19, q19Sql),
+    Gate("q1_pricing_summary", q1, q1Sql),
+    Gate("q3_shipping_priority", q3, q3Sql),
+    Gate("q5_local_supplier_volume", q5, q5Sql),
+    Gate("q6_revenue_change", q6, q6Sql),
+    Gate("q10_returned_items", q10, q10Sql))
 }

@@ -202,17 +202,10 @@ object Tpch2 extends QueryPack {
       |                    AND date_diff('day', o3.o_orderdate, l3.l_shipdate) > 60)
       |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q7_volume_shipping" -> q7,
-    "q8_market_share" -> q8,
-    "q15_top_supplier" -> q15,
-    "q16_parts_supplier" -> q16,
-    "q21_suppliers_waiting" -> q21)
-
-  override def oracle: Map[String, String] = Map(
-    "q7_volume_shipping" -> q7Sql,
-    "q8_market_share" -> q8Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q16_parts_supplier" -> q16Sql,
-    "q21_suppliers_waiting" -> q21Sql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("q7_volume_shipping", q7, q7Sql),
+    Gate("q8_market_share", q8, q8Sql),
+    Gate("q15_top_supplier", q15, q15Sql),
+    Gate("q16_parts_supplier", q16, q16Sql),
+    Gate("q21_suppliers_waiting", q21, q21Sql))
 }

@@ -184,13 +184,8 @@ object Tpch3 extends QueryPack {
        |  WHERE ps_availqty > 0.5 * qty_1997)
        |ORDER BY s_name, s_suppkey""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q2_min_cost_supplier" -> q2,
-    "q11_important_stock" -> q11,
-    "q20_potential_promotion" -> q20)
-
-  override def oracle: Map[String, String] = Map(
-    "q2_min_cost_supplier" -> q2Sql,
-    "q11_important_stock" -> q11Sql,
-    "q20_potential_promotion" -> q20Sql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("q2_min_cost_supplier", q2, q2Sql),
+    Gate("q11_important_stock", q11, q11Sql),
+    Gate("q20_potential_promotion", q20, q20Sql))
 }

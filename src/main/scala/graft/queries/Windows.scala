@@ -567,41 +567,22 @@ object Windows extends QueryPack {
       |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
       |ORDER BY user_id, event_id""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_facade_scans" -> winFacadeScans,
-    "win_cumprod" -> winCumprod,
-    "win_count_distinct" -> winCountDistinct,
-    "win_nth_value" -> winNth,
-    "win_topk" -> winTopK,
-    "win_rank_family" -> winRankFamily,
-    "win_rank_methods" -> winRankMethods,
-    "win_lead_lag" -> winLeadLag,
-    "win_running" -> winRunning,
-    "win_range_frame" -> winRangeFrame,
-    "win_range_open" -> winRangeOpen,
-    "win_time_range" -> winTimeRange,
-    "win_ffill" -> winFfill,
-    "win_interpolate" -> winInterpolate,
-    "win_rolling_std" -> winRollingStd,
-    "win_rolling_slope" -> winRollingSlope,
-    "win_scan_minmax" -> winScanMinMax)
-
-  override def oracle: Map[String, String] = Map(
-    "win_facade_scans" -> winFacadeScansSql,
-    "win_cumprod" -> winCumprodSql,
-    "win_count_distinct" -> winCountDistinctSql,
-    "win_nth_value" -> winNthSql,
-    "win_topk" -> winTopKSql,
-    "win_rank_family" -> winRankFamilySql,
-    "win_rank_methods" -> winRankMethodsSql,
-    "win_lead_lag" -> winLeadLagSql,
-    "win_running" -> winRunningSql,
-    "win_range_frame" -> winRangeFrameSql,
-    "win_range_open" -> winRangeOpenSql,
-    "win_time_range" -> winTimeRangeSql,
-    "win_ffill" -> winFfillSql,
-    "win_interpolate" -> winInterpolateSql,
-    "win_rolling_std" -> winRollingStdSql,
-    "win_rolling_slope" -> winRollingSlopeSql,
-    "win_scan_minmax" -> winScanMinMaxSql)
+  override def gates: Seq[Gate] = Seq(
+    Gate("win_facade_scans", winFacadeScans, winFacadeScansSql),
+    Gate("win_cumprod", winCumprod, winCumprodSql),
+    Gate("win_count_distinct", winCountDistinct, winCountDistinctSql),
+    Gate("win_nth_value", winNth, winNthSql),
+    Gate("win_topk", winTopK, winTopKSql),
+    Gate("win_rank_family", winRankFamily, winRankFamilySql),
+    Gate("win_rank_methods", winRankMethods, winRankMethodsSql),
+    Gate("win_lead_lag", winLeadLag, winLeadLagSql),
+    Gate("win_running", winRunning, winRunningSql),
+    Gate("win_range_frame", winRangeFrame, winRangeFrameSql),
+    Gate("win_range_open", winRangeOpen, winRangeOpenSql),
+    Gate("win_time_range", winTimeRange, winTimeRangeSql),
+    Gate("win_ffill", winFfill, winFfillSql),
+    Gate("win_interpolate", winInterpolate, winInterpolateSql),
+    Gate("win_rolling_std", winRollingStd, winRollingStdSql),
+    Gate("win_rolling_slope", winRollingSlope, winRollingSlopeSql),
+    Gate("win_scan_minmax", winScanMinMax, winScanMinMaxSql))
 }

@@ -172,22 +172,29 @@ object Replay {
     * parquet table equals the no-restart run's, which is what the gate
     * row compares against the batch oracle. Append-mode pipelines only
     * (the parquet sink's commit log is the exactly-once half of the
-    * proof). */
+    * proof). The table is returned collected, like [[run]]'s, and the
+    * scratch directory holding sink and checkpoint is deleted. */
   def runWithRestart[In: Encoder](spark: SparkSession,
       firstBatches: Seq[Seq[In]], secondBatches: Seq[Seq[In]])(
       build: Dataset[In] => DataFrame): DataFrame =
     withRigConf(spark) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_replay_rs")
-      .toString
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val input = MemoryStream[In]
-    def start() = build(input.toDS()).writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").format("parquet").option("path", out).start()
-    feed(input, firstBatches)(start())
-    feed(input, secondBatches)(start())
-    spark.read.parquet(out)
+      .toFile
+    try {
+      val (out, ckpt) = (s"$base/out", s"$base/ckpt")
+      val input = MemoryStream[In]
+      def start() = build(input.toDS()).writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").format("parquet").option("path", out).start()
+      feed(input, firstBatches)(start())
+      feed(input, secondBatches)(start())
+      // read through the sink's _spark_metadata log, which decides which
+      // files count, then collect so the directory can go
+      val table = spark.read.parquet(out)
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(table.collect().toSeq.asJava, table.schema)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
   }
 
   /** Start `query`, feed it `batches` one processAllAvailable at a time

@@ -528,16 +528,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("queries and oracleSql keys line up") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    val (noQuery, noOracle) = (o.diff(q), q.diff(o))
-    assert(noQuery.isEmpty && noOracle.isEmpty,
-      s"oracle keys without queries: $noQuery; queries without oracle: $noOracle")
-  }
-
   test("query names are unique across packs (toMap would silently drop dups)") {
-    val all = SparkEntry.packs.flatMap(_.queries.keys)
+    val all = SparkEntry.packs.flatMap(_.gates).map(_.name)
     val dups = all.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: ${dups.mkString(",")}")
     assert(all.size == SparkEntry.queries.size)

@@ -49,6 +49,18 @@ class ReplaySpec extends AnyFunSuite {
     assert(finalState(1) == finalState(3))
   }
 
+  test("runWithRestart returns every row once and leaves no scratch directory") {
+    import spark.implicits._
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch(): Set[String] =
+      tmp.list().filter(_.startsWith("graft_replay_rs")).toSet
+    val before = scratch()
+    val out = graft.streaming.Replay.runWithRestart(spark,
+      Seq(Seq(1L, 2L), Seq(3L)), Seq(Seq(4L), Seq(5L)))(_.toDF("v"))
+    assert(scratch().diff(before).isEmpty, "scratch directory left behind")
+    assert(out.as[Long].collect().sorted.toSeq == (1L to 5L))
+  }
+
   test("rig checkpoint I/O spawns no process") {
     // /proc/stat's `processes` counts every task created since boot,
     // machine-wide, threads included: take this JVM's own thread starts

@@ -148,6 +148,21 @@ class TextFunctionsSpec extends AnyFunSuite {
       (4L, "-1", 1, 1), (5L, "0 4 1 -1", 1, 4)))
   }
 
+  test("buildVocabulary numbers tokens in UTF-8 byte order") {
+    // U+FF41 is EF BD A1 in UTF-8 and U+1F600 is F0 9F 98 80, so Spark's
+    // and DuckDB's order puts the fullwidth token first; UTF-16 order
+    // (the surrogate D83D sorts below FF41) would swap them
+    import graft.operators.VocabTokenize
+    val docs = Seq("\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00 abc",
+      "\uFF41\uFF41\uFF41 ab abc").toDF("text")
+    val vocab = VocabTokenize.buildVocabulary(docs, "text", minTokenLength = 3)
+    assert(vocab == Seq("abc", "\uFF41\uFF41\uFF41",
+      "\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00"))
+    val ids = docs.select(VocabTokenize.tokenizeWithVocabulary($"text", vocab))
+      .as[Seq[Int]].collect().toSeq
+    assert(ids == Seq(Seq(2, 0), Seq(1, -1, 0)))
+  }
+
   test("detokenize reproduces the reference's tokenize.hpp examples") {
     import graft.operators.VocabTokenize
     // nvtext/tokenize.hpp:190-199: s=[hello,world,one,two,three]
