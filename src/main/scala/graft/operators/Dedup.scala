@@ -113,7 +113,7 @@ object Dedup {
     * pair's sorted sets, exact Jaccard, threshold filter. */
   private def verifyJaccard(cand: DataFrame, arrays: DataFrame,
       arrCol: String, threshold: Double): DataFrame =
-    cand
+    cand.hint("merge") // pairs enter a join: PostingLists' join guard
       .join(arrays.select(col("id").as("id_a"), col(arrCol).as("arr_a")), "id_a")
       .join(arrays.select(col("id").as("id_b"), col(arrCol).as("arr_b")), "id_b")
       .withColumn("jac", sortedJaccard(col("arr_a"), col("arr_b")))

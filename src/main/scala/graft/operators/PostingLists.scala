@@ -28,6 +28,19 @@ import org.apache.spark.sql.functions._
   * output pairs — same as the join — so banding parameters must keep
   * buckets small; the explode streams them rather than materializing
   * n² in memory.
+  *
+  * Join guard: a caller that JOINS the pairs (a payload/verify join)
+  * puts `hint("merge")` on the pair frame it joins. The pair frame's
+  * static size estimate is the pre-explode row count, so without the
+  * hint the planner statically broadcasts what is actually the
+  * QUADRATIC side of the join (measured: a 9.8 GiB attempted broadcast
+  * of semdedup pairs at a 25x corpus — hard failure at
+  * spark.sql.maxBroadcastTableBytes). The hint forces sort-merge from
+  * static planning; AQE may still downgrade to broadcast, but only from
+  * ACTUAL runtime stage sizes — the only safe basis at 100 TB, where
+  * neither pairs nor payloads fit one executor. Callers that only
+  * aggregate or filter the pairs add no hint: with no join to attach
+  * to, Spark drops it with a `HintErrorLogger` warning.
   */
 private[graft] object PostingLists {
 
@@ -69,15 +82,5 @@ private[graft] object PostingLists {
         explode(slice(col("__ids"), col("__i") + lit(2), size(col("__ids"))))
           .as("b"))
       .filter(col("a") =!= col("b"))
-      // hint("merge") on the PAIR frame: its static size estimate is the
-      // pre-explode row count, so without it the planner statically
-      // broadcasts what is actually the QUADRATIC side of every
-      // downstream verify join (measured: a 9.8 GiB attempted broadcast
-      // of semdedup pairs at a 25x corpus — hard failure at
-      // spark.sql.maxBroadcastTableBytes). The hint forces sort-merge
-      // from static planning; AQE may still downgrade to broadcast, but
-      // only from ACTUAL runtime stage sizes — the only safe basis at
-      // 100 TB, where neither pairs nor payloads fit one executor.
-      .hint("merge")
   }
 }

@@ -732,12 +732,13 @@ object Similarity {
       .select(col("id"), col("cell_id"))
     val vecs = dfS.select(col(idCol).as("id"), col(vecCol).as("vec"),
       l2norm(col(vecCol)).as("norm"))
-    // the pair frame carries candidatePairs' merge hint (see
-    // PostingLists: its static size estimate is pre-explode, which
-    // would otherwise statically broadcast the quadratic side —
-    // measured as a 9.8 GiB attempted broadcast at a 25x corpus)
+    // both joins take PostingLists' merge-hint join guard: the pair
+    // frame's static size estimate is pre-explode, which would otherwise
+    // statically broadcast the quadratic side — measured as a 9.8 GiB
+    // attempted broadcast at a 25x corpus
     PostingLists.candidatePairs(assigned, "id", "cell_id")
       .select(col("a").as("id_a"), col("b").as("id_b"))
+      .hint("merge")
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a"),
         col("norm").as("norm_a")), "id_a")
       .hint("merge")
@@ -871,7 +872,7 @@ object Similarity {
     val cand = PostingLists.candidatePairs(banded, "id", "tb")
       .select(col("a").as("id_a"), col("b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    cand
+    cand.hint("merge") // pairs enter a join: PostingLists' join guard
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a"),
         col("norm").as("norm_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b"),

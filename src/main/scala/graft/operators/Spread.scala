@@ -22,6 +22,14 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LeafNode, 
   * exchanges below): partition-count inspection builds the physical
   * plan, and under AQE a plan WITH shuffle stages would execute them —
   * frames of any other shape are returned untouched.
+  *
+  * An input whose optimized size is below `spark.sql.files.openCostInBytes`
+  * (4 MB by default) is also returned untouched, checked before the
+  * split count so it is not even physically planned while the query is
+  * built. That setting is Spark's byte-equivalent of one task's fixed
+  * cost: the file-split planner charges it per file when packing splits.
+  * An input smaller than that costs less to process in one task than a
+  * round-robin shuffle stage costs to run, so spreading it cannot win.
   */
 object Spread {
   private def scanStage(p: LogicalPlan): Boolean = p match {
@@ -36,6 +44,8 @@ object Spread {
 
   def spread(df: DataFrame): DataFrame = {
     if (!scanStage(df.queryExecution.analyzed)) return df
+    val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < openCost) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * or via config `spark.sql.extensions=graft.plans.GraftExtensions` —
   * the standard plug-in mechanism, so a cluster operator can install the
-  * library without code changes.
+  * library without code changes. It also installs the range-join planner
+  * strategy and the [[SmallSort]] adaptive stage-prep rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String): ExpressionInfo =
@@ -30,5 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("dot_product", "dot_product(arr_a, arr_b)"),
       (es: Seq[Expression]) => DotProduct(es.head, es(1))))
     e.injectPlannerStrategy(_ => RangeJoinStrategy)
+    e.injectQueryStagePrepRule(SmallSort)
   }
 }

@@ -7,6 +7,7 @@ import graft.streaming.{Replay, StatefulOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Oracle-gated STREAMING queries (SURVEY.md §2.10): each entry replays
   * a fixed micro-batch schedule of the events table through a
@@ -36,6 +37,17 @@ object StreamPack extends QueryPack {
 
   private val Batches = 4
 
+  // Feeds are collected unsorted and sorted here on the driver, where
+  // their rows go anyway: an `orderBy` before `collect` costs a sampling
+  // job and a range shuffle. Both orders are Spark's for the feeds'
+  // non-null keys; strings compare by their UTF-8 bytes. Rows with
+  // equal keys may come out in another order, which time-ordered slices
+  // make harmless.
+  private implicit val utf8Order: Ordering[String] =
+    Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0).on(UTF8String.fromString)
+  private implicit val tsOrder: Ordering[Timestamp] =
+    Ordering.fromLessThan[Timestamp](_.before(_))
+
   /** Driver-side half-AWAY-FROM-ZERO ×100 rounding — matches DuckDB's
     * round(value * 100) exactly. java's math.round is half-UP (toward
     * +∞), which diverges on negative exact .5 halves; current event
@@ -55,8 +67,7 @@ object StreamPack extends QueryPack {
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("ts"), col("event_type"), col("value"))
-      .orderBy("ts", "event_type")
-      .as[(Timestamp, String, Double)].collect().toSeq
+      .as[(Timestamp, String, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
       .map { case (_, et, v) => (et, r100(v)) }
     val out = Replay.run(s, Replay.timeSlices(rows, Batches), "update") { ds =>
       StatefulOps.runningAgg(ds.groupByKey(_._1)).toDF()
@@ -83,8 +94,7 @@ object StreamPack extends QueryPack {
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("event_type"))
-      .orderBy("ts", "user_id")
-      .as[(Timestamp, Long, String)].collect().toSeq
+      .as[(Timestamp, Long, String)].collect().toSeq.sortBy(r => (r._1, r._2))
     val out = Replay.run(s, Replay.timeSlices(rows, Batches), "append") { ds =>
       StatefulOps.streamingDedup(ds.toDF("ts", "user_id", "event_type"),
         "ts", "40 days", Seq("user_id", "event_type"))
@@ -111,8 +121,7 @@ object StreamPack extends QueryPack {
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("value"))
-      .orderBy("ts", "user_id")
-      .as[(Timestamp, Long, Double)].collect().toSeq
+      .as[(Timestamp, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
       .map { case (t, u, v) => (u, t, r100(v)) }
     val maxMs = rows.map(_._2.getTime).max
     val day = 86400000L
@@ -163,8 +172,7 @@ object StreamPack extends QueryPack {
     try {
       val rows = Tables.events(s, dir)
         .select(col("ts"), col("user_id"), col("value"))
-        .orderBy("ts", "user_id")
-        .as[(Timestamp, Long, Double)].collect().toSeq
+        .as[(Timestamp, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
         .map { case (t, u, v) => (u, t, r100(v)) }
       val maxMs = rows.map(_._2.getTime).max
       val day = 86400000L
@@ -200,8 +208,7 @@ object StreamPack extends QueryPack {
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("value"))
-      .orderBy("ts", "user_id")
-      .as[(Timestamp, Long, Double)].collect().toSeq
+      .as[(Timestamp, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
       .map { case (t, u, v) => (u, t, r100(v)) }
     val maxMs = rows.map(_._2.getTime).max
     val day = 86400000L
@@ -240,8 +247,7 @@ object StreamPack extends QueryPack {
     val ref = ev.filter(col("event_type") === "view")
       .groupBy("v").count()
       .as[(Long, Long)].collect().toMap
-    val rows = ev.orderBy("ts", "v").select("ts", "v")
-      .as[(Timestamp, Long)].collect().toSeq
+    val rows = ev.select("ts", "v").as[(Timestamp, Long)].collect().toSeq.sorted
     val maxMs = rows.map(_._1.getTime).max
     // Sentinels aligned to the START of a WinMs window 10 windows past
     // the corpus (both inside the SAME window, 1h apart): the final
@@ -306,8 +312,7 @@ object StreamPack extends QueryPack {
     import s.implicits._
     val rows = Tables.events(s, dir)
       .select(col("ts"), col("event_type"), col("event_id"), col("value"))
-      .orderBy("ts", "event_id")
-      .as[(Timestamp, String, Long, Double)].collect().toSeq
+      .as[(Timestamp, String, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._3))
       .map { case (_, et, id, v) => StatefulOps.WRIn(et, id, v) }
     val out = Replay.run(s, Replay.timeSlices(rows, Batches), "update") { ds =>
       StatefulOps.weightedReservoirStream(
@@ -343,8 +348,7 @@ object StreamPack extends QueryPack {
       .select(col("ts"), col("user_id"),
         when(col("event_type") === "view", "L").otherwise("R").as("side"),
         col("value"))
-      .orderBy("ts", "user_id")
-      .as[(Timestamp, Long, String, Double)].collect().toSeq
+      .as[(Timestamp, Long, String, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
       .map { case (t, u, sd, v) => StatefulOps.AsOfIn(u, t, sd, v) }
     val out = Replay.run(s, Replay.timeSlices(rows, Batches), "append") { ds =>
       StatefulOps.asofJoinStream(ds.groupByKey(_.key)).toDF()
@@ -406,8 +410,7 @@ object StreamPack extends QueryPack {
       .filter(col("user_id") % 5 === 4)
       .select(col("ts"), col("user_id"),
         when(col("event_type") === "view", "V").otherwise("C").as("side"))
-      .orderBy("ts", "user_id", "side")
-      .as[(Timestamp, Long, String)].collect().toSeq
+      .as[(Timestamp, Long, String)].collect().toSeq.sorted
       // ms-truncate HERE: unlike the StatefulOps twins (which read
       // .getTime themselves) the raw ts column flows into Spark SQL,
       // which would otherwise keep parquet's microseconds
@@ -524,8 +527,7 @@ object StreamPack extends QueryPack {
     val rows = Tables.events(s, dir)
       .filter(col("user_id") % 5 === 4)
       .select(col("ts"), col("user_id"))
-      .orderBy("ts", "user_id")
-      .as[(Timestamp, Long)].collect().toSeq
+      .as[(Timestamp, Long)].collect().toSeq.sorted
       .map { case (t, u) => (new Timestamp(t.getTime), u) }
     val maxMs = rows.map(_._1.getTime).max
     val day = 86400000L
@@ -596,8 +598,7 @@ object StreamPack extends QueryPack {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         TextOps.saltedText(col("text"), col("doc_id")).as("text2"))
-      .orderBy("doc_id")
-      .as[(Long, String)].collect().toSeq
+      .as[(Long, String)].collect().toSeq.sortBy(_._1)
     val base = 1704067200000L // 2024-01-01T00:00:00Z
     // RANK-based synthetic timestamps (1 s apart), not id-based: ids at
     // a stress copy reach c*10M, and id-seconds would stretch the feed
@@ -665,7 +666,7 @@ object StreamPack extends QueryPack {
           when(col("c_custkey") % 20 === 0,
             concat(lit("q"), expr("substring(c_name, 2, 1000000)")))
             .otherwise(concat(col("c_name"), lit(" zqxj"))).as("probe"))
-        .orderBy("c_custkey").as[(Long, String)].collect().toSeq
+        .as[(Long, String)].collect().toSeq.sortBy(_._1)
       val out = Replay.runForeachBatch(s,
         Replay.timeSlices(probes, Batches)) { df =>
         screen(df.toDF("probe_key", "c_name"))
@@ -702,7 +703,7 @@ object StreamPack extends QueryPack {
     try {
       val feed = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), trim(col("text")).as("text"))
-        .orderBy("doc_id").as[(Long, String)].collect().toSeq
+        .as[(Long, String)].collect().toSeq.sortBy(_._1)
       val out = Replay.runForeachBatch(s,
         Replay.timeSlices(feed, Batches)) { df =>
         screen(df.toDF("doc_id", "text"))

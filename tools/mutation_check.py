@@ -283,6 +283,22 @@ MUTATIONS = [
      "if (id == null) defaultId else id.intValue()",
      "if (id == null) defaultId else id.intValue() + 1",
      "doc_token_ids"),
+    # SmallSort without its Generate/Expand exclusion: a sort over an
+    # explode of a small aggregate loses its range exchange, although
+    # Spark's size estimate does not bound the explode's output.
+    ("small-sort-ignores-generate",
+     "src/main/scala/graft/plans/SmallSort.scala",
+     "} && !child.exists {\n      case _: GenerateExec | _: ExpandExec => true\n"
+     "      case _ => false\n    } && child",
+     "} && child",
+     "test:graft.SmallInputSpec:explode"),
+    # Spread's size gate inverted: small inputs are spread and large
+    # ones are not.
+    ("spread-size-gate-inverted",
+     "src/main/scala/graft/operators/Spread.scala",
+     "stats.sizeInBytes < openCost) return df",
+     "stats.sizeInBytes >= openCost) return df",
+     "test:graft.SmallInputSpec:Spread"),
 ]
 
 
