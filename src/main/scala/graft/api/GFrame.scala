@@ -213,12 +213,15 @@ final case class GFrame(df: DataFrame) {
     * groupBy, pairs per key = (size choose 2); `distinctIds` dedupes
     * (id, key) rows inside the list instead of a separate shuffle.
     * Output columns match the other pair surfaces, so the result feeds
-    * [[nearDupClusters]] directly. */
+    * [[nearDupClusters]] directly. The result carries `hint("merge")`
+    * (the PostingLists join guard): its size estimate is the pre-explode
+    * row count, so a caller joining it must not get it broadcast. */
   def coOccurrencePairs(idCol: String, keyCol: String,
       distinctIds: Boolean = true): GFrame =
     GFrame(graft.operators.PostingLists.candidatePairs(df, idCol, keyCol,
         distinctIds)
-      .withColumnRenamed("a", "id_a").withColumnRenamed("b", "id_b"))
+      .withColumnRenamed("a", "id_a").withColumnRenamed("b", "id_b")
+      .hint("merge"))
   /** Unicode-normalize a text column in place (NFC → lower → de-accent →
     * ws squeeze) — run before any dedup hash. */
   def normalizeText(textCol: String): GFrame =

@@ -40,7 +40,9 @@ import org.apache.spark.sql.functions._
   * ACTUAL runtime stage sizes — the only safe basis at 100 TB, where
   * neither pairs nor payloads fit one executor. Callers that only
   * aggregate or filter the pairs add no hint: with no join to attach
-  * to, Spark drops it with a `HintErrorLogger` warning.
+  * to, Spark drops it with a `HintErrorLogger` warning. The public
+  * `GFrame.coOccurrencePairs`, whose callers may join its result,
+  * returns the pairs with the hint on.
   */
 private[graft] object PostingLists {
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LeafNode, LogicalPlan, Project, SubqueryAlias, Union}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scan-parallelism guard for CPU-dense kernels (the optimization
   * guide's "one huge unsplittable file" remedy: repartition immediately
@@ -23,13 +24,19 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LeafNode, 
   * plan, and under AQE a plan WITH shuffle stages would execute them —
   * frames of any other shape are returned untouched.
   *
-  * An input whose optimized size is below `spark.sql.files.openCostInBytes`
-  * (4 MB by default) is also returned untouched, checked before the
-  * split count so it is not even physically planned while the query is
-  * built. That setting is Spark's byte-equivalent of one task's fixed
-  * cost: the file-split planner charges it per file when packing splits.
-  * An input smaller than that costs less to process in one task than a
-  * round-robin shuffle stage costs to run, so spreading it cannot win.
+  * An input whose optimized size is below
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` times the
+  * default parallelism (64 KB × 4 = 256 KB in a 4-core session) is also
+  * returned untouched, checked before the split count so it is not even
+  * physically planned while the query is built. Below that size AQE
+  * would not cut a shuffle of the input into one partition per core, so
+  * spreading it only makes tasks smaller than the session's smallest
+  * worthwhile partition. The measured break-even depends on the
+  * kernel's CPU per byte (`OPTIMIZATION_r18.md`, "Spread size sweep":
+  * single-row-group corpora of 12 KB to 7.5 MB estimated input, 4
+  * cores): the hot-clique and winnowing kernels gain from about 200–300
+  * KB on, the substring screen only from about 1 MB, and most kernels
+  * lose at the 40–80 KB of the base corpus.
   */
 object Spread {
   private def scanStage(p: LogicalPlan): Boolean = p match {
@@ -44,9 +51,11 @@ object Spread {
 
   def spread(df: DataFrame): DataFrame = {
     if (!scanStage(df.queryExecution.analyzed)) return df
-    val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < openCost) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
+    val minPartition = df.sparkSession.sessionState.conf
+      .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <
+        BigInt(minPartition) * target) return df
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 }

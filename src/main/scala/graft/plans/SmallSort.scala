@@ -3,10 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ExpandExec, GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.{BaseLimitExec, DeserializeToObjectExec, FilterExec, InputAdapter, MapElementsExec, ProjectExec, SerializeFromObjectExec, SortExec, SparkPlan, UnionExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 
 /** Adaptive query-stage-prep rule: a total sort over a small, already
   * measured input exchanges into ONE partition instead of range
@@ -14,32 +16,31 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * A global `orderBy` plans `ShuffleExchangeExec(RangePartitioning)`,
   * whose shuffle dependency first runs a sampling job over its child to
-  * pick split points, then recomputes the child in the map stage. When
-  * the child is small, AQE's coalescing then folds every range partition
-  * back into one, so the sort runs in one task anyway and the sampling
-  * job (plus the child's second evaluation) bought nothing. The
-  * reference does the same split: it samples split points only in its
-  * multi-partition streaming executor and sorts small inputs in memory.
+  * pick split points, then recomputes the child in the map stage. On a
+  * small child that job and the second evaluation cost more than the
+  * parallel sort they buy. The reference does the same split: it
+  * samples split points only in its multi-partition streaming executor
+  * and sorts small inputs in memory.
   *
-  * The exchange is rewritten to `SinglePartition` only when all three
-  * hold:
+  * The exchange is rewritten to `SinglePartition` only when all of this
+  * holds:
   *  - every leaf under the exchange is a materialized query stage, so
   *    the size is measured shuffle/broadcast output, not a file-size
   *    guess (a sort directly over a scan keeps its range exchange);
-  *  - no `GenerateExec` or `ExpandExec` sits above those stages: Spark's
-  *    size estimate passes a child's size through them unchanged, so it
-  *    does not bound their (multiplied) output;
-  *  - the child's logical size is at most
-  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`: the size AQE
-  *    itself treats as one post-shuffle partition's worth, so the whole
-  *    sort input fits one partition by Spark's own sizing. With
-  *    `coalescePartitions.parallelismFirst` off, that is exactly the
-  *    size below which coalescing folds every range partition into one.
-  *    With it on (Spark's default) AQE would split an input above
-  *    `coalescePartitions.minPartitionSize` over the cores; below the
-  *    advisory size the rule trades that split of an at most
-  *    partition-sized sort for skipping the sampling job and the
-  *    child's second evaluation.
+  *  - every operator between those stages and the exchange is one whose
+  *    size estimate bounds its output: projections, filters, aggregates,
+  *    joins (estimated as the product of their inputs), windows, sorts,
+  *    limits, unions and the one-row-per-row `Dataset.map` operators.
+  *    Anything else keeps the range exchange — `Generate`, `Expand` and
+  *    the operators behind `Dataset.flatMap`/`mapPartitions`/
+  *    `flatMapGroups` can emit several rows per input row while Spark
+  *    passes their child's size through unchanged;
+  *  - the child's logical size is at most `spark.sql.files.openCostInBytes`
+  *    (4 MB by default), Spark's byte price of one task's fixed cost.
+  *    Measured on 4 cores (`OPTIMIZATION_r18.md`, "Sort size sweep"), a
+  *    single-partition sort beats the sampled range sort up to 4 MB in
+  *    every shape tried and loses to it from 8–16 MB on, so the bound
+  *    sits at or below the measured break-even.
   *
   * Only `ENSURE_REQUIREMENTS` exchanges change: `repartitionByRange`
   * keeps its user-requested partitioning, `TakeOrderedAndProject` plans
@@ -56,12 +57,15 @@ case class SmallSort(spark: SparkSession) extends Rule[SparkPlan] {
   }
 
   private def small(child: SparkPlan): Boolean =
-    child.collectLeaves().forall {
-      case s: QueryStageExec => s.isMaterialized
-      case _ => false
-    } && !child.exists {
-      case _: GenerateExec | _: ExpandExec => true
-      case _ => false
+    !child.exists {
+      case s: QueryStageExec => !s.isMaterialized
+      case _: AQEShuffleReadExec | _: WholeStageCodegenExec | _: InputAdapter |
+          _: ProjectExec | _: FilterExec | _: BaseAggregateExec |
+          _: BaseJoinExec | _: WindowExecBase | _: WindowGroupLimitExec |
+          _: SortExec | _: BaseLimitExec | _: UnionExec |
+          _: DeserializeToObjectExec | _: MapElementsExec |
+          _: SerializeFromObjectExec => false
+      case _ => true
     } && child.logicalLink.exists(_.stats.sizeInBytes <=
-      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      spark.sessionState.conf.filesOpenCostInBytes)
 }

@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
 /** Size-aware exchanges on small inputs: the `SmallSort` stage-prep rule
   * (a total sort over a small measured input exchanges into one
   * partition, without the range-sampling job) and `Spread`'s size gate
-  * (an input below `spark.sql.files.openCostInBytes` is not spread). */
+  * (an input below `minPartitionSize` times the default parallelism is
+  * not spread). */
 class SmallInputSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -52,9 +53,16 @@ class SmallInputSpec extends AnyFunSuite {
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
+  /** Runs `body` with `key` set to `value`, then restores the session's
+    * own value (unsetting would fall back to Spark's default, not to the
+    * value `Session.local` configured). */
   private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
     spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   private def smallAgg: DataFrame =
@@ -71,10 +79,10 @@ class SmallInputSpec extends AnyFunSuite {
     assert(!ex.exists(_.isInstanceOf[RangePartitioning]), s"exchanges: $ex")
     assert(ex.contains(SinglePartition), s"exchanges: $ex")
 
-    // an advisory partition size of 1 byte makes every input too large
+    // an open cost of 1 byte makes every input too large
     val ranged = smallAgg
     val (expected, rangedJobs) = withConf(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1") {
+        "spark.sql.files.openCostInBytes", "1") {
       withJobs(ranged.collect().toSeq)
     }
     assert(finalExchanges(ranged).exists(_.isInstanceOf[RangePartitioning]))
@@ -83,8 +91,8 @@ class SmallInputSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)) == (0L until 7L))
   }
 
-  test("a sort over an explode or directly over a file scan keeps its " +
-    "range exchange") {
+  test("a sort over an explode, a flatMap or directly over a file scan " +
+    "keeps its range exchange") {
     val exploded = spark.range(0, 100, 1, 4)
       .groupBy((col("id") % 5).as("k"))
       .agg(collect_list(col("id")).as("ids"))
@@ -93,6 +101,19 @@ class SmallInputSpec extends AnyFunSuite {
     assert(exploded.collect().length == 100)
     assert(finalExchanges(exploded).exists(_.isInstanceOf[RangePartitioning]),
       "Spark's size estimate does not bound an explode's output")
+
+    val session = spark
+    import session.implicits._
+    val flatMapped = spark.range(0, 100, 1, 4)
+      .groupBy((col("id") % 5).as("k"))
+      .agg(count(lit(1)).as("n"))
+      .as[(Long, Long)]
+      .flatMap { case (k, n) => (0L until n).map(i => (k, i)) }
+      .toDF("k", "v")
+      .orderBy(col("k"), col("v"))
+    assert(flatMapped.collect().length == 100)
+    assert(finalExchanges(flatMapped).exists(_.isInstanceOf[RangePartitioning]),
+      "Spark's size estimate does not bound a flatMap's output")
 
     val dir = Files.createTempDirectory("graft_small_sort")
     try {
@@ -105,7 +126,7 @@ class SmallInputSpec extends AnyFunSuite {
   }
 
   test("Spread leaves a small input alone and spreads only an underfilled " +
-    "input at or above the open cost") {
+    "input of at least one minimum partition per core") {
     val target = spark.sparkContext.defaultParallelism
     assert(target >= 2)
     def planned(df: DataFrame): Seq[Partitioning] =
@@ -118,7 +139,7 @@ class SmallInputSpec extends AnyFunSuite {
     assert(planned(small).isEmpty)
     assert(jobs == 0, s"building launched $jobs jobs")
 
-    withConf("spark.sql.files.openCostInBytes", "1") {
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
       assert(planned(Spread.spread(single)) == Seq(RoundRobinPartitioning(target)))
       val many = spark.range(0, 1000, 1, target).toDF()
       assert(planned(Spread.spread(many)).isEmpty,

@@ -283,21 +283,28 @@ MUTATIONS = [
      "if (id == null) defaultId else id.intValue()",
      "if (id == null) defaultId else id.intValue() + 1",
      "doc_token_ids"),
-    # SmallSort without its Generate/Expand exclusion: a sort over an
+    # SmallSort with Generate on its operator allowlist: a sort over an
     # explode of a small aggregate loses its range exchange, although
     # Spark's size estimate does not bound the explode's output.
     ("small-sort-ignores-generate",
      "src/main/scala/graft/plans/SmallSort.scala",
-     "} && !child.exists {\n      case _: GenerateExec | _: ExpandExec => true\n"
-     "      case _ => false\n    } && child",
-     "} && child",
+     "_: ProjectExec | _: FilterExec |",
+     "_: ProjectExec | _: FilterExec |"
+     " _: org.apache.spark.sql.execution.GenerateExec |",
      "test:graft.SmallInputSpec:explode"),
+    # The same for the operator behind Dataset.flatMap.
+    ("small-sort-ignores-flatmap",
+     "src/main/scala/graft/plans/SmallSort.scala",
+     "_: ProjectExec | _: FilterExec |",
+     "_: ProjectExec | _: FilterExec |"
+     " _: org.apache.spark.sql.execution.MapPartitionsExec |",
+     "test:graft.SmallInputSpec:flatMap"),
     # Spread's size gate inverted: small inputs are spread and large
     # ones are not.
     ("spread-size-gate-inverted",
      "src/main/scala/graft/operators/Spread.scala",
-     "stats.sizeInBytes < openCost) return df",
-     "stats.sizeInBytes >= openCost) return df",
+     "stats.sizeInBytes <\n        BigInt(minPartition) * target) return df",
+     "stats.sizeInBytes >=\n        BigInt(minPartition) * target) return df",
      "test:graft.SmallInputSpec:Spread"),
 ]
 
